@@ -18,25 +18,21 @@ query join — never a re-tokenize of the corpus.
 Contract: document ids are LONGs (the store's typed reads pin it)
 and batches carry NEW documents only (ids disjoint across batches) —
 re-sending a doc in a LATER batch would double-count it, exactly as
-re-inserting a row into any count. Replays of the SAME
-batch are marker-skip no-ops; crash-after-write replays rewrite
-identical partitions (``_batch`` dynamic-partition overwrite +
-committed markers — the uniform family contract). Column names and
-k1/b constants are pinned in store metadata.
+re-inserting a row into any count. Column names and k1/b constants
+are pinned in store metadata.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalBm25"]
 
 
-class IncrementalBm25:
+class IncrementalBm25(BatchStore):
     """Maintains the BM25 index (tf / dl / df / stats) for a growing
     document stream; ranked lexical top-k on demand."""
 
@@ -64,45 +60,24 @@ class IncrementalBm25:
         # guarded against drift like the k1/b constants.
         self.max_df_num = max_df_num
         self.max_df_den = max_df_den
-        meta_path = os.path.join(store_path, "bm25_meta.json")
-        meta = {
-            "id_col": id_col,
-            "text_col": text_col,
-            "k1_m": self.k1_m,
-            "b_m": self.b_m,
-            "max_df_num": max_df_num,
-            "max_df_den": max_df_den,
-        }
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — indexes of different columns or BM25 "
-                    "constants must never merge (rebuild a fresh store)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._pin(
+            "bm25_meta.json",
+            {
+                "id_col": id_col,
+                "text_col": text_col,
+                "k1_m": self.k1_m,
+                "b_m": self.b_m,
+                "max_df_num": max_df_num,
+                "max_df_den": max_df_den,
+            },
+            "indexes of different columns or BM25 constants must never "
+            "merge (rebuild a fresh store)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    def _part(self, name: str) -> str:
-        return os.path.join(self.store_path, name)
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Reduce the batch's documents to their index deltas (tf rows,
-        dl rows, per-token df counts, one stats row) and land each in
-        the batch's own partition. Pure function of the batch —
-        replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+        dl rows, per-token df counts, one stats row). Pure function of
+        the batch — replay-idempotent."""
         from ..operators.text import tokenize
 
         toks = batch.select(
@@ -121,36 +96,12 @@ class IncrementalBm25:
             F.sum("_dl").cast("long").alias("_nt"),
         )
         for name, df in (("tf", tf), ("dl", dl), ("df", dfreq), ("stats", stats)):
-            df.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "_batch"
-            ).parquet(self._part(name))
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3): fires only when
-        # a policy is installed AND due; replays never reach here (the
-        # marker short-circuit above), so policy cannot break replay
-        # idempotence.
+            self._write(df, self._path(name), batch_id)
+
+    def _after_commit(self, spark: SparkSession) -> None:
         from .compaction import maybe_auto_compact
 
-        maybe_auto_compact(
-            self.store_path, lambda: self.compact(batch.sparkSession)
-        )
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        maybe_auto_compact(self.store_path, lambda: self.compact(spark))
 
     # -- reads -------------------------------------------------------------
 
@@ -177,20 +128,6 @@ class IncrementalBm25:
             },
         )
 
-    def _read(self, spark: SparkSession, name: str, schema: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        path = self._part(name)
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return spark.createDataFrame([], T._parse_datatype_string(schema))
-        return (
-            spark.read.schema(T._parse_datatype_string(schema + ", _batch int"))
-            .parquet(path)
-            .drop("_batch")
-        )
-
     def topk(self, queries: DataFrame, k: int = 5) -> DataFrame:
         """Ranked lexical top-k of ``queries`` (id_col, text_col rows)
         against every document drained so far, via the SHARED scoring
@@ -199,14 +136,17 @@ class IncrementalBm25:
         from ..operators.text import bm25_rank_from_index, tokenize
 
         spark = queries.sparkSession
-        tf = self._read(spark, "tf", "_d long, _t string, _tf long")
-        dl = self._read(spark, "dl", "_d long, _dl long")
+        def read(name: str, schema: str) -> DataFrame:
+            return self._read_batches(spark, self._path(name), schema)
+
+        tf = read("tf", "_d long, _t string, _tf long")
+        dl = read("dl", "_d long, _dl long")
         dfreq = (
-            self._read(spark, "df", "_t string, _df long")
+            read("df", "_t string, _df long")
             .groupBy("_t")
             .agg(F.sum("_df").cast("long").alias("_df"))
         )
-        stats = self._read(spark, "stats", "_nd long, _nt long").agg(
+        stats = read("stats", "_nd long, _nt long").agg(
             F.sum("_nd").cast("long").alias("_nd"),
             F.sum("_nt").cast("long").alias("_nt"),
         )

@@ -8,19 +8,15 @@ The split that makes tokenizer training incremental: learning merges
 table — thousands of times smaller than the corpus — while building
 that table is the one full-corpus scan. So the corpus streams through
 word counting (map-only pre-tokenize + one map-side-combined partial
-aggregate per micro-batch), per-batch count partitions accumulate
-under the family's exactly-once discipline, and ``learn()`` re-runs
-the deterministic merge loop on the compact maintained vocabulary
-whenever a fresh tokenizer is wanted. A corpus append never re-scans
-the existing mass; only the merge learning (cheap, vocab-sized)
-re-runs — and MUST re-run, because a single count change can reorder
-every argmax after it (merge tables are not incrementally patchable;
-prefix stability holds only for unchanged counts, see the tx20
-property test).
+aggregate per micro-batch), per-batch count partitions accumulate, and
+``learn()`` re-runs the deterministic merge loop on the compact
+maintained vocabulary whenever a fresh tokenizer is wanted. A corpus
+append never re-scans the existing mass; only the merge learning
+(cheap, vocab-sized) re-runs — and MUST re-run, because a single count
+change can reorder every argmax after it (merge tables are not
+incrementally patchable; prefix stability holds only for unchanged
+counts, see the tx20 property test).
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: the family
-contract — per-``_batch`` dynamic-partition overwrite makes replays
-byte-idempotent, and a committed-batch marker makes them cheap no-ops.
 Counts are ADDITIVE across batches, so the maintained table needs no
 read-modify-write: reads aggregate the partitions (at 100 TB the
 periodic compaction of batch partitions is ordinary parquet
@@ -34,12 +30,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kmeans import _has_parquet_files
+from .store import BatchStore
 
 __all__ = ["IncrementalBpeVocab"]
 
 
-class IncrementalBpeVocab:
+class IncrementalBpeVocab(BatchStore):
     """Maintains the lowercase-alpha word-frequency table from a
     stream of (id, text) rows, one micro-batch at a time, and learns
     BPE merges from the maintained vocabulary on demand."""
@@ -47,22 +43,10 @@ class IncrementalBpeVocab:
     def __init__(self, store_path: str, text_col: str = "text") -> None:
         self.store_path = store_path
         self.text_col = text_col
+        self._counts_path = self._path("word_counts")
         os.makedirs(store_path, exist_ok=True)
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _counts_path(self) -> str:
-        return os.path.join(self.store_path, "word_counts")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         counts = (
             batch.select(
                 F.explode(
@@ -76,49 +60,18 @@ class IncrementalBpeVocab:
             .groupBy("word")
             .agg(F.count(F.lit(1)).cast("long").alias("freq"))
         )
-        counts.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._counts_path
-        )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(counts, self._counts_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def word_counts(self, spark: SparkSession) -> DataFrame:
         """(word, freq) over everything drained — per-batch partial
         counts are additive, so the read is one aggregate, no
-        read-modify-write ever happened. FILE-presence gated (family
-        convention): a drained-but-wordless batch leaves a partition
-        directory schema inference cannot read."""
-        from pyspark.sql import types as T
-
-        if _has_parquet_files(self._counts_path):
-            return (
-                spark.read.parquet(self._counts_path)
-                .groupBy("word")
-                .agg(F.sum("freq").alias("freq"))
-            )
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("word", T.StringType()),
-                    T.StructField("freq", T.LongType()),
-                ]
-            ),
+        read-modify-write ever happened."""
+        return (
+            self._read_batches(spark, self._counts_path, "word string, freq bigint")
+            .groupBy("word")
+            .agg(F.sum("freq").alias("freq"))
         )
 
     def vocab(self, spark: SparkSession) -> DataFrame:

@@ -13,11 +13,10 @@ and the sort-merge join over two maintained tables stays shuffle-free
 at ANY drain point (test-pinned by plan inspection). Appends cost one
 batch-sized bucket-clustered write; the corpus is never touched.
 
-Exactly-once: batches write via static ``INSERT OVERWRITE …
-PARTITION (_batch=N)`` — a replay of the same batch REWRITES the same
-partition with identical rows (idempotent even without the marker; the
-marker makes it a no-op). Crash-after-write-before-marker therefore
-re-lands byte-identical data, the uniform family discipline.
+Batches write via static ``INSERT OVERWRITE … PARTITION (_batch=N)``
+— the catalog-table form of the ``_batch`` overwrite — so a replay of
+the same batch REWRITES the same partition with identical rows, even
+without the marker.
 
 Parameter guard: (key, n_buckets, columns) pinned in store metadata —
 two tables joined shuffle-free must share bucket count and key
@@ -39,16 +38,15 @@ this family is that maintenance re-expressed for OSS bucket layout.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalBucketedSilver"]
 
 
-class IncrementalBucketedSilver:
+class IncrementalBucketedSilver(BatchStore):
     """Maintains one hash-bucketed, batch-partitioned silver table;
     shuffle-free joins against any co-bucketed peer on demand."""
 
@@ -67,54 +65,29 @@ class IncrementalBucketedSilver:
         self.table_name = table_name
         self.key_col = key_col
         self.n_buckets = n_buckets
-        self._meta_path = os.path.join(store_path, "bucketed_meta.json")
-        meta = {
-            "table_name": table_name,
-            "key_col": key_col,
-            "n_buckets": n_buckets,
-        }
-        if os.path.exists(self._meta_path):
-            stored = json.load(open(self._meta_path))
-            if {k: stored[k] for k in meta} != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — a bucketed table's key and bucket count are "
-                    "fixed at creation (shuffle-free joins depend on them); "
-                    "rebuild into a fresh store to change the layout"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(self._meta_path, "w") as f:
-                json.dump(meta, f)
+        self._pin(
+            "bucketed_meta.json",
+            {"table_name": table_name, "key_col": key_col, "n_buckets": n_buckets},
+            "a bucketed table's key and bucket count are fixed at creation "
+            "(shuffle-free joins depend on them); rebuild into a fresh "
+            "store to change the layout",
+        )
 
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Land the batch in its own ``_batch`` partition of the
         bucketed table. First batch creates the table (pinning the
         column set in meta); later batches static-partition-overwrite
-        their slot — replay-idempotent with or without the marker."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+        their slot."""
         if self.key_col not in batch.columns:
             raise ValueError(
                 f"batch lacks bucket key {self.key_col!r}: {batch.columns}"
             )
         spark = batch.sparkSession
-        meta = json.load(open(self._meta_path))
+        meta = self._load_json("bucketed_meta.json")
         cols = meta.get("columns")
         if cols is None:
-            meta["columns"] = list(batch.columns)
-            with open(self._meta_path, "w") as f:
-                json.dump(meta, f)
-            cols = meta["columns"]
+            meta["columns"] = cols = list(batch.columns)
+            self._dump_json("bucketed_meta.json", meta)
         elif list(batch.columns) != cols:
             raise ValueError(
                 f"batch columns {batch.columns} != table columns {cols} — "
@@ -144,13 +117,14 @@ class IncrementalBucketedSilver:
                 f"SELECT {col_list} FROM {view}"
             )
             spark.catalog.dropTempView(view)
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3). The silver's
-        # partitions live in the warehouse, not under store_path, so
-        # the due-check is the catalog's own partition listing (a
-        # driver-side metastore op, bounded by partition count) gated
-        # behind the policy-file existence probe; only the
-        # partition-count knob applies to catalog tables.
+
+    def _after_commit(self, spark: SparkSession) -> None:
+        # Auto-compaction policy hook. The silver's partitions live in
+        # the warehouse, not under store_path, so the due-check is the
+        # catalog's own partition listing (a driver-side metastore op,
+        # bounded by partition count) gated behind the policy-file
+        # existence probe; only the partition-count knob applies to
+        # catalog tables.
         from .compaction import get_auto_compact_policy
 
         pol = get_auto_compact_policy(self.store_path)
@@ -167,17 +141,6 @@ class IncrementalBucketedSilver:
 
                 self.compact(spark)
                 _bump_compaction_counter(self.store_path)
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # -- reads -------------------------------------------------------------
 

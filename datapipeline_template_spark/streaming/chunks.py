@@ -11,14 +11,9 @@ a batch): when documents arrive in ascending id order this equals the
 batch operator's global min-(id, chunk_no) rule, which is the
 equivalence contract the tests pin.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery uses the
-same two mechanisms as ``streaming/lsh.py``: per-batch
-``_batch=<id>`` partition overwrites (a replayed batch rewrites the
-identical bytes — idempotence by path) plus a committed-batch marker
-(replays become no-ops; a crash between data write and marker is
-repaired by the replay's overwrite). The registry read excludes the
-current batch id so a crash-after-write replay never sees its own
-half-committed rows as "prior corpus".
+The registry read excludes the current batch id so a
+crash-after-write replay never sees its own half-committed rows as
+"prior corpus".
 
 Scale: the registry probe is an anti join of the batch's chunks
 (small) against the registry on the chunk value — hash-shuffled on
@@ -30,17 +25,17 @@ here it is a parquet directory with the identical layout semantics.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup import chunk_split
+from .store import BatchStore
 
 __all__ = ["IncrementalChunkDedup"]
 
 
-class IncrementalChunkDedup:
+class IncrementalChunkDedup(BatchStore):
     """Maintains a seen-chunk registry + cleaned-document table from a
     stream of (id, text) documents, one micro-batch at a time."""
 
@@ -55,32 +50,15 @@ class IncrementalChunkDedup:
         self.id_col = id_col
         self.text_col = text_col
         self.chunk_tokens = chunk_tokens
+        self._registry_path = self._path("chunks_seen")
+        self._docs_path = self._path("clean_docs")
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _registry_path(self) -> str:
-        return os.path.join(self.store_path, "chunks_seen")
-
-    @property
-    def _docs_path(self) -> str:
-        return os.path.join(self.store_path, "clean_docs")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Drop already-seen chunks from the batch's docs, register the
-        batch's new chunk values, append cleaned docs."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+        batch's new chunk values, land cleaned docs."""
         from pyspark.sql import Window
 
-        spark = batch.sparkSession
         if batch.isEmpty():
-            self._commit(batch_id)
             return
         # Sever lineage once: chunks feed the registry probe, the
         # rebuild drop-lists, and the registry append.
@@ -93,16 +71,12 @@ class IncrementalChunkDedup:
             )
             .localCheckpoint(eager=True)
         )
-        from .compaction import dataset_present
-
-        if dataset_present(self._registry_path):
-            seen = (
-                spark.read.parquet(self._registry_path)
-                .where(F.col("_batch") != F.lit(int(batch_id)))
-                .select("chunk")
-            )
-        else:
-            seen = spark.createDataFrame([], "chunk string")
+        seen = self._read_prior(
+            batch.sparkSession,
+            self._registry_path,
+            batch_id,
+            T.StructType([T.StructField("chunk", T.StringType())]),
+        )
         # Within-batch first occurrence; prior-batch membership.
         w = Window.partitionBy("chunk").orderBy(
             F.col(self.id_col).asc(), F.col("chunk_no").asc()
@@ -133,46 +107,15 @@ class IncrementalChunkDedup:
             F.size(chunk_arr).cast("long").alias("n_chunks"),
             F.coalesce(F.col("_n_dropped"), F.lit(0)).cast("long").alias("n_dropped"),
         )
-        cleaned.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._docs_path
-        )
-        keepers.select("chunk").withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._registry_path
-        )
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21)."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(cleaned, self._docs_path, batch_id)
+        self._write(keepers.select("chunk"), self._registry_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def clean_docs(self, spark: SparkSession) -> DataFrame:
-        from .compaction import dataset_present
-
-        dataset_present(self._docs_path)
-        return spark.read.parquet(self._docs_path).select(
+        return self._read_batches(spark, self._docs_path).select(
             self.id_col, "clean_text", "n_chunks", "n_dropped"
         )
 
     def seen_chunks(self, spark: SparkSession) -> DataFrame:
-        from .compaction import dataset_present
-
-        dataset_present(self._registry_path)
-        return spark.read.parquet(self._registry_path).select("chunk")
+        return self._read_batches(spark, self._registry_path).select("chunk")

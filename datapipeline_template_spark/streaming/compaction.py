@@ -22,9 +22,10 @@ Datasets partitioned by anything else (rollup's date grid, D4's
 per-cluster prototype marks) are intentionally invisible to discovery
 — they maintain bounded layouts already.
 
-Replay safety: the ``_commits/<id>`` markers are NEVER removed, so a
-``foreachBatch`` replay of a folded batch still short-circuits at the
-marker — compaction cannot reintroduce the at-least-once double-land.
+Replay safety: the commit markers (``streaming/store.py``) are NEVER
+removed, so a ``foreachBatch`` replay of a folded batch still
+short-circuits at the marker — compaction cannot reintroduce the
+at-least-once double-land.
 UNCOMMITTED partitions (crash-after-write-before-marker remnants) are
 excluded from the fold and carried over unchanged: their replay will
 dynamic-overwrite them with identical rows exactly as before.
@@ -56,12 +57,13 @@ compaction, plan-pinned in tests.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import COMMITS_DIR, read_json, write_json
 
 __all__ = [
     "BASE_BATCH",
@@ -101,20 +103,20 @@ def _batch_dirs(ds: str) -> dict[int, str]:
 
 
 def _committed_ids(store_root: str) -> set[int]:
-    commits = os.path.join(store_root, "_commits")
+    commits = os.path.join(store_root, COMMITS_DIR)
     if not os.path.isdir(commits):
         return set()
     return {int(n) for n in os.listdir(commits) if n.lstrip("-").isdigit()}
 
 
 def discover_stores(path: str) -> list[str]:
-    """Every directory under ``path`` (inclusive) holding a
-    ``_commits`` marker dir — one entry per (possibly nested)
+    """Every directory under ``path`` (inclusive) holding a commit
+    marker dir — one entry per (possibly nested)
     maintainer, so composite stores (StreamingCuration,
     StreamingManifest) compact their members in one call."""
     roots = []
     for dirpath, dirnames, _ in os.walk(path):
-        if "_commits" in dirnames:
+        if COMMITS_DIR in dirnames:
             roots.append(dirpath)
         # Never descend into staging/backup dirs mid-recovery.
         dirnames[:] = [
@@ -131,7 +133,7 @@ def discover_datasets(store_root: str) -> list[str]:
     artifacts like weights tables) is not compaction's business."""
     out = []
     for name in sorted(os.listdir(store_root)):
-        if name == "_commits" or name.endswith((_STAGE_SUFFIX, _OLD_SUFFIX)):
+        if name == COMMITS_DIR or name.endswith((_STAGE_SUFFIX, _OLD_SUFFIX)):
             continue
         child = os.path.join(store_root, name)
         if os.path.isdir(child) and _batch_dirs(child):
@@ -147,8 +149,7 @@ def _read_journal(ds: str) -> dict | None:
     jp = _journal_path(ds)
     if not os.path.exists(jp):
         return None
-    with open(jp) as f:
-        return json.load(f)
+    return read_json(jp)
 
 
 def _finish_swap(ds: str, fold_ids: set[int], stop_after: str | None = None) -> None:
@@ -315,10 +316,7 @@ def compact_dataset(
         return True
     # Atomic journal land: a torn write must read as "no journal"
     # (pre-commit), never as a corrupt commit record.
-    jp = _journal_path(ds)
-    with open(jp + ".tmp", "w") as f:
-        json.dump({"fold": sorted(int(b) for b in fold_ids)}, f)
-    os.replace(jp + ".tmp", jp)
+    write_json(_journal_path(ds), {"fold": sorted(int(b) for b in fold_ids)})
     if crash_after == "journal":
         return True
     # Phases C..F — one protocol; crash points injected into it.
@@ -372,8 +370,7 @@ def get_auto_compact_policy(store_path: str) -> dict | None:
     p = _policy_path(store_path)
     if not os.path.exists(p):
         return None
-    with open(p) as f:
-        return json.load(f)
+    return read_json(p)
 
 
 def set_auto_compact_policy(
@@ -408,9 +405,7 @@ def set_auto_compact_policy(
         "n_compactions": int(prev.get("n_compactions", 0)),
     }
     os.makedirs(store_path, exist_ok=True)
-    with open(p + ".tmp", "w") as f:
-        json.dump(pol, f)
-    os.replace(p + ".tmp", p)
+    write_json(p, pol)
 
 
 def _dir_bytes(path: str) -> int:
@@ -482,10 +477,7 @@ def _bump_compaction_counter(store_path: str) -> None:
     pol = get_auto_compact_policy(store_path)
     if pol is not None:
         pol["n_compactions"] = int(pol.get("n_compactions", 0)) + 1
-        p = _policy_path(store_path)
-        with open(p + ".tmp", "w") as f:
-            json.dump(pol, f)
-        os.replace(p + ".tmp", p)
+        write_json(_policy_path(store_path), pol)
 
 
 # -- bucketed silver (catalog table) -----------------------------------------
@@ -537,14 +529,9 @@ def compact_bucketed_silver(
 
     def _advance(state: dict, phase: str) -> None:
         state["phase"] = phase
-        with open(journal + ".tmp", "w") as f:
-            json.dump(state, f)
-        os.replace(journal + ".tmp", journal)
+        write_json(journal, state)
 
-    state = None
-    if os.path.exists(journal):
-        with open(journal) as f:
-            state = json.load(f)
+    state = read_json(journal) if os.path.exists(journal) else None
 
     if state is None:
         if not spark.catalog.tableExists(tbl):

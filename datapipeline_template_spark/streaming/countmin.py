@@ -15,25 +15,21 @@ for keys chosen AFTER the data was seen — by addition, never a
 rescan; the streaming/kmv.py argument applied to frequencies instead
 of cardinality.
 
-Replays are marker-skip no-ops; crash-after-write replays rewrite
-identical partitions (``_batch`` dynamic-partition overwrite +
-committed markers — the uniform family contract). Key column, depth
-and width are pinned in store metadata: grids built with different
-hashes geometries must never merge.
+Key column, depth and width are pinned in store metadata: grids built
+with different hash geometries must never merge.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalCountMin"]
 
 
-class IncrementalCountMin:
+class IncrementalCountMin(BatchStore):
     """Maintains a Count-Min counter grid for a growing stream of
     LONG keys; point-frequency estimates on demand."""
 
@@ -48,71 +44,26 @@ class IncrementalCountMin:
         self.key_col = key_col
         self.depth = depth
         self.width = width
-        meta_path = os.path.join(store_path, "cm_meta.json")
-        meta = {"key_col": key_col, "depth": depth, "width": width}
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — grids of different key columns or geometries "
-                    "must never merge (rebuild into a fresh store instead)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._cells_path = self._path("cells")
+        self._pin(
+            "cm_meta.json",
+            {"key_col": key_col, "depth": depth, "width": width},
+            "grids of different key columns or geometries must never "
+            "merge (rebuild into a fresh store instead)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _cells_path(self) -> str:
-        return os.path.join(self.store_path, "cells")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Reduce the batch to its (r, b, cnt) delta and land it in the
-        batch's own partition. Pure function of the batch —
-        replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Reduce the batch to its (r, b, cnt) delta. Pure function of
+        the batch — replay-idempotent."""
         from ..operators.sketch import cm_sketch
 
         delta = cm_sketch(batch, self.key_col, self.depth, self.width)
-        delta.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._cells_path)
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3): fires only when
-        # a policy is installed AND due; replays never reach here (the
-        # marker short-circuit above), so policy cannot break replay
-        # idempotence.
+        self._write(delta, self._cells_path, batch_id)
+
+    def _after_commit(self, spark: SparkSession) -> None:
         from .compaction import maybe_auto_compact
 
-        maybe_auto_compact(
-            self.store_path, lambda: self.compact(batch.sparkSession)
-        )
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        maybe_auto_compact(self.store_path, lambda: self.compact(spark))
 
     def compact(self, spark: SparkSession) -> None:
         """Fold committed per-batch deltas into one SUMMED grid row
@@ -133,20 +84,8 @@ class IncrementalCountMin:
 
     def cells(self, spark: SparkSession) -> DataFrame:
         """The current merged grid: summed (r, b, cnt) deltas."""
-        from pyspark.sql import types as T
-
-        schema = "r int, b long, cnt long"
-        empty = spark.createDataFrame([], T._parse_datatype_string(schema))
-        from .compaction import dataset_present
-
-        if not dataset_present(self._cells_path):
-            return empty
         return (
-            spark.read.schema(
-                T._parse_datatype_string(schema + ", _batch int")
-            )
-            .parquet(self._cells_path)
-            .drop("_batch")
+            self._read_batches(spark, self._cells_path, "r int, b long, cnt long")
             .groupBy("r", "b")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )

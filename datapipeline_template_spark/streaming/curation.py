@@ -45,16 +45,13 @@ input corpus — same corpus, same artifacts). Both equalities, plus
 replay/crash-window idempotence, are pinned in
 tests/test_streaming.py.
 
-Exactly-once: per-``_batch`` dynamic-partition overwrite + committed
-markers, at every level — each sub-maintainer keeps its own markers
-(a replay after a crash mid-composition re-runs only the
-uncommitted members), and the composer's own marker gates the whole
-batch.
+Composition: each sub-maintainer keeps its own markers (a replay
+after a crash mid-composition re-runs only the uncommitted members),
+and the composer's own marker gates the whole batch.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from functools import reduce
 
@@ -69,8 +66,9 @@ from ..operators.text import (
     language_id,
     score_with_weights,
 )
-from .kmeans import IncrementalSemDeDup, _has_parquet_files
+from .kmeans import IncrementalSemDeDup
 from .lsh import IncrementalLsh
+from .store import BatchStore
 
 __all__ = [
     "StreamingCuration",
@@ -103,7 +101,7 @@ def _gate_flags(docs: DataFrame) -> DataFrame:
     ).withColumn("surv2", F.col("f_lang") & F.col("f_gopher"))
 
 
-class StreamingCuration:
+class StreamingCuration(BatchStore):
     """Maintains the seven-stage curated set from a stream of
     (doc_id, text, source, n_chars, embedding) rows — documents and
     their embeddings arrive together under the aligned-id convention.
@@ -143,20 +141,9 @@ class StreamingCuration:
             vec_col="embedding",
             threshold=threshold,
         )
+        self._docs_path = self._path("docs")
+        self._weights_path = self._path("weights")
         self._persist_weights(weights)
-
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _docs_path(self) -> str:
-        return os.path.join(self.store_path, "docs")
-
-    @property
-    def _weights_path(self) -> str:
-        return os.path.join(self.store_path, "weights")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
 
     def _persist_weights(self, weights: DataFrame) -> None:
         """Weights are mark-determining store state exactly like the
@@ -180,39 +167,28 @@ class StreamingCuration:
             ).collect()[0]
             return int(row["n"]), int(row["c"])
 
-        meta = os.path.join(self.store_path, "weights.json")
         n, c = _checksum(weights)
-        if os.path.exists(meta):
-            with open(meta) as f:
-                stored = json.load(f)
-            if (stored["n"], stored["checksum"]) != (n, c):
-                raise ValueError(
-                    "store was built with a different classifier weight "
-                    f"table (vocab {stored['n']} / checksum "
-                    f"{stored['checksum']} vs {n} / {c}); scores are "
-                    "written once per doc, so mixing weight regimes "
-                    "silently corrupts the maintained set — rebuild into "
-                    "a fresh store_path"
-                )
-            return
-        weights.select("tok", F.col("w").cast("long")).write.mode(
-            "overwrite"
-        ).parquet(self._weights_path)
-        os.makedirs(self.store_path, exist_ok=True)
-        tmp = meta + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"n": n, "checksum": c}, f)
-        os.replace(tmp, meta)
+        if not os.path.exists(self._path("weights.json")):
+            # The table lands before the pin: the pin is the commit.
+            weights.select("tok", F.col("w").cast("long")).write.mode(
+                "overwrite"
+            ).parquet(self._weights_path)
+        self._pin(
+            "weights.json",
+            {"n": n, "checksum": c},
+            "a different classifier weight table (vocab size / checksum): "
+            "scores are written once per doc, so mixing weight regimes "
+            "silently corrupts the maintained set — rebuild into a fresh "
+            "store_path",
+        )
 
     # -- foreachBatch body -------------------------------------------------
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Gate + score the batch's docs (map-only + one broadcast
-        token join against the frozen weights), append the per-doc
+        token join against the frozen weights), land the per-doc
         state, then delegate the pair/mark maintenance to the
         sub-maintainers. Idempotent under replay at every level."""
-        if os.path.exists(self._marker(batch_id)):
-            return
         spark = batch.sparkSession
         docs = batch.select(
             "doc_id", "text", "source", "n_chars"
@@ -223,11 +199,7 @@ class StreamingCuration:
                 docs, "doc_id", "text", F.broadcast(weights)
             )
             state = _gate_flags(docs).join(scores, on="doc_id", how="left")
-            state.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "_batch"
-            ).parquet(self._docs_path)
+            self._write(state, self._docs_path, batch_id)
         self.lsh.process_batch(batch.select("doc_id", "text"), batch_id)
         self.sem.process_batch(
             batch.where(F.col("embedding").isNotNull()).select(
@@ -235,21 +207,6 @@ class StreamingCuration:
             ),
             batch_id,
         )
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21)."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # -- reads -------------------------------------------------------------
 
@@ -258,7 +215,7 @@ class StreamingCuration:
         stages, derived from the maintained state. CC + both windows
         run over pair-participating / stored-doc state only — no text
         or embedding is rescanned."""
-        if not _has_parquet_files(self._docs_path):
+        if not self._has_files(self._docs_path):
             return spark.createDataFrame(
                 [],
                 T.StructType(
@@ -268,10 +225,7 @@ class StreamingCuration:
                     ]
                 ),
             )
-        from .compaction import dataset_present
-
-        dataset_present(self._docs_path)
-        docs = spark.read.parquet(self._docs_path).drop("_batch")
+        docs = self._read_batches(spark, self._docs_path)
         pairs = self.lsh.pairs(spark)
         comp = connected_components(pairs, "id_a", "id_b")
         w = Window.partitionBy("component").orderBy(
@@ -364,7 +318,7 @@ def batch_survivors(
     )
 
 
-class StreamingManifest:
+class StreamingManifest(BatchStore):
     """The COMPOSED-manifest maintainer: StreamingCuration's
     seven-stage survivors + ``IncrementalDecon``'s frozen-benchmark
     overlap gate + ``IncrementalDsir``'s target-ratio gate, maintained
@@ -414,27 +368,16 @@ class StreamingManifest:
         from .dsir import IncrementalDsir
 
         self.store_path = store_path
-        meta_path = os.path.join(store_path, "manifest_meta.json")
-        meta = {
-            "eval_source": eval_source,
-            "target_source": target_source,
-            "decon_k": decon_k,
-        }
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — manifests gated against different eval "
-                    "sources or targets must never merge (rebuild a "
-                    "fresh store)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            tmp = meta_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, meta_path)
+        self._pin(
+            "manifest_meta.json",
+            {
+                "eval_source": eval_source,
+                "target_source": target_source,
+                "decon_k": decon_k,
+            },
+            "manifests gated against different eval sources or targets "
+            "must never merge (rebuild a fresh store)",
+        )
         self.eval_source = eval_source
         self.cur = StreamingCuration(
             os.path.join(store_path, "cur"), centroids, weights,
@@ -447,17 +390,10 @@ class StreamingManifest:
             os.path.join(store_path, "dsir"), target_source
         )
 
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Delegate to the three sub-maintainers (each replay-safe
         behind its own marker — a crash mid-composition re-runs only
-        the uncommitted members), then commit the composer marker."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+        the uncommitted members)."""
         batch = batch.localCheckpoint(eager=True)
         self.cur.process_batch(batch, batch_id)
         self.decon.process_batch(
@@ -469,17 +405,6 @@ class StreamingManifest:
         self.dsir.process_batch(
             batch.select("doc_id", "text", "source"), batch_id
         )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # -- reads -------------------------------------------------------------
 

@@ -16,12 +16,10 @@ the frozen eval set — no cross-batch state at all, which is what makes
 decontamination the EASIEST stage to maintain and the one no growing
 corpus has an excuse to skip.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: per-batch
-dynamic-partition overwrite + committed-batch markers (the
-streaming/lsh.py discipline). The frozen eval set is written once at
-construction with an O_EXCL-style guard: a maintainer pointed at an
-existing store must present the SAME eval fingerprint or refuse —
-flags computed against two different eval sets must never mix.
+The frozen eval set is written once at construction: a maintainer
+pointed at an existing store must present the SAME eval fingerprint
+or refuse — flags computed against two different eval sets must
+never mix.
 
 Scale: the eval set collapses to its distinct shingle hashes and
 BROADCASTS (benchmarks are tiny against a 100 TB corpus — the dd07
@@ -32,16 +30,17 @@ width — see pipe15 for why 3-gram gates false-positive on real text).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .store import BatchStore
+
 __all__ = ["IncrementalDecon"]
 
 
-class IncrementalDecon:
+class IncrementalDecon(BatchStore):
     """Maintains per-document eval-overlap flags for a growing corpus
     against a FROZEN eval set, one micro-batch at a time."""
 
@@ -57,40 +56,29 @@ class IncrementalDecon:
         self.id_col = id_col
         self.text_col = text_col
         self.k = k
-        meta_path = os.path.join(store_path, "eval_meta.json")
-        if eval_docs is not None:
-            ev = self._shingle(eval_docs).select(
-                F.explode(F.col("_sh")).alias("g")
-            ).distinct()
-            if os.path.exists(meta_path):
-                # Existing store: the eval set must MATCH — refuse to
-                # mix flags computed against different benchmarks.
-                meta = json.load(open(meta_path))
-                fp = self._fingerprint(ev)
-                if meta["k"] != k or meta["fingerprint"] != fp:
-                    raise ValueError(
-                        "IncrementalDecon store at "
-                        f"{store_path} was built against a different "
-                        "eval set or shingle width (stored k="
-                        f"{meta['k']}, fingerprint {meta['fingerprint']}"
-                        f"; got k={k}, {fp}) — decontamination flags "
-                        "from different eval sets must never mix; use "
-                        "a fresh store to re-gate against a new "
-                        "benchmark."
-                    )
-            else:
-                ev.write.mode("overwrite").parquet(self._eval_path)
-                os.makedirs(store_path, exist_ok=True)
-                meta = {"k": k, "fingerprint": self._fingerprint(ev)}
-                tmp = meta_path + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(meta, fh)
-                os.replace(tmp, meta_path)
-        elif not os.path.exists(meta_path):
-            raise ValueError(
-                "new IncrementalDecon store needs eval_docs — the "
-                "frozen benchmark the gate protects"
-            )
+        self._eval_path = self._path("eval_shingles")
+        self._flags_path = self._path("flags")
+        pinned = os.path.exists(self._path("eval_meta.json"))
+        if eval_docs is None:
+            if not pinned:
+                raise ValueError(
+                    "new IncrementalDecon store needs eval_docs — the "
+                    "frozen benchmark the gate protects"
+                )
+            return
+        ev = self._shingle(eval_docs).select(
+            F.explode(F.col("_sh")).alias("g")
+        ).distinct()
+        if not pinned:
+            # The eval set lands before the pin: the pin is the commit.
+            ev.write.mode("overwrite").parquet(self._eval_path)
+        self._pin(
+            "eval_meta.json",
+            {"k": k, "fingerprint": self._fingerprint(ev)},
+            "decontamination flags from different eval sets or shingle "
+            "widths must never mix; use a fresh store to re-gate against "
+            "a new benchmark",
+        )
 
     # -- shingles ------------------------------------------------------------
 
@@ -115,80 +103,26 @@ class IncrementalDecon:
         ).collect()[0]
         return f"{row['n']}:{row['s']}"
 
-    # -- store layout ----------------------------------------------------------
-
-    @property
-    def _eval_path(self) -> str:
-        return os.path.join(self.store_path, "eval_shingles")
-
-    @property
-    def _flags_path(self) -> str:
-        return os.path.join(self.store_path, "flags")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -----------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Shingle the batch, probe the frozen eval set, append (via
-        per-batch overwrite) the touching documents' flags."""
-        if os.path.exists(self._marker(batch_id)):
-            return
-        spark = batch.sparkSession
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Shingle the batch, probe the frozen eval set, land the
+        touching documents' flags."""
         from ..operators.dedup import decontaminate_flags
 
-        ev = spark.read.parquet(self._eval_path).select(
+        ev = batch.sparkSession.read.parquet(self._eval_path).select(
             F.array(F.col("g")).alias("_sh")
         )
         flags = decontaminate_flags(
             self._shingle(batch), ev, self.id_col, "_sh"
         )
-        flags.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._flags_path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21)."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(flags, self._flags_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def flags(self, spark: SparkSession) -> DataFrame:
         """All maintained (id, n_shared) rows — every drained document
         sharing ≥ 1 eval shingle, exactly the batch
-        ``decontaminate_flags`` output over all documents seen."""
-        from .compaction import dataset_present
-
-        dataset_present(self._flags_path)
-        try:
-            return spark.read.parquet(self._flags_path).select(
-                self.id_col, "n_shared"
-            )
-        except Exception:
-            from pyspark.sql import types as T
-
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField(self.id_col, T.LongType()),
-                        T.StructField("n_shared", T.LongType()),
-                    ]
-                ),
-            )
+        ``decontaminate_flags`` output over all documents seen. Ids
+        read as ``bigint``, the engine's id convention."""
+        return self._read_batches(
+            spark, self._flags_path, f"{self.id_col} bigint, n_shared bigint"
+        )

@@ -26,12 +26,10 @@ contract for a score that shifts as BOTH distributions grow.
 cut is an order statistic of the current corpus, so it moves with
 every drain by design.
 
-Every per-batch artifact is a pure function of the batch alone (the
-streaming/kmv.py discipline — no store reads), so a crash-after-write
-replay rewrites identical partitions; ``_batch`` dynamic-partition
-overwrite + committed markers keep the family contract uniform. The
-target source name is pinned in store metadata — scores from
-different targets must never merge (the IncrementalKmv param guard).
+Every per-batch artifact is a pure function of the batch alone (no
+store reads), so a crash-after-write replay rewrites identical
+partitions. The target source name is pinned in store metadata —
+scores from different targets must never merge.
 
 Scale: counts state is the vocabulary (bounded, Zipf) with one extra
 long per entry over IncrementalSurprisal's; doctok is the same per-doc
@@ -42,16 +40,15 @@ aggregate; the selection cut windows over DISTINCT integer means only.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalDsir"]
 
 
-class IncrementalDsir:
+class IncrementalDsir(BatchStore):
     """Maintains raw+target unigram LMs and per-doc token profiles for
     a growing (id, text, source) document stream; DSIR scores and the
     top-third selection on demand."""
@@ -69,46 +66,23 @@ class IncrementalDsir:
         self.id_col = id_col
         self.text_col = text_col
         self.source_col = source_col
-        meta_path = os.path.join(store_path, "dsir_meta.json")
-        meta = {
-            "target_source": target_source,
-            "id_col": id_col,
-            "text_col": text_col,
-            "source_col": source_col,
-        }
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — ratio scores against different targets must "
-                    "never merge (rebuild into a fresh store instead)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._counts_path = self._path("counts")
+        self._doctok_path = self._path("doctok")
+        self._pin(
+            "dsir_meta.json",
+            {
+                "target_source": target_source,
+                "id_col": id_col,
+                "text_col": text_col,
+                "source_col": source_col,
+            },
+            "ratio scores against different targets must never merge "
+            "(rebuild into a fresh store instead)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _counts_path(self) -> str:
-        return os.path.join(self.store_path, "counts")
-
-    @property
-    def _doctok_path(self) -> str:
-        return os.path.join(self.store_path, "doctok")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Tokenize the batch ONCE and land its two additive artifacts.
         Pure function of the batch — replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
         from ..operators.text import tokenize
 
         tok = batch.select(
@@ -125,40 +99,13 @@ class IncrementalDsir:
             .cast("long")
             .alias("ct"),
         )
-        for df, path in (
-            (doctok, self._doctok_path),
-            (counts, self._counts_path),
-        ):
-            df.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "_batch"
-            ).parquet(path)
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3): fires only when
-        # a policy is installed AND due; replays never reach here (the
-        # marker short-circuit above), so policy cannot break replay
-        # idempotence.
+        self._write(doctok, self._doctok_path, batch_id)
+        self._write(counts, self._counts_path, batch_id)
+
+    def _after_commit(self, spark: SparkSession) -> None:
         from .compaction import maybe_auto_compact
 
-        maybe_auto_compact(
-            self.store_path, lambda: self.compact(batch.sparkSession)
-        )
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        maybe_auto_compact(self.store_path, lambda: self.compact(spark))
 
     # -- reads -------------------------------------------------------------
 
@@ -186,27 +133,11 @@ class IncrementalDsir:
             },
         )
 
-    def _read(self, spark: SparkSession, path: str, schema_str: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        empty = spark.createDataFrame([], T._parse_datatype_string(schema_str))
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return empty
-        return (
-            spark.read.schema(
-                T._parse_datatype_string(schema_str + ", _batch int")
-            )
-            .parquet(path)
-            .drop("_batch")
-        )
-
     def lms(self, spark: SparkSession) -> DataFrame:
         """The current merged counts (w, c, ct) — both unigram LMs in
         one frame."""
         return (
-            self._read(spark, self._counts_path, "w string, c long, ct long")
+            self._read_batches(spark, self._counts_path, "w string, c long, ct long")
             .groupBy("w")
             .agg(
                 F.sum("c").cast("long").alias("c"),
@@ -224,7 +155,7 @@ class IncrementalDsir:
         aggregate; no document is ever re-tokenized."""
         from ..functions import milli_log2
 
-        doctok = self._read(
+        doctok = self._read_batches(
             spark, self._doctok_path, "doc_id long, w string, n long"
         )
         cnt = self.lms(spark)

@@ -14,25 +14,21 @@ O(bins ≤ ~540) and answer any later quantile question by addition,
 never a rescan — the same argument as streaming/kmv.py, applied to
 quantiles instead of cardinality.
 
-Replays are marker-skip no-ops; crash-after-write replays rewrite
-identical partitions (``_batch`` dynamic-partition overwrite +
-committed markers — the uniform family contract). Group/value column
-names are pinned in store metadata: histograms of different value
-columns must never merge.
+Group/value column names are pinned in store metadata: histograms of
+different value columns must never merge.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalHistogram"]
 
 
-class IncrementalHistogram:
+class IncrementalHistogram(BatchStore):
     """Maintains per-group log-histogram bin counts for a growing
     stream of (group, positive long value) rows; quantile estimates
     on demand."""
@@ -46,38 +42,17 @@ class IncrementalHistogram:
         self.store_path = store_path
         self.group_col = group_col
         self.value_col = value_col
-        meta_path = os.path.join(store_path, "hist_meta.json")
-        meta = {"group_col": group_col, "value_col": value_col}
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — histograms of different columns must never "
-                    "merge (rebuild into a fresh store instead)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._bins_path = self._path("bins")
+        self._pin(
+            "hist_meta.json",
+            {"group_col": group_col, "value_col": value_col},
+            "histograms of different columns must never merge (rebuild "
+            "into a fresh store instead)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _bins_path(self) -> str:
-        return os.path.join(self.store_path, "bins")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Reduce the batch to its (group, bin, cnt) delta and land it
-        in the batch's own partition. Pure function of the batch —
-        replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Reduce the batch to its (group, bin, cnt) delta. Pure
+        function of the batch — replay-idempotent."""
         from ..operators.sketch import log_hist_bins
 
         delta = log_hist_bins(
@@ -88,36 +63,12 @@ class IncrementalHistogram:
             "g",
             "v",
         )
-        delta.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._bins_path)
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3): fires only when
-        # a policy is installed AND due; replays never reach here (the
-        # marker short-circuit above), so policy cannot break replay
-        # idempotence.
+        self._write(delta, self._bins_path, batch_id)
+
+    def _after_commit(self, spark: SparkSession) -> None:
         from .compaction import maybe_auto_compact
 
-        maybe_auto_compact(
-            self.store_path, lambda: self.compact(batch.sparkSession)
-        )
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        maybe_auto_compact(self.store_path, lambda: self.compact(spark))
 
     def compact(self, spark: SparkSession) -> None:
         """Fold committed per-batch deltas into one SUMMED row per
@@ -138,20 +89,8 @@ class IncrementalHistogram:
 
     def counts(self, spark: SparkSession) -> DataFrame:
         """The current merged sketch: summed (g, bin, cnt) deltas."""
-        from pyspark.sql import types as T
-
-        schema = "g string, bin long, cnt long"
-        empty = spark.createDataFrame([], T._parse_datatype_string(schema))
-        from .compaction import dataset_present
-
-        if not dataset_present(self._bins_path):
-            return empty
         return (
-            spark.read.schema(
-                T._parse_datatype_string(schema + ", _batch int")
-            )
-            .parquet(self._bins_path)
-            .drop("_batch")
+            self._read_batches(spark, self._bins_path, "g string, bin long, cnt long")
             .groupBy("g", "bin")
             .agg(F.sum("cnt").cast("long").alias("cnt"))
         )

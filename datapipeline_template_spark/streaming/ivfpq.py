@@ -18,10 +18,8 @@ families):
   tests/test_streaming.py).
 - ``search(...)`` over the maintained index == ``ivf_pq_adc_topk``
   over the batch-built index — the retrieval the index exists for.
-- Replays no-op (committed-batch markers); a crash window (marker
-  lost after data landed) self-repairs via the idempotent dynamic
-  ``_batch`` partition overwrite; a maintainer re-created with
-  different frozen artifacts refuses the store loudly.
+- A maintainer re-created with different frozen artifacts refuses
+  the store loudly.
 
 Reference parity: the reference pipeline has no ANN surface; this is
 the LLM-training-data extension stack (similarity-search maintenance
@@ -30,20 +28,17 @@ for a continuously ingested corpus).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import quantize_vec
 from ..operators.clustering import ivf_pq_adc_topk, kmeans_assign, pq_encode
-from .kmeans import _has_parquet_files
+from .store import BatchStore
 
 __all__ = ["IncrementalIvfPq"]
 
 
-class IncrementalIvfPq:
+class IncrementalIvfPq(BatchStore):
     """Maintains the IVF-PQ index table (id, cluster, c0..c{m-1}) from
     a stream of (id, vector) rows against FROZEN coarse centroids and
     PQ codebooks, one micro-batch at a time."""
@@ -65,55 +60,22 @@ class IncrementalIvfPq:
         self.sub_dim = int(sub_dim)
         self.id_col = id_col
         self.vec_col = vec_col
-        self._persist_artifacts()
+        self._index_path = self._path("index")
+        # Frozen artifacts are part of the store: encoding is write-once
+        # ONLY under the same quantizers.
+        self._pin(
+            "artifacts.json",
+            {
+                "coarse": self.coarse,
+                "codebooks": self.codebooks,
+                "sub_dim": self.sub_dim,
+            },
+            "the PQ encoding is write-once only under identical quantizers, "
+            "so different frozen artifacts (coarse centroids / codebooks / "
+            "sub_dim) require a full rebuild into a fresh store_path",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _index_path(self) -> str:
-        return os.path.join(self.store_path, "index")
-
-    @property
-    def _artifact_path(self) -> str:
-        return os.path.join(self.store_path, "artifacts.json")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    def _persist_artifacts(self) -> None:
-        """Frozen artifacts are part of the store: encoding is
-        write-once ONLY under the same quantizers — a maintainer
-        re-created with different centroids or codebooks would
-        silently mix encoding regimes; fail loudly instead (the
-        IncrementalKmeansAssign centroid-guard convention)."""
-        os.makedirs(self.store_path, exist_ok=True)
-        payload = {
-            "coarse": self.coarse,
-            "codebooks": self.codebooks,
-            "sub_dim": self.sub_dim,
-        }
-        if os.path.exists(self._artifact_path):
-            with open(self._artifact_path) as f:
-                stored = json.load(f)
-            if stored != payload:
-                raise ValueError(
-                    "store was built with different frozen artifacts "
-                    "(coarse centroids / codebooks / sub_dim); the PQ "
-                    "encoding is write-once only under identical "
-                    "quantizers — re-training requires a full rebuild "
-                    "into a fresh store_path"
-                )
-        else:
-            tmp = self._artifact_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.replace(tmp, self._artifact_path)
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         m = len(self.codebooks)
         cells = kmeans_assign(
             batch.select(
@@ -129,42 +91,19 @@ class IncrementalIvfPq:
         row = codes.join(cells, "vec_id").select(
             "vec_id", "cluster", *[f"c{j}" for j in range(m)]
         )
-        row.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._index_path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining
-        the index incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(row, self._index_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def _read_index(self, spark: SparkSession) -> DataFrame:
         """Internal read with the store's own column names (vec_id +
-        cluster + codes). Empty-store handling gated on actual FILE
-        presence (family convention)."""
+        cluster + codes), typed from the stored files when any exist."""
         from pyspark.sql import types as T
 
         m = len(self.codebooks)
         cols = ["vec_id", "cluster", *[f"c{j}" for j in range(m)]]
-        if _has_parquet_files(self._index_path):
-            return spark.read.parquet(self._index_path).select(*cols)
+        if self._has_files(self._index_path):
+            return self._read_batches(spark, self._index_path).select(*cols)
         return spark.createDataFrame(
             [], T.StructType([T.StructField(c, T.LongType()) for c in cols])
         )

@@ -13,10 +13,6 @@ the table equals ``kmeans_assign`` over every vector seen — assignment
 is write-once per vector because the centroids are frozen, which is
 what makes the operator embarrassingly streamable.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: the family
-contract — per-``_batch`` dynamic-partition overwrite makes replays
-byte-idempotent, and a committed-batch marker makes them cheap no-ops.
-
 At 100 TB: the assignment table is the partition key for every
 downstream within-cluster operation (dd15's pair join, per-cluster
 survivor selection), so maintaining it incrementally means a corpus
@@ -26,7 +22,6 @@ exact scale argument the incremental-silver path makes for dedup.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,29 +29,12 @@ from pyspark.sql import functions as F
 
 from ..functions import quantize_vec
 from ..operators.clustering import kmeans_assign
+from .store import BatchStore
 
 __all__ = ["IncrementalD4", "IncrementalKmeansAssign", "IncrementalSemDeDup"]
 
 
-def _has_parquet_files(path: str) -> bool:
-    """True when ``path`` contains at least one parquet data file —
-    the empty-store gate. Directory existence alone is not enough: a
-    dynamic-partition overwrite of an EMPTY frame creates the
-    directory with no files, and schema inference on it raises.
-    Routes through ``dataset_present`` first so a dataset renamed away
-    mid-compaction-swap reads as 'pending recovery' (finished here,
-    cheap local renames), never as silently-empty state."""
-    from .compaction import dataset_present
-
-    if not dataset_present(path):
-        return False
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-class IncrementalKmeansAssign:
+class IncrementalKmeansAssign(BatchStore):
     """Maintains an (id, cluster, dist) assignment table from a stream
     of (id, vector) rows against FROZEN centroids, one micro-batch at
     a time."""
@@ -72,49 +50,18 @@ class IncrementalKmeansAssign:
         self.centroids = [[int(v) for v in cv] for cv in centroids]
         self.id_col = id_col
         self.vec_col = vec_col
-        self._persist_centroids()
+        self._assign_path = self._path("assignments")
+        # Centroids are part of the store: every invariant assumes the
+        # SAME frozen centroids across drains.
+        self._pin(
+            "centroids.json",
+            self.centroids,
+            "assignment is write-once only under frozen centroids, so "
+            "different centroids (a re-fit) require a full rebuild into a "
+            "fresh store_path",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _assign_path(self) -> str:
-        return os.path.join(self.store_path, "assignments")
-
-    @property
-    def _centroid_path(self) -> str:
-        return os.path.join(self.store_path, "centroids.json")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    def _persist_centroids(self) -> None:
-        """Centroids are part of the store: a maintainer re-created
-        against an existing store must use the SAME frozen centroids
-        or every invariant silently breaks — fail loudly instead."""
-        os.makedirs(self.store_path, exist_ok=True)
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                stored = json.load(f)
-            if stored != self.centroids:
-                raise ValueError(
-                    "store was built with different centroids; assignment "
-                    "is write-once only under frozen centroids — re-fit "
-                    "requires a full rebuild into a fresh store_path"
-                )
-        else:
-            # Atomic write (temp + rename), matching the store's crash
-            # discipline: a crash mid-dump must not leave a truncated
-            # centroids.json that bricks every future construction.
-            tmp = self._centroid_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(self.centroids, f)
-            os.replace(tmp, self._centroid_path)
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         q = batch.select(
             F.col(self.id_col).alias("_id"),
             quantize_vec(F.col(self.vec_col)).alias("_qv"),
@@ -122,45 +69,19 @@ class IncrementalKmeansAssign:
         assigned = kmeans_assign(q, "_qv", self.centroids).select(
             "_id", "cluster", "dist"
         )
-        assigned.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._assign_path
-        )
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining the
-        assignment table incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(assigned, self._assign_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def assignments(self, spark: SparkSession) -> DataFrame:
-        """All maintained (id, cluster, dist) rows. Empty-store
-        handling gated on actual FILE presence (family convention —
-        never a broad except): a drained-but-empty batch leaves a
-        partitioned directory with zero parquet files, which schema
-        inference cannot read (reproduced + tested); checking for
-        files instead of hardcoding a read schema keeps the id
-        column's caller-chosen type intact on non-empty stores."""
+        """All maintained (id, cluster, dist) rows. Gated on FILE
+        presence rather than a fixed read schema, so the id column
+        keeps its caller-chosen type on non-empty stores."""
         from pyspark.sql import types as T
 
-        if _has_parquet_files(self._assign_path):
+        if self._has_files(self._assign_path):
             return (
-                spark.read.parquet(self._assign_path)
+                self._read_batches(spark, self._assign_path)
                 .select(F.col("_id").alias(self.id_col), "cluster", "dist")
             )
         # Never-written (or only-empty-batches) store: the documented
@@ -209,8 +130,7 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
 
     Store layout adds a ``vectors`` table (quantized array + squared
     norm + centroid cosine, paid once at ingest) and a ``marks`` table
-    beside the inherited assignments; exactly-once via the same
-    per-batch overwrite + marker discipline.
+    beside the inherited assignments.
     """
 
     def __init__(
@@ -228,51 +148,28 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
         super().__init__(store_path, centroids, id_col, vec_col)
         self.threshold = threshold
         self.broadcast_max_rows = broadcast_max_rows
-        self._persist_threshold(pre_existing)
-
-    def _persist_threshold(self, pre_existing: bool) -> None:
-        """The threshold is store state for the same reason centroids
-        are: pairs are examined exactly once, so marks accumulated
-        under a different threshold equal batch semdedup at NEITHER
-        value — refuse regime mixing loudly (the centroid guard's
-        contract, applied to the other mark-determining parameter).
-
-        A PRE-EXISTING store with no recorded threshold is refused
-        too: silently adopting the caller's value would legitimize
-        whatever mixing already happened — the caller must state the
-        original threshold by writing params.json explicitly (or
-        rebuild)."""
-        path = os.path.join(self.store_path, "params.json")
-        if pre_existing and not os.path.exists(path):
+        self._vec_path = self._path("vectors")
+        self._marks_path = self._path("marks")
+        # The threshold is store state for the same reason centroids
+        # are: pairs are examined exactly once, so marks accumulated
+        # under a different threshold equal batch semdedup at NEITHER
+        # value. A PRE-EXISTING store with no recorded threshold is
+        # refused too: silently adopting the caller's value would
+        # legitimize whatever mixing already happened.
+        if pre_existing and not os.path.exists(self._path("params.json")):
             raise ValueError(
                 "existing store has no recorded threshold (params.json); "
                 "refusing to adopt a value silently — write "
                 '{"threshold": <original>} to params.json if it is known, '
                 "or rebuild into a fresh store_path"
             )
-        if os.path.exists(path):
-            with open(path) as f:
-                stored = json.load(f)
-            if stored.get("threshold") != self.threshold:
-                raise ValueError(
-                    f"store was built with threshold={stored.get('threshold')}"
-                    f" but got {self.threshold}; marks are emitted once per "
-                    "pair, so mixing thresholds silently corrupts the "
-                    "maintained set — rebuild into a fresh store_path"
-                )
-        else:
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"threshold": self.threshold}, f)
-            os.replace(tmp, path)
-
-    @property
-    def _vec_path(self) -> str:
-        return os.path.join(self.store_path, "vectors")
-
-    @property
-    def _marks_path(self) -> str:
-        return os.path.join(self.store_path, "marks")
+        self._pin(
+            "params.json",
+            {"threshold": threshold},
+            "marks are emitted once per pair, so mixing thresholds "
+            "silently corrupts the maintained set — rebuild into a fresh "
+            "store_path",
+        )
 
     def _prepare(self, batch: DataFrame) -> DataFrame:
         """(id, vec) → (_id, cluster, dist, _qv, _n, _cs): per-row
@@ -291,29 +188,15 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
             "_id", "cluster", "dist", "_qv", "_n", "_cs"
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         from ..functions import cosine_prequantized_hof
 
-        if os.path.exists(self._marker(batch_id)):
-            return
         spark = batch.sparkSession
         new_v = self._prepare(batch).localCheckpoint(eager=True)
         n_new = new_v.count()
         if n_new == 0:
-            self._commit(batch_id)
             return
-
-        from .compaction import dataset_present
-
-        if dataset_present(self._vec_path):
-            existing = (
-                spark.read.parquet(self._vec_path)
-                # Crash-after-write replays must not see their own rows.
-                .where(F.col("_batch") != F.lit(int(batch_id)))
-                .drop("_batch")
-            )
-        else:
-            existing = spark.createDataFrame([], new_v.schema)
+        existing = self._read_prior(spark, self._vec_path, batch_id, new_v.schema)
         all_v = existing.unionByName(new_v)
 
         # Probe-side broadcast gated on the batch count already in hand
@@ -349,29 +232,18 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
             .alias("vec_id"),
         ).distinct()
 
-        marks.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._marks_path
-        )
-        new_v.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._vec_path
-        )
+        self._write(marks, self._marks_path, batch_id)
+        self._write(new_v, self._vec_path, batch_id)
         # Maintain the inherited assignment table too, from the SAME
         # prepared rows — no second kernel pass over the batch.
-        new_v.select("_id", "cluster", "dist").withColumn(
-            "_batch", F.lit(int(batch_id))
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_batch").parquet(self._assign_path)
+        self._write(
+            new_v.select("_id", "cluster", "dist"), self._assign_path, batch_id
+        )
         # Subclass hook (IncrementalD4): derived per-cluster state is
         # recomputed from the store AFTER this batch's writes but
         # BEFORE the commit marker, so a crash anywhere in the window
         # replays the whole batch idempotently.
         self._post_batch(spark, batch_id, new_v)
-        self._commit(batch_id)
 
     def _post_batch(
         self, spark: SparkSession, batch_id: int, new_v: DataFrame
@@ -380,16 +252,15 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
 
     def marks(self, spark: SparkSession) -> DataFrame:
         """All maintained (cluster, vec_id) removal marks, distinct
-        across batches. FILE-presence gated (family convention): a
-        batch with ZERO qualifying pairs legitimately writes an empty
-        marks partition, which schema inference cannot read (review
-        finding, tested); on non-empty stores inference keeps the id
-        column's caller-chosen type."""
+        across batches. FILE-presence gated: a batch with ZERO
+        qualifying pairs legitimately writes an empty marks partition,
+        and on non-empty stores inference keeps the id column's
+        caller-chosen type."""
         from pyspark.sql import types as T
 
-        if _has_parquet_files(self._marks_path):
+        if self._has_files(self._marks_path):
             return (
-                spark.read.parquet(self._marks_path)
+                self._read_batches(spark, self._marks_path)
                 .select("cluster", "vec_id")
                 .distinct()
             )
@@ -434,7 +305,7 @@ class IncrementalD4(IncrementalSemDeDup):
     ``proto_pct`` is store state like the threshold: prototype marks
     for untouched clusters were derived under the recorded value, so
     a maintainer re-created with a different pct would silently mix
-    regimes — refused loudly (d4_params.json, atomic write).
+    regimes — refused loudly (pinned in d4_params.json).
     """
 
     def __init__(
@@ -452,29 +323,13 @@ class IncrementalD4(IncrementalSemDeDup):
             broadcast_max_rows,
         )
         self.proto_pct = int(proto_pct)
-        self._persist_proto_pct()
-
-    def _persist_proto_pct(self) -> None:
-        path = os.path.join(self.store_path, "d4_params.json")
-        if os.path.exists(path):
-            with open(path) as f:
-                stored = json.load(f)
-            if stored.get("proto_pct") != self.proto_pct:
-                raise ValueError(
-                    f"store was built with proto_pct={stored.get('proto_pct')}"
-                    f" but got {self.proto_pct}; untouched clusters keep marks "
-                    "derived under the recorded value — rebuild into a fresh "
-                    "store_path"
-                )
-        else:
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"proto_pct": self.proto_pct}, f)
-            os.replace(tmp, path)
-
-    @property
-    def _proto_path(self) -> str:
-        return os.path.join(self.store_path, "proto_marks")
+        self._proto_path = self._path("proto_marks")
+        self._pin(
+            "d4_params.json",
+            {"proto_pct": self.proto_pct},
+            "untouched clusters keep marks derived under the recorded "
+            "value — rebuild into a fresh store_path",
+        )
 
     def _post_batch(
         self, spark: SparkSession, batch_id: int, new_v: DataFrame
@@ -488,9 +343,8 @@ class IncrementalD4(IncrementalSemDeDup):
         ]
         if not touched:
             return
-        vecs = (
-            spark.read.parquet(self._vec_path)
-            .where(F.col("cluster").isin(touched))
+        vecs = self._read_batches(spark, self._vec_path).where(
+            F.col("cluster").isin(touched)
         )
         sem = self.marks(spark).where(F.col("cluster").isin(touched))
         surv = (
@@ -525,7 +379,7 @@ class IncrementalD4(IncrementalSemDeDup):
         infers small numeric partition values as int)."""
         from pyspark.sql import types as T
 
-        if _has_parquet_files(self._proto_path):
+        if self._has_files(self._proto_path):
             return (
                 spark.read.parquet(self._proto_path)
                 .where(F.col("vec_id").isNotNull())

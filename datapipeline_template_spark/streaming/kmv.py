@@ -16,10 +16,7 @@ This is the SIMPLEST member of the incremental-family contract: a
 batch's partial sketch is a pure function of the batch alone (like
 streaming/decon.py, unlike the stored-set deltas of
 streaming/overlap.py), so a crash-after-write replay rewrites the
-identical partition — idempotent even before the marker lands. The
-``_batch`` dynamic-partition overwrite + committed-batch markers keep
-the at-least-once ``foreachBatch`` discipline uniform across
-families anyway.
+identical partition — idempotent even before the marker lands.
 
 Parameter guard: a maintainer pointed at an existing store must
 present the SAME (k, group_col, value_col) — merged sketches of
@@ -37,16 +34,15 @@ aggregation.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalKmv"]
 
 
-class IncrementalKmv:
+class IncrementalKmv(BatchStore):
     """Maintains per-group KMV distinct-count sketches for a growing
     stream of (group: string, value: long) rows."""
 
@@ -63,39 +59,18 @@ class IncrementalKmv:
         self.group_col = group_col
         self.value_col = value_col
         self.k = k
-        meta_path = os.path.join(store_path, "kmv_meta.json")
-        meta = {"k": k, "group_col": group_col, "value_col": value_col}
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; "
-                    f"got {meta} — sketches of different parameters must "
-                    "never merge (rebuild into a fresh store instead)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._parts_path = self._path("partials")
+        self._pin(
+            "kmv_meta.json",
+            {"k": k, "group_col": group_col, "value_col": value_col},
+            "sketches of different parameters must never merge (rebuild "
+            "into a fresh store instead)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _parts_path(self) -> str:
-        return os.path.join(self.store_path, "partials")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Reduce the batch to one partial sketch per touched group and
-        land it in the batch's own partition. Pure function of the
-        batch — no store read, so replays are idempotent by
-        construction."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Reduce the batch to one partial sketch per touched group.
+        Pure function of the batch — no store read, so replays are
+        idempotent by construction."""
         from pyspark.sql import types as T
 
         from ..operators.sketch import kmv_sketch
@@ -111,59 +86,18 @@ class IncrementalKmv:
                 "before the sink"
             )
         sk = kmv_sketch(batch, self.group_col, self.value_col, k=self.k)
-        sk.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._parts_path)
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3): fires only when
-        # a policy is installed AND due; replays never reach here (the
-        # marker short-circuit above), so policy cannot break replay
-        # idempotence.
+        self._write(sk, self._parts_path, batch_id)
+
+    def _after_commit(self, spark: SparkSession) -> None:
         from .compaction import maybe_auto_compact
 
-        maybe_auto_compact(
-            self.store_path, lambda: self.compact(batch.sparkSession)
-        )
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining the
-        per-group sketches incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        maybe_auto_compact(self.store_path, lambda: self.compact(spark))
 
     # -- reads -------------------------------------------------------------
 
     def _read_partials(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql import types as T
-
-        schema = T._parse_datatype_string(
-            f"{self.group_col} string, kmv array<bigint>"
-        )
-        from .compaction import dataset_present
-
-        if not dataset_present(self._parts_path):
-            return spark.createDataFrame([], schema)
-        return (
-            spark.read.schema(
-                T._parse_datatype_string(
-                    f"{self.group_col} string, kmv array<bigint>, _batch int"
-                )
-            )
-            .parquet(self._parts_path)
-            .drop("_batch")
+        return self._read_batches(
+            spark, self._parts_path, f"{self.group_col} string, kmv array<bigint>"
         )
 
     def sketches(self, spark: SparkSession) -> DataFrame:

@@ -11,17 +11,9 @@ of drains, the maintained pairs equal the full-corpus
 equivalence contract, kept end-to-end by construction: a pair (a, b)
 is emitted exactly once, in the batch where its LATER member arrives.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: every
-batch writes its signature rows and its pair rows into a
-``_batch=<id>`` subdirectory with overwrite semantics, so a REPLAYED
-batch rewrites the identical bytes instead of appending duplicates —
-idempotence by path, not by marker alone. A committed-batch marker
-(the same pattern as ``streaming/rollup.py``) additionally turns
-replays into cheap no-ops, and on a half-written crash (data landed,
-marker lost) the replay's overwrite repairs the store. The reading of
-"existing" signatures excludes the current batch id for the same
-reason: a crash-after-sig-write replay must not see its own rows as
-corpus.
+A batch's pairs depend on the stored corpus, so the reading of
+"existing" signatures excludes the current batch id: a
+crash-after-sig-write replay must not see its own rows as corpus.
 
 Contract: document ids are unique across batches (write-once docs —
 re-delivery of a batch is handled by the marker/overwrite, but the
@@ -38,20 +30,19 @@ the shuffle join instead of OOMing executors.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.dedup import (
     lsh_candidate_pairs_incremental,
     minhash_signatures_kernel,
 )
+from .store import BatchStore
 
 __all__ = ["IncrementalLsh"]
 
 
-class IncrementalLsh:
+class IncrementalLsh(BatchStore):
     """Maintains a signature table + candidate-pair table from a
     stream of (id, text) documents, one micro-batch at a time."""
 
@@ -79,27 +70,12 @@ class IncrementalLsh:
         self.rows_per_band = rows_per_band
         self.k = k
         self.broadcast_max_rows = broadcast_max_rows
+        self._sig_path = self._path("signatures")
+        self._pairs_path = self._path("pairs")
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _sig_path(self) -> str:
-        return os.path.join(self.store_path, "signatures")
-
-    @property
-    def _pairs_path(self) -> str:
-        return os.path.join(self.store_path, "pairs")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Sign the batch, probe it against the stored corpus, append
-        (via per-batch overwrite) signatures and touching pairs."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Sign the batch, probe it against the stored corpus, land
+        its signatures and touching pairs."""
         spark = batch.sparkSession
         # Eager materialization: the signatures feed the probe join
         # (both sides), the size gate, and the store write — signing
@@ -115,21 +91,10 @@ class IncrementalLsh:
         ).localCheckpoint(eager=True)
         n_new = sigs_new.count()
         if n_new == 0:
-            self._commit(batch_id)
             return
-
-        from .compaction import dataset_present
-
-        if dataset_present(self._sig_path):
-            existing = (
-                spark.read.parquet(self._sig_path)
-                # A crash-after-sig-write replay must not treat its own
-                # half-committed rows as corpus.
-                .where(F.col("_batch") != F.lit(int(batch_id)))
-                .select(self.id_col, "sig")
-            )
-        else:
-            existing = spark.createDataFrame([], sigs_new.schema)
+        existing = self._read_prior(
+            spark, self._sig_path, batch_id, sigs_new.schema
+        )
         pairs = lsh_candidate_pairs_incremental(
             existing,
             sigs_new,
@@ -139,66 +104,33 @@ class IncrementalLsh:
             rows_per_band=self.rows_per_band,
             broadcast=n_new <= self.broadcast_max_rows // max(self.bands, 1),
         )
-        # Per-batch overwrite => byte-idempotent replay, no duplicate
-        # rows ever, no read-modify-write of prior batches' data.
-        pairs.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._pairs_path
-        )
-        sigs_new.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._sig_path
-        )
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining
-        the signature and pair tables incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(pairs, self._pairs_path, batch_id)
+        self._write(sigs_new, self._sig_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def signatures(self, spark: SparkSession) -> DataFrame:
-        """All maintained (id, sig) rows. Finishes any compaction swap
-        a crash left pending before reading."""
-        from .compaction import dataset_present
-
-        dataset_present(self._sig_path)
-        return spark.read.parquet(self._sig_path).select(self.id_col, "sig")
+        """All maintained (id, sig) rows."""
+        return self._read_batches(spark, self._sig_path).select(
+            self.id_col, "sig"
+        )
 
     def pairs(self, spark: SparkSession) -> DataFrame:
         """All maintained candidate pairs (id_a < id_b), distinct
-        across batches by the exactly-once emission contract."""
+        across batches by the exactly-once emission contract. A store
+        with no pair-bearing batch yet (e.g. every batch so far was
+        bucket-disjoint) reads as an empty frame typed like the stored
+        ids; with no signatures either, the documented default is
+        ``bigint`` (the engine's id convention)."""
         from .compaction import dataset_present
 
-        dataset_present(self._pairs_path)
-        try:
-            return spark.read.parquet(self._pairs_path).select("id_a", "id_b")
-        except Exception:
-            # No pair-bearing batch yet: an empty/absent store is a
-            # legitimate state (e.g. every batch so far was
-            # bucket-disjoint) — surface it as an empty frame typed
-            # like the ids, not as a read error.
-            idt = self.signatures(spark).schema[self.id_col].dataType
-            from pyspark.sql import types as T
-
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [T.StructField("id_a", idt), T.StructField("id_b", idt)]
-                ),
-            )
+        idt = (
+            self.signatures(spark).schema[self.id_col].dataType
+            if dataset_present(self._sig_path)
+            else T.LongType()
+        )
+        return self._read_batches(
+            spark,
+            self._pairs_path,
+            T.StructType([T.StructField("id_a", idt), T.StructField("id_b", idt)]),
+        )

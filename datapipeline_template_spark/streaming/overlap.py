@@ -22,11 +22,8 @@ of drains it equals the batch tx22 matrix over every document seen
 (equivalence-tested), because |A|, |B| and |A ∩ B| are all additive
 over never-seen-before elements.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: per-batch
-``_batch=<id>`` dynamic-partition overwrite + committed-batch markers,
-and the stored-set read excludes the current batch id so a
-crash-after-write replay computes the identical deltas (the
-streaming/lsh.py discipline).
+The stored-set read excludes the current batch id, so a
+crash-after-write replay computes the identical deltas.
 
 Scale: the store is distinct (source, shingle) — the same cardinality
 tx22's first shuffle produces; the anti-join and the cross probe are
@@ -37,15 +34,15 @@ corpus-sized blowup.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalSourceOverlap"]
 
 
-class IncrementalSourceOverlap:
+class IncrementalSourceOverlap(BatchStore):
     """Maintains distinct (source, shingle) rows plus additive overlap
     deltas from a stream of (id, source, text) documents."""
 
@@ -60,25 +57,9 @@ class IncrementalSourceOverlap:
         self.source_col = source_col
         self.text_col = text_col
         self.k = k
-
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _sg_path(self) -> str:
-        return os.path.join(self.store_path, "sg")
-
-    @property
-    def _tot_path(self) -> str:
-        return os.path.join(self.store_path, "tot_deltas")
-
-    @property
-    def _pairs_path(self) -> str:
-        return os.path.join(self.store_path, "pair_deltas")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
+        self._sg_path = self._path("sg")
+        self._tot_path = self._path("tot_deltas")
+        self._pairs_path = self._path("pair_deltas")
 
     def _batch_sg(self, batch: DataFrame) -> DataFrame:
         """Distinct (source, g) over the batch — the tx22 shingle spec
@@ -96,23 +77,13 @@ class IncrementalSourceOverlap:
             .distinct()
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Shingle the batch, derive never-seen (source, g) rows, and
-        append (via per-batch overwrite) the stored rows plus the
-        additive total/pair deltas."""
-        if os.path.exists(self._marker(batch_id)):
-            return
-        spark = batch.sparkSession
+        land them plus the additive total/pair deltas."""
         sg_b = self._batch_sg(batch)
-        if os.path.isdir(self._sg_path):
-            stored = (
-                spark.read.parquet(self._sg_path)
-                # Crash-after-write replay must not see its own rows.
-                .where(F.col("_batch") != F.lit(int(batch_id)))
-                .select("source", "g")
-            )
-        else:
-            stored = spark.createDataFrame([], sg_b.schema)
+        stored = self._read_prior(
+            batch.sparkSession, self._sg_path, batch_id, sg_b.schema
+        )
         # Eager: `new` feeds the store write, the tot delta, and BOTH
         # sides of two joins — and severs lineage from the store paths
         # being overwritten below.
@@ -147,64 +118,11 @@ class IncrementalSourceOverlap:
             .agg(F.count(F.lit(1)).cast("long").alias("d"))
         )
 
-        for df, path in (
-            (new, self._sg_path),
-            (tot, self._tot_path),
-            (pair_delta, self._pairs_path),
-        ):
-            df.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "_batch"
-            ).parquet(path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining the
-        overlap deltas incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(new, self._sg_path, batch_id)
+        self._write(tot, self._tot_path, batch_id)
+        self._write(pair_delta, self._pairs_path, batch_id)
 
     # -- reads -------------------------------------------------------------
-
-    def _read_or_empty(
-        self, spark: SparkSession, path: str, schema_str: str
-    ) -> DataFrame:
-        """Read a delta table, or a typed empty frame when the store
-        legitimately has no rows yet (no drain, or every batch wrote
-        an empty delta — dynamic-partition overwrite of an empty frame
-        creates NO files, so the directory may be absent or
-        footerless). The absence check is explicit (isdir), never a
-        broad except that would also swallow real read errors."""
-        from pyspark.sql import types as T
-
-        empty = spark.createDataFrame([], T._parse_datatype_string(schema_str))
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return empty
-        try:
-            return spark.read.schema(
-                T._parse_datatype_string(schema_str + ", _batch int")
-            ).parquet(path).drop("_batch")
-        except Exception as exc:  # pragma: no cover - footerless dir
-            # partitionBy of an all-empty delta can leave a directory
-            # with no parquet footers; an explicit schema read usually
-            # handles it, so anything else is a REAL error.
-            if "PATH_NOT_FOUND" in str(exc) or "Unable to infer" in str(exc):
-                return empty
-            raise
 
     def overlap(self, spark: SparkSession) -> DataFrame:
         """The tx22 matrix over every document seen: per source pair
@@ -213,12 +131,12 @@ class IncrementalSourceOverlap:
         never a recomputation. Before any drain (or after only
         zero-shingle batches) the matrix is legitimately EMPTY."""
         tot = (
-            self._read_or_empty(spark, self._tot_path, "source string, d long")
+            self._read_batches(spark, self._tot_path, "source string, d long")
             .groupBy("source")
             .agg(F.sum("d").cast("long").alias("n"))
         )
         shared = (
-            self._read_or_empty(
+            self._read_batches(
                 spark, self._pairs_path,
                 "src_a string, src_b string, d long",
             )

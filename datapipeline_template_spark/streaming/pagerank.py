@@ -4,19 +4,17 @@ incremental family.
 
 What is maintainable vs what is not: the EDGE LIST and the OUT-DEGREES
 are additive — a batch contributes its own (src, dst) rows and its own
-(src, deg_delta) partials, both pure functions of the batch, both
-landed in ``_batch`` partitions with the uniform marker discipline
-(crash-after-write replays rewrite identical partitions; re-drains are
-no-ops). The RANKS are NOT additive — every round's send is
-rank div deg, and a single new edge changes its source's degree and
-therefore every send that source makes, so rank mass re-routes
-globally. The honest streamable split (the IncrementalKmv/Bm25/
-retention pattern): maintain the additive graph state per batch,
-RE-RUN the fixed-depth walk on the maintained graph at read time.
-``ranks()`` therefore equals the batch operator over the union of
-drained batches at ANY drain point — bit-identical, because the walk
-is exact-integer and the merged degrees equal recomputed degrees by
-construction (sum of per-batch counts == count over the union).
+(src, deg_delta) partials, both pure functions of the batch. The RANKS
+are NOT additive — every round's send is rank div deg, and a single
+new edge changes its source's degree and therefore every send that
+source makes, so rank mass re-routes globally. The honest streamable
+split (the IncrementalKmv/Bm25/retention pattern): maintain the
+additive graph state per batch, RE-RUN the fixed-depth walk on the
+maintained graph at read time. ``ranks()`` therefore equals the batch
+operator over the union of drained batches at ANY drain point —
+bit-identical, because the walk is exact-integer and the merged
+degrees equal recomputed degrees by construction (sum of per-batch
+counts == count over the union).
 
 What the maintenance SAVES is the graph derivation, not the walk: the
 edges of ss36's mutual-kNN graph cost a kNN self-join over the whole
@@ -46,16 +44,15 @@ operators.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalPageRank"]
 
 
-class IncrementalPageRank:
+class IncrementalPageRank(BatchStore):
     """Maintains an edge store + additive degree partials for a
     growing directed graph; fixed-depth integer PageRank on demand."""
 
@@ -78,50 +75,26 @@ class IncrementalPageRank:
         self.iters = iters
         self.damping_milli = damping_milli
         self.r0 = r0
-        self._meta_path = os.path.join(store_path, "pagerank_meta.json")
-        meta = {
-            "src": src,
-            "dst": dst,
-            "iters": iters,
-            "damping_milli": damping_milli,
-            "r0": r0,
-        }
-        if os.path.exists(self._meta_path):
-            stored = json.load(open(self._meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — ranks walked under different parameters "
-                    "must never meet in one store"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(self._meta_path, "w") as f:
-                json.dump(meta, f)
+        self._edges_path = self._path("edges")
+        self._deg_path = self._path("deg")
+        self._pin(
+            "pagerank_meta.json",
+            {
+                "src": src,
+                "dst": dst,
+                "iters": iters,
+                "damping_milli": damping_milli,
+                "r0": r0,
+            },
+            "ranks walked under different parameters must never meet in "
+            "one store",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _edges_path(self) -> str:
-        return os.path.join(self.store_path, "edges")
-
-    @property
-    def _deg_path(self) -> str:
-        return os.path.join(self.store_path, "deg")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Land the batch's own edges and its own degree partials in
-        the batch's partitions. Pure function of the batch —
-        replay-idempotent under the marker discipline. NULL endpoints
-        raise (the operator's phantom-node rule, enforced at WRITE
-        time so a poisoned batch never lands)."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Land the batch's own edges and its own degree partials. Pure
+        function of the batch — replay-idempotent. NULL endpoints raise
+        (the operator's phantom-node rule, enforced at WRITE time so a
+        poisoned batch never lands)."""
 
         def _nn(c):
             return F.when(F.col(c).isNotNull(), F.col(c)).otherwise(
@@ -133,55 +106,20 @@ class IncrementalPageRank:
         e = batch.select(
             _nn(self.src).alias("_src"), _nn(self.dst).alias("_dst")
         )
-        e.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._edges_path)
+        self._write(e, self._edges_path, batch_id)
         deg = e.groupBy("_src").agg(
             F.count(F.lit(1)).cast("long").alias("deg")
         )
-        deg.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._deg_path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(deg, self._deg_path, batch_id)
 
     # -- reads -------------------------------------------------------------
-
-    def _read(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return spark.createDataFrame([], T._parse_datatype_string(schema))
-        return spark.read.schema(
-            T._parse_datatype_string(schema + ", _batch int")
-        ).parquet(path)
 
     def degrees(self, spark: SparkSession) -> DataFrame:
         """Merged out-degrees ``(_src, deg)`` — the additive partials
         summed per key; equals a degree recount over every drained
         edge by construction."""
         return (
-            self._read(spark, self._deg_path, "_src bigint, deg bigint")
+            self._read_batches(spark, self._deg_path, "_src bigint, deg bigint")
             .groupBy("_src")
             .agg(F.sum("deg").cast("long").alias("deg"))
         )
@@ -195,9 +133,9 @@ class IncrementalPageRank:
         crash-window drains)."""
         from ..operators.graph import pagerank_integer
 
-        edges = self._read(
+        edges = self._read_batches(
             spark, self._edges_path, "_src bigint, _dst bigint"
-        ).drop("_batch")
+        )
         if edges.isEmpty():
             from pyspark.sql import types as T
 

@@ -19,9 +19,7 @@ ratio drifts past budget.
 
 Under a frozen order each set's prefix is a pure function of the set
 alone, so a batch reduces to its own ``(doc, prefix-element)`` rows
-plus its ``(doc, set)`` verification arrays — both written to
-``_batch`` partitions with the uniform marker discipline
-(crash-after-write replays rewrite identical partitions). ``pairs()``
+plus its ``(doc, set)`` verification arrays. ``pairs()``
 self-joins the accumulated prefix rows and verifies against the
 stored sets: equal to the batch operator with the same frozen order
 over the union of drained batches at ANY drain point
@@ -41,16 +39,15 @@ only.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalPrefixJoin"]
 
 
-class IncrementalPrefixJoin:
+class IncrementalPrefixJoin(BatchStore):
     """Maintains a frozen-order prefix-filter index for a growing
     stream of (id: long, set: array<long>) rows; exact Jaccard ≥ t
     pairs on demand."""
@@ -68,37 +65,15 @@ class IncrementalPrefixJoin:
         self.id_col = id_col
         self.set_col = set_col
         self.t_milli = t_milli
-        self._meta_path = os.path.join(store_path, "prefix_meta.json")
-        meta = {"t_milli": t_milli, "id_col": id_col, "set_col": set_col}
-        if os.path.exists(self._meta_path):
-            stored = json.load(open(self._meta_path))
-            if {k: stored[k] for k in meta} != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — prefixes cut under different thresholds or "
-                    "columns must never meet in one index"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(self._meta_path, "w") as f:
-                json.dump(meta, f)
-
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _order_path(self) -> str:
-        return os.path.join(self.store_path, "order")
-
-    @property
-    def _prefix_path(self) -> str:
-        return os.path.join(self.store_path, "prefix")
-
-    @property
-    def _sets_path(self) -> str:
-        return os.path.join(self.store_path, "sets")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
+        self._order_path = self._path("order")
+        self._prefix_path = self._path("prefix")
+        self._sets_path = self._path("sets")
+        self._pin(
+            "prefix_meta.json",
+            {"t_milli": t_milli, "id_col": id_col, "set_col": set_col},
+            "prefixes cut under different thresholds or columns must never "
+            "meet in one index",
+        )
 
     # -- frozen order ------------------------------------------------------
 
@@ -138,7 +113,7 @@ class IncrementalPrefixJoin:
                 "join; aggregate to one (_s, _df) row per element first"
             )
         fp = self._order_fingerprint(order)
-        meta = json.load(open(self._meta_path))
+        meta = self._load_json("prefix_meta.json")
         if "order_n" in meta:
             if {k: meta[k] for k in fp} != fp:
                 raise ValueError(
@@ -151,11 +126,10 @@ class IncrementalPrefixJoin:
             self._order_path
         )
         meta.update(fp)
-        with open(self._meta_path, "w") as f:
-            json.dump(meta, f)
+        self._dump_json("prefix_meta.json", meta)
 
     def _frozen_order(self, spark: SparkSession) -> DataFrame:
-        if "order_n" not in json.load(open(self._meta_path)):
+        if "order_n" not in self._load_json("prefix_meta.json"):
             raise ValueError(
                 "no frozen order: call freeze_order(...) before draining "
                 "batches — prefixes are only comparable under ONE order"
@@ -168,63 +142,24 @@ class IncrementalPrefixJoin:
 
     # -- foreachBatch body -------------------------------------------------
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Reduce the batch to its prefix rows (under the frozen
-        order) + verification sets and land both in the batch's own
-        partitions. Pure function of (batch, frozen order) —
-        replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+        order) + verification sets. Pure function of (batch, frozen
+        order) — replay-idempotent."""
         from ..operators.dedup import prefix_rows
 
         order = self._frozen_order(batch.sparkSession)
         pref = prefix_rows(
             batch, self.id_col, self.set_col, self.t_milli, order=order
         )
-        pref.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._prefix_path)
+        self._write(pref, self._prefix_path, batch_id)
         sets = batch.select(
             F.col(self.id_col).alias("_vid"),
             F.array_distinct(F.col(self.set_col)).alias("_vset"),
         )
-        sets.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._sets_path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(sets, self._sets_path, batch_id)
 
     # -- reads -------------------------------------------------------------
-
-    def _read(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return spark.createDataFrame([], T._parse_datatype_string(schema))
-        return (
-            spark.read.schema(T._parse_datatype_string(schema + ", _batch int"))
-            .parquet(path)
-        )
 
     def pairs(self, spark: SparkSession) -> DataFrame:
         """All verified Jaccard ≥ t pairs over every drained row —
@@ -242,8 +177,8 @@ class IncrementalPrefixJoin:
         producer bug this index cannot reconcile."""
         from ..operators.dedup import verify_jaccard_candidates
 
-        pref = self._read(spark, self._prefix_path, "_id bigint, _s bigint").drop(
-            "_batch"
+        pref = self._read_batches(
+            spark, self._prefix_path, "_id bigint, _s bigint"
         ).localCheckpoint(eager=True)
         cand = (
             pref.alias("a")
@@ -252,9 +187,9 @@ class IncrementalPrefixJoin:
             .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
             .distinct()
         )
-        sets = self._read(
+        sets = self._read_batches(
             spark, self._sets_path, "_vid bigint, _vset array<bigint>"
-        ).drop("_batch").distinct()
+        ).distinct()
         return verify_jaccard_candidates(cand, sets, self.t_milli)
 
     def new_pairs(self, spark: SparkSession, batch_id: int) -> DataFrame:
@@ -263,7 +198,9 @@ class IncrementalPrefixJoin:
         re-paired against itself."""
         from ..operators.dedup import verify_jaccard_candidates
 
-        pref = self._read(spark, self._prefix_path, "_id bigint, _s bigint")
+        pref = self._read_batches(
+            spark, self._prefix_path, "_id bigint, _s bigint, _batch int"
+        )
         newp = pref.where(F.col("_batch") == batch_id).drop("_batch")
         allp = pref.drop("_batch")
         cand = (
@@ -276,7 +213,7 @@ class IncrementalPrefixJoin:
             )
             .distinct()
         )
-        sets = self._read(
+        sets = self._read_batches(
             spark, self._sets_path, "_vid bigint, _vset array<bigint>"
-        ).drop("_batch").distinct()
+        ).distinct()
         return verify_jaccard_candidates(cand, sets, self.t_milli)

@@ -15,10 +15,7 @@ Equals the batch w11 operator over the union of drained batches at
 ANY drain point (equivalence-tested, including an out-of-order drain
 that moves cohort days).
 
-Replays are marker-skip no-ops; crash-after-write replays rewrite
-identical partitions (``_batch`` dynamic-partition overwrite +
-committed markers — the uniform family contract). Column names are
-pinned in store metadata.
+Column names are pinned in store metadata.
 
 Scale: state is one (user, first_day) row per (user, batch) before
 compaction — compactable to one per user by the same min — plus the
@@ -30,16 +27,15 @@ history.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalRetention"]
 
 
-class IncrementalRetention:
+class IncrementalRetention(BatchStore):
     """Maintains first-seen days + the distinct (user, day) activity
     set for a growing event stream; the retention triangle on
     demand."""
@@ -53,98 +49,36 @@ class IncrementalRetention:
         self.store_path = store_path
         self.user_col = user_col
         self.day_col = day_col
-        meta_path = os.path.join(store_path, "retention_meta.json")
-        meta = {"user_col": user_col, "day_col": day_col}
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — rebuild into a fresh store instead"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._first_path = self._path("firstseen")
+        self._act_path = self._path("activity")
+        self._pin(
+            "retention_meta.json",
+            {"user_col": user_col, "day_col": day_col},
+            "rebuild into a fresh store instead",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _first_path(self) -> str:
-        return os.path.join(self.store_path, "firstseen")
-
-    @property
-    def _act_path(self) -> str:
-        return os.path.join(self.store_path, "activity")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Reduce the batch to its per-user min-day partial and its
-        distinct (user, day) rows; land both in the batch's own
-        partitions. Pure functions of the batch —
+        distinct (user, day) rows. Pure functions of the batch —
         replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
         rows = batch.where(F.col(self.user_col).isNotNull()).select(
             F.col(self.user_col).cast("long").alias("u"),
             F.col(self.day_col).cast("long").alias("d"),
         )
         first = rows.groupBy("u").agg(F.min("d").alias("first_d"))
-        first.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._first_path)
-        act = rows.distinct()
-        act.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._act_path)
-        self._commit(batch_id)
-        # Auto-compaction policy hook (r12 verdict #3): this family
-        # has no custom fold — the generic identity re-bag is its
+        self._write(first, self._first_path, batch_id)
+        self._write(rows.distinct(), self._act_path, batch_id)
+
+    def _after_commit(self, spark: SparkSession) -> None:
+        # No custom fold: the generic identity re-bag is this family's
         # compaction (reads are bag-merges).
         from .compaction import compact_store, maybe_auto_compact
 
         maybe_auto_compact(
-            self.store_path,
-            lambda: compact_store(batch.sparkSession, self.store_path),
+            self.store_path, lambda: compact_store(spark, self.store_path)
         )
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     # -- reads -------------------------------------------------------------
-
-    def _read(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return spark.createDataFrame([], T._parse_datatype_string(schema))
-        return (
-            spark.read.schema(T._parse_datatype_string(schema + ", _batch int"))
-            .parquet(path)
-            .drop("_batch")
-        )
 
     def triangle(self, spark: SparkSession) -> DataFrame:
         """The current retention triangle (cohort_day, age_days,
@@ -155,12 +89,12 @@ class IncrementalRetention:
         earlier and re-ages their whole activity row set. Before any
         drain the result is legitimately EMPTY."""
         first = (
-            self._read(spark, self._first_path, "u bigint, first_d bigint")
+            self._read_batches(spark, self._first_path, "u bigint, first_d bigint")
             .groupBy("u")
             .agg(F.min("first_d").alias("cohort_day"))
         )
         act = (
-            self._read(spark, self._act_path, "u bigint, d bigint")
+            self._read_batches(spark, self._act_path, "u bigint, d bigint")
             .distinct()
             .join(first, "u")
             .select(

@@ -40,18 +40,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.rollup import _FIRST_AGG, REAGG
+from .store import BatchStore
 
 __all__ = ["IncrementalRollup"]
 
 _PART = "_bucket_date"
 
 
-class IncrementalRollup:
+class IncrementalRollup(BatchStore):
     """Maintains the finest rollup level incrementally from a stream.
 
     ``measures``: out_name -> (kind, source Column) with kind one of
     sum|count|min|max (the decomposable set — same contract as
-    ``cascade_rollup``).
+    ``cascade_rollup``). The store keeps its own date-partitioned
+    layout, so only the marker and the drive come from ``BatchStore``.
     """
 
     def __init__(
@@ -101,15 +103,15 @@ class IncrementalRollup:
             )
         )
 
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
     def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
         """The foreachBatch body. Reads ONLY the store partitions the
         batch touches, merges, and dynamically overwrites just those.
         A batch_id already marked committed is skipped — replays under
-        at-least-once delivery must not fold the same rows in twice."""
-        if os.path.exists(self._marker(batch_id)):
+        at-least-once delivery must not fold the same rows in twice.
+        An empty batch lands nothing and stays unmarked: the markers
+        live inside the parquet root, and a root holding only markers
+        would not read as a table."""
+        if self._committed(batch_id):
             return
         spark = batch.sparkSession
         partials = self._partials(batch).withColumn(_PART, F.to_date("bucket"))
@@ -138,23 +140,7 @@ class IncrementalRollup:
             .partitionBy(_PART)
             .parquet(self.store_path)
         )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(
-        self, stream_df: DataFrame, checkpoint: str
-    ) -> None:
-        """Drain all pending input (AvailableNow — the reference's
-        triggered execution, R21) maintaining the store incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._commit(batch_id)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """The maintained finest-level table."""

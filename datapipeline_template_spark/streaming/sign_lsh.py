@@ -14,11 +14,9 @@ of drains the maintained pairs equal the full-corpus
 ``lsh_multi_table_pairs`` over every vector seen — a pair (a, b) is
 emitted exactly once, in the batch where its LATER member arrives.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: identical
-machinery to ``streaming/lsh.py`` — per-``_batch`` partition overwrite
-makes replays byte-idempotent, a committed-batch marker makes them
-cheap no-ops, and the "existing" read excludes the current batch id so
-a crash-after-write replay never sees its own rows as corpus.
+As in ``streaming/lsh.py``, the "existing" read excludes the current
+batch id so a crash-after-write replay never sees its own rows as
+corpus.
 
 Store layout: the vector table holds the QUANTIZED array + squared
 norm + one bucket column per table — the per-row work
@@ -35,18 +33,18 @@ instead of OOMing executors.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import cosine_prequantized, norm_sq_prequantized, quantize_vec
 from ..operators.similarity import lsh_bucket_prequantized
+from .store import BatchStore
 
 __all__ = ["IncrementalSignLsh"]
 
 
-class IncrementalSignLsh:
+class IncrementalSignLsh(BatchStore):
     """Maintains a bucketed-vector table + cosine-verified candidate
     pair table from a stream of (id, embedding) rows, one micro-batch
     at a time."""
@@ -70,19 +68,8 @@ class IncrementalSignLsh:
         self.n_tables = n_tables
         self.dim = dim
         self.broadcast_max_rows = broadcast_max_rows
-
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _vec_path(self) -> str:
-        return os.path.join(self.store_path, "vectors")
-
-    @property
-    def _pairs_path(self) -> str:
-        return os.path.join(self.store_path, "pairs")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
+        self._vec_path = self._path("vectors")
+        self._pairs_path = self._path("pairs")
 
     # -- per-row ingest work (write-once per vector) -------------------------
 
@@ -108,32 +95,19 @@ class IncrementalSignLsh:
 
     # -- foreachBatch body ---------------------------------------------------
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Bucket the batch, probe it against the stored corpus per
-        table, append (via per-batch overwrite) vectors and the
-        cosine-verified pairs touching the batch."""
-        if os.path.exists(self._marker(batch_id)):
-            return
-        spark = batch.sparkSession
+        table, land its vectors and the cosine-verified pairs touching
+        it."""
         # Eager materialization: the prepared rows feed every table's
         # probe join (both sides), the size gate, and the store write.
         new_v = self._prepare(batch).localCheckpoint(eager=True)
         n_new = new_v.count()
         if n_new == 0:
-            self._commit(batch_id)
             return
-
-        from .compaction import dataset_present
-
-        if dataset_present(self._vec_path):
-            existing = (
-                spark.read.parquet(self._vec_path)
-                # Crash-after-write replays must not see their own rows.
-                .where(F.col("_batch") != F.lit(int(batch_id)))
-                .drop("_batch")
-            )
-        else:
-            existing = spark.createDataFrame([], new_v.schema)
+        existing = self._read_prior(
+            batch.sparkSession, self._vec_path, batch_id, new_v.schema
+        )
         all_v = existing.unionByName(new_v)
         do_broadcast = n_new <= self.broadcast_max_rows
 
@@ -158,71 +132,30 @@ class IncrementalSignLsh:
         # the new×new double emission (a,b)+(b,a)→least/greatest.
         pairs = pairs.where(F.col("cosine") >= F.lit(self.threshold)).distinct()
 
-        pairs.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._pairs_path
-        )
-        new_v.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._vec_path
-        )
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives --------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining
-        the vector and pair tables incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(pairs, self._pairs_path, batch_id)
+        self._write(new_v, self._vec_path, batch_id)
 
     # -- reads ----------------------------------------------------------------
 
     def vectors(self, spark: SparkSession) -> DataFrame:
-        """All maintained (id, _qv, _n, buckets) rows. Finishes any
-        compaction swap a crash left pending before reading."""
-        from .compaction import dataset_present
-
-        dataset_present(self._vec_path)
-        return spark.read.parquet(self._vec_path).drop("_batch")
+        """All maintained (id, _qv, _n, buckets) rows."""
+        return self._read_batches(spark, self._vec_path)
 
     def pairs(self, spark: SparkSession) -> DataFrame:
         """All maintained cosine-verified pairs (id_a < id_b),
         distinct across batches by the exactly-once emission
-        contract.
-
-        Empty-store handling is gated on directory EXISTENCE (the same
-        probe ``process_batch`` uses for the vector store), never a
-        broad ``except`` — a corrupt store or permission error must
-        surface, not read as "no pairs yet". When no batch has ever
-        drained, the id type is taken from the vector store if one
-        exists; with the store entirely empty the documented default is
-        ``bigint`` (the engine's id convention)."""
-        from pyspark.sql import types as T
-
+        contract. Ids are typed like the vector store's; with the
+        store entirely empty the documented default is ``bigint``
+        (the engine's id convention)."""
         from .compaction import dataset_present
 
-        if dataset_present(self._pairs_path):
-            return spark.read.parquet(self._pairs_path).select("id_a", "id_b")
         idt = (
             self.vectors(spark).schema["_id"].dataType
             if dataset_present(self._vec_path)
             else T.LongType()
         )
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [T.StructField("id_a", idt), T.StructField("id_b", idt)]
-            ),
+        return self._read_batches(
+            spark,
+            self._pairs_path,
+            T.StructType([T.StructField("id_a", idt), T.StructField("id_b", idt)]),
         )

@@ -20,10 +20,9 @@ honest contract for a score that by definition shifts as the corpus
 grows: maintained state makes the refresh a join, not a recompute.
 ``bands()`` applies tx23's pinned thresholds on top.
 
-Every per-batch artifact is a pure function of the batch alone (the
-streaming/kmv.py discipline — no store reads), so a crash-after-write
-replay rewrites identical partitions; ``_batch`` dynamic-partition
-overwrite + committed markers keep the family contract uniform.
+Every per-batch artifact is a pure function of the batch alone (no
+store reads), so a crash-after-write replay rewrites identical
+partitions.
 
 Scale: counts state is the vocabulary (bounded, Zipf); doctok state is
 the corpus's per-doc token multiset — the same cardinality the batch
@@ -33,15 +32,15 @@ score refresh is two w-keyed equi-joins + one doc-keyed aggregate.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalSurprisal"]
 
 
-class IncrementalSurprisal:
+class IncrementalSurprisal(BatchStore):
     """Maintains the unigram LM and per-doc token profiles for a
     growing (id, text) document stream; scores/bands on demand."""
 
@@ -54,31 +53,13 @@ class IncrementalSurprisal:
         self.store_path = store_path
         self.id_col = id_col
         self.text_col = text_col
+        self._counts_path = self._path("counts")
+        self._tot_path = self._path("tot")
+        self._doctok_path = self._path("doctok")
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _counts_path(self) -> str:
-        return os.path.join(self.store_path, "counts")
-
-    @property
-    def _tot_path(self) -> str:
-        return os.path.join(self.store_path, "tot")
-
-    @property
-    def _doctok_path(self) -> str:
-        return os.path.join(self.store_path, "doctok")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
         """Tokenize the batch ONCE and land its three additive
         artifacts. Pure function of the batch — replay-idempotent."""
-        if os.path.exists(self._marker(batch_id)):
-            return
         from ..operators.text import tokenize
 
         tok = batch.select(
@@ -91,55 +72,16 @@ class IncrementalSurprisal:
         # counts/tot derive from doctok so the batch tokenizes once.
         counts = doctok.groupBy("w").agg(F.sum("n").cast("long").alias("c"))
         tot = doctok.agg(F.sum("n").cast("long").alias("t"))
-        for df, path in (
-            (doctok, self._doctok_path),
-            (counts, self._counts_path),
-            (tot, self._tot_path),
-        ):
-            df.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "_batch"
-            ).parquet(path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(doctok, self._doctok_path, batch_id)
+        self._write(counts, self._counts_path, batch_id)
+        self._write(tot, self._tot_path, batch_id)
 
     # -- reads -------------------------------------------------------------
-
-    def _read(self, spark: SparkSession, path: str, schema_str: str) -> DataFrame:
-        from pyspark.sql import types as T
-
-        empty = spark.createDataFrame([], T._parse_datatype_string(schema_str))
-        from .compaction import dataset_present
-
-        if not dataset_present(path):
-            return empty
-        return (
-            spark.read.schema(
-                T._parse_datatype_string(schema_str + ", _batch int")
-            )
-            .parquet(path)
-            .drop("_batch")
-        )
 
     def lm(self, spark: SparkSession) -> DataFrame:
         """The current unigram LM: summed (w, c) deltas."""
         return (
-            self._read(spark, self._counts_path, "w string, c long")
+            self._read_batches(spark, self._counts_path, "w string, c long")
             .groupBy("w")
             .agg(F.sum("c").cast("long").alias("c"))
         )
@@ -152,11 +94,11 @@ class IncrementalSurprisal:
         is ever re-tokenized."""
         from ..functions import milli_log2
 
-        doctok = self._read(
+        doctok = self._read_batches(
             spark, self._doctok_path, "doc_id long, w string, n long"
         )
         tot = (
-            self._read(spark, self._tot_path, "t long")
+            self._read_batches(spark, self._tot_path, "t long")
             .agg(F.sum("t").cast("long").alias("t"))
         )
         surp = self.lm(spark).crossJoin(F.broadcast(tot)).select(

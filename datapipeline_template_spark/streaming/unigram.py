@@ -5,34 +5,27 @@ model: WORD COUNTS are pure additive functions of each micro-batch
 trained model is NOT patchable — one count change can reroute every
 Viterbi path and with it every downstream recount, exactly as a BPE
 count change can reorder every later merge argmax. So the maintainer
-accumulates per-batch word-count partitions under the family's
-exactly-once discipline, and ``train()`` re-runs the deterministic
+accumulates per-batch word-count partitions, and ``train()`` re-runs the deterministic
 hard-EM loop (operators/text.unigram_train) on the COMPACT merged
 vocabulary on demand — the saving is the corpus scan, which never
 repeats; the re-run touches only the distinct-word table.
 
-Exactly-once under at-least-once ``foreachBatch`` delivery: per-batch
-dynamic-partition overwrite makes replays byte-idempotent, and a
-committed-batch marker makes them cheap no-ops (the uniform family
-contract). Training hyperparameters (lmax / rounds / vocab_size) are
+Training hyperparameters (lmax / rounds / vocab_size) are
 pinned in store metadata so a store trained at one configuration can
 never silently serve another (the IncrementalBm25 prune-ratio lesson).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .kmeans import _has_parquet_files
+from .store import BatchStore
 
 __all__ = ["IncrementalUnigramLm"]
 
 
-class IncrementalUnigramLm:
+class IncrementalUnigramLm(BatchStore):
     """Maintains the lowercase-alpha word-frequency table from a
     stream of (id, text) rows and trains the unigram-LM tokenizer
     from the maintained vocabulary on demand."""
@@ -56,43 +49,22 @@ class IncrementalUnigramLm:
         self.lmax = UNIGRAM_LMAX if lmax is None else int(lmax)
         self.rounds = UNIGRAM_ROUNDS if rounds is None else int(rounds)
         self.vocab_size = UNIGRAM_VOCAB if vocab_size is None else int(vocab_size)
-        meta_path = os.path.join(store_path, "unigram_meta.json")
-        meta = {
-            "text_col": text_col,
-            "lmax": self.lmax,
-            "rounds": self.rounds,
-            "vocab_size": self.vocab_size,
-        }
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; got "
-                    f"{meta} — vocabularies under different tokenizer "
-                    "configurations must never merge (rebuild a fresh store)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._counts_path = self._path("word_counts")
+        self._pin(
+            "unigram_meta.json",
+            {
+                "text_col": text_col,
+                "lmax": self.lmax,
+                "rounds": self.rounds,
+                "vocab_size": self.vocab_size,
+            },
+            "vocabularies under different tokenizer configurations must "
+            "never merge (rebuild a fresh store)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _counts_path(self) -> str:
-        return os.path.join(self.store_path, "word_counts")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Reduce the batch to its (word, freq) delta and land it in
-        the batch's own partition — a pure function of the batch, so
-        crash-window replays rewrite identical bytes."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Reduce the batch to its (word, freq) delta — a pure function
+        of the batch, so crash-window replays rewrite identical bytes."""
         counts = (
             batch.select(
                 F.explode(
@@ -106,47 +78,18 @@ class IncrementalUnigramLm:
             .groupBy("word")
             .agg(F.count(F.lit(1)).cast("long").alias("freq"))
         )
-        counts.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("_batch").parquet(
-            self._counts_path
-        )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(counts, self._counts_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def word_counts(self, spark: SparkSession) -> DataFrame:
         """(word, freq) over everything drained — per-batch partials
         are additive, so the read is one aggregate, never a
-        read-modify-write. File-presence gated (family convention)."""
-        from pyspark.sql import types as T
-
-        if _has_parquet_files(self._counts_path):
-            return (
-                spark.read.parquet(self._counts_path)
-                .groupBy("word")
-                .agg(F.sum("freq").cast("long").alias("freq"))
-            )
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("word", T.StringType()),
-                    T.StructField("freq", T.LongType()),
-                ]
-            ),
+        read-modify-write."""
+        return (
+            self._read_batches(spark, self._counts_path, "word string, freq bigint")
+            .groupBy("word")
+            .agg(F.sum("freq").cast("long").alias("freq"))
         )
 
     def train(

@@ -16,14 +16,12 @@ portable and oracle-checkable rather than seed-and-state-bound.
 
 Like streaming/kmv.py, a batch's partial is a pure function of the
 batch alone — a crash-after-write replay rewrites the identical
-partition, idempotent even before the marker lands; the ``_batch``
-dynamic-partition overwrite + committed markers keep the uniform
-family contract anyway. The read-side merge additionally applies
-DISTINCT over the bounded partial rows: a key re-sent with the same
-weight (at-least-once delivery upstream of the marker discipline)
-collapses to its identical race row instead of occupying two of the
-k slots. A key re-sent with a DIFFERENT weight is a caller contract
-violation — the race is a pure function, there is no
+partition, idempotent even before the marker lands. The read-side
+merge additionally applies DISTINCT over the bounded partial rows: a
+key re-sent with the same weight (at-least-once delivery upstream of
+the marker discipline) collapses to its identical race row instead of
+occupying two of the k slots. A key re-sent with a DIFFERENT weight is
+a caller contract violation — the race is a pure function, there is no
 last-write-wins; fix the upstream key.
 
 Parameter guard: (k, key_col, weight_col, stratum_col) are pinned in
@@ -39,16 +37,15 @@ aggregation.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .store import BatchStore
 
 __all__ = ["IncrementalWeightedSample"]
 
 
-class IncrementalWeightedSample:
+class IncrementalWeightedSample(BatchStore):
     """Maintains per-stratum Efraimidis–Spirakis weighted samples for
     a growing stream of (stratum: string, key: long, weight: long)
     rows."""
@@ -68,44 +65,23 @@ class IncrementalWeightedSample:
         self.weight_col = weight_col
         self.stratum_col = stratum_col
         self.k = k
-        meta_path = os.path.join(store_path, "wsample_meta.json")
-        meta = {
-            "k": k,
-            "key_col": key_col,
-            "weight_col": weight_col,
-            "stratum_col": stratum_col,
-        }
-        if os.path.exists(meta_path):
-            stored = json.load(open(meta_path))
-            if stored != meta:
-                raise ValueError(
-                    f"store at {store_path} was built with {stored}; "
-                    f"got {meta} — winner sets raced under different "
-                    "weights or strata must never merge (rebuild into a "
-                    "fresh store instead)"
-                )
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
+        self._parts_path = self._path("partials")
+        self._pin(
+            "wsample_meta.json",
+            {
+                "k": k,
+                "key_col": key_col,
+                "weight_col": weight_col,
+                "stratum_col": stratum_col,
+            },
+            "winner sets raced under different weights or strata must never "
+            "merge (rebuild into a fresh store instead)",
+        )
 
-    # -- store layout ------------------------------------------------------
-
-    @property
-    def _parts_path(self) -> str:
-        return os.path.join(self.store_path, "partials")
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.store_path, "_commits", str(batch_id))
-
-    # -- foreachBatch body -------------------------------------------------
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Reduce the batch to ≤ k winner rows per touched stratum and
-        land them in the batch's own partition. Pure function of the
-        batch — replay-idempotent by construction."""
-        if os.path.exists(self._marker(batch_id)):
-            return
+    def _land(self, batch: DataFrame, batch_id: int) -> None:
+        """Reduce the batch to ≤ k winner rows per touched stratum.
+        Pure function of the batch — replay-idempotent by
+        construction."""
         from pyspark.sql import types as T
 
         from ..operators.sampling import weighted_sample_topk
@@ -127,47 +103,16 @@ class IncrementalWeightedSample:
             k=self.k,
             stratum_cols=self.stratum_col,
         ).drop("rk")
-        part.withColumn("_batch", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "_batch"
-        ).parquet(self._parts_path)
-        self._commit(batch_id)
-
-    def _commit(self, batch_id: int) -> None:
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        open(self._marker(batch_id), "w").close()
-
-    # -- drives ------------------------------------------------------------
-
-    def run_available_now(self, stream_df: DataFrame, checkpoint: str) -> None:
-        """Drain all pending input (AvailableNow, R21), maintaining the
-        per-stratum winner sets incrementally."""
-        q = (
-            stream_df.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._write(part, self._parts_path, batch_id)
 
     # -- reads -------------------------------------------------------------
 
     def _read_partials(self, spark: SparkSession) -> DataFrame:
-        from pyspark.sql import types as T
-
-        cols = (
+        return self._read_batches(
+            spark,
+            self._parts_path,
             f"{self.stratum_col} string, {self.key_col} bigint, "
-            f"{self.weight_col} bigint, race bigint"
-        )
-        from .compaction import dataset_present
-
-        if not dataset_present(self._parts_path):
-            return spark.createDataFrame([], T._parse_datatype_string(cols))
-        return (
-            spark.read.schema(T._parse_datatype_string(cols + ", _batch int"))
-            .parquet(self._parts_path)
-            .drop("_batch")
+            f"{self.weight_col} bigint, race bigint",
         )
 
     def sample(self, spark: SparkSession) -> DataFrame:
