@@ -155,7 +155,6 @@ class IncrementalSilver:
             if tb in bronze.columns and tb not in order_cols:
                 order_cols.append(tb)
 
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         hwm = self._load_hwm()
         table_exists = spark.catalog.tableExists(self.silver_fqn)
 
@@ -210,6 +209,15 @@ class IncrementalSilver:
                 present = {
                     r[0] for r in rebuilt.select(BUCKET_COL).distinct().collect()
                 }
+            # Dynamic overwrite as a TABLE setting, not a session conf:
+            # flows share the session (and run concurrently), and
+            # insertInto ignores the writer option of the same name.
+            # Set on every run, so tables bootstrapped without it (or
+            # rebuilt by a bootstrap) are covered.
+            spark.sql(
+                f"ALTER TABLE {self.silver_fqn} "
+                "SET SERDEPROPERTIES ('partitionOverwriteMode'='dynamic')"
+            )
             (
                 rebuilt.select(*table_cols)
                 .write.mode("overwrite")

@@ -22,6 +22,12 @@ Scale notes:
   max_by partial aggregation so CDC duplicates collapse map-side.
 - full_refresh drops checkpoints + tables and rebuilds (R22,
   `sdp_job.job.yml:10`).
+- each entity's bronze → silver chain is independent of the others',
+  so `run` schedules the flows on up to `defaultParallelism` driver
+  threads (`Dag.run`): silver starts once its own bronze returns, and
+  the `_active` views run last. Flows share one session, so none may
+  set a session conf. One run still owns each checkpoint: two
+  concurrent `run`s over the same checkpoint root are not supported.
 """
 
 from __future__ import annotations
@@ -331,7 +337,7 @@ class Pipeline:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         if full_refresh:
             self._full_refresh()
-        self.dag().run()
+        self.dag().run(workers=self.spark.sparkContext.defaultParallelism)
 
     def _full_refresh(self) -> None:
         """R22: drop checkpoints + tables, reprocess from scratch.

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -293,6 +296,142 @@ def test_dag_topo_and_cycle(spark):
     bad.add(Dataset("y", lambda: None, deps=("x",)))
     with pytest.raises(ValueError, match="cycle"):
         bad.topo_order()
+
+
+def test_dag_runs_independent_nodes_concurrently():
+    """Two independent nodes each wait for the other at one barrier:
+    only a scheduler that runs them at once gets both past it."""
+    barrier = threading.Barrier(2, timeout=10)
+    dag = Dag()
+    dag.add(Dataset("a", barrier.wait))
+    dag.add(Dataset("b", barrier.wait))
+    assert sorted(dag.run(workers=2).values()) == [0, 1]
+
+
+def test_dag_node_starts_after_all_its_deps():
+    """A node starts once every one of its own deps has returned, not
+    when its whole topological level has: ``after_fast`` runs while
+    its level-0 peer ``slow`` is still waiting for it."""
+    events = []
+    lock = threading.Lock()
+    after_fast_ran = threading.Event()
+
+    def node(name, body=lambda: None):
+        def build():
+            with lock:
+                events.append(("start", name))
+            out = body()
+            with lock:
+                events.append(("end", name))
+            return out
+
+        return build
+
+    dag = Dag()
+    dag.add(Dataset("slow", node("slow", lambda: after_fast_ran.wait(10))))
+    dag.add(Dataset("fast", node("fast")))
+    dag.add(Dataset("after_fast", node("after_fast", after_fast_ran.set), deps=("fast",)))
+    dag.add(Dataset("join", node("join"), deps=("slow", "after_fast")))
+    out = dag.run(workers=4)
+
+    assert out["slow"] is True  # did not time out
+    assert list(out) == [d.name for d in dag.topo_order()]
+    pos = {ev: i for i, ev in enumerate(events)}
+    for d in dag.nodes.values():
+        for dep in d.deps:
+            assert pos[("end", dep)] < pos[("start", d.name)], (dep, d.name)
+
+
+def test_dag_failure_stops_new_nodes_and_reraises():
+    """A failing node: its dependent never starts, an in-flight sibling
+    completes, nothing starts after the failure, and the caller gets
+    the original exception."""
+    events = []
+    failed = threading.Event()
+
+    def boom():
+        events.append("bad")
+        failed.set()
+        raise ValueError("boom")
+
+    def sibling():
+        assert failed.wait(10)
+        time.sleep(0.2)
+        events.append("sibling")
+
+    dag = Dag()
+    dag.add(Dataset("bad", boom))
+    dag.add(Dataset("sibling", sibling))
+    dag.add(Dataset("child", lambda: events.append("child"), deps=("bad",)))
+    dag.add(Dataset("after_sibling", lambda: events.append("after_sibling"), deps=("sibling",)))
+    with pytest.raises(ValueError, match="boom") as exc:
+        dag.run(workers=2)
+    assert type(exc.value) is ValueError
+    assert events == ["bad", "sibling"]
+
+
+def test_dag_nodes_inherit_caller_job_group(spark):
+    """Pool threads see the caller's job group (pinned-thread mode does
+    not inherit local properties by itself)."""
+    sc = spark.sparkContext
+
+    def probe():
+        return threading.current_thread() is threading.main_thread(), sc.getLocalProperty(
+            "spark.jobGroup.id"
+        )
+
+    dag = Dag()
+    dag.add(Dataset("a", probe))
+    dag.add(Dataset("b", probe, deps=("a",)))
+    sc.setJobGroup("caller", "dag context test")
+    try:
+        out = dag.run(workers=2)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert out == {"a": (False, "caller"), "b": (False, "caller")}
+
+
+def test_dag_single_worker_runs_in_topo_order():
+    order = []
+    dag = Dag()
+    for name, deps in (("a", ()), ("b", ("a",)), ("c", ()), ("d", ("b", "c")), ("e", ("c",))):
+        dag.add(Dataset(name, lambda name=name: order.append(name), deps=deps))
+    out = dag.run(workers=1)
+    topo = [d.name for d in dag.topo_order()]
+    assert topo == ["a", "c", "b", "e", "d"]
+    assert order == topo and list(out) == topo
+
+
+def test_dag_stress_many_nodes_more_workers_than_cores():
+    """A random 300-node graph on 16 threads with a tiny switch
+    interval: every node runs once, after all of its deps."""
+    import random
+    import sys
+
+    rng = random.Random(7)
+    names = [f"n{i}" for i in range(300)]
+    lock = threading.Lock()
+    finished: list[str] = []
+
+    def build(name):
+        with lock:
+            done = set(finished)
+        assert all(dep in done for dep in dag.nodes[name].deps), name
+        with lock:
+            finished.append(name)
+
+    dag = Dag()
+    for i, name in enumerate(names):
+        deps = tuple(rng.sample(names[:i], k=min(i, rng.randint(0, 3))))
+        dag.add(Dataset(name, lambda name=name: build(name), deps=deps))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = dag.run(workers=16)
+    finally:
+        sys.setswitchinterval(old)
+    assert sorted(finished) == sorted(names) and len(out) == len(names)
 
 
 def test_connected_components_known_graphs(spark):

@@ -215,6 +215,27 @@ def test_pipeline_incremental_silver_mode(spark, pipeline_env, tmp_path):
     assert "_pk_bucket" in silver.columns  # bucket partitioning visible
 
 
+def test_incremental_silver_leaves_session_conf_alone(spark, pipeline_env, tmp_path):
+    """Incremental silver asks for dynamic partition overwrite on its
+    own table, so the shared session's conf is the same after two runs
+    and untouched buckets survive the second run's overwrite."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    params, entity, entity_dir, _ = pipeline_env
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    pipe = Pipeline(
+        spark, params, [entity], checkpoint_root=str(tmp_path / "ckpt"),
+        silver_mode="incremental", n_buckets=4,
+    )
+    _write_batch(spark, entity_dir, _fixture_rows_v1())
+    pipe.run()
+    _write_batch(spark, entity_dir, _fixture_rows_v2())
+    pipe.run()
+    assert spark.conf.get(key) == before
+    silver = spark.read.table("t_silver.silver_app_downloads")
+    assert {r["id"] for r in silver.collect()} == {1, 3, 6}
+
+
 def test_full_refresh_cleans_external_location(spark, tmp_path):
     import datetime as dt
 
@@ -377,6 +398,87 @@ def test_multi_entity_pipeline(spark, tmp_path):
     assert len(users) == 1 and users[0]["platform"] == "y"  # latest wins
     items = spark.read.table("m_silver.silver_items").collect()
     assert len(items) == 1 and items[0]["id"] == 9
+
+
+ORDERS_SCHEMA = T.StructType(
+    [
+        T.StructField("store", T.StringType()),
+        T.StructField("id", T.LongType()),
+        T.StructField("op", T.StringType()),
+        T.StructField("amount", T.IntegerType()),
+    ]
+)
+
+
+def test_concurrent_streaming_pipeline_matches_sequential(spark, tmp_path):
+    """``Pipeline.run()`` overlaps every entity's streaming bronze →
+    silver chain in one session. Over two triggered runs, with one CDC
+    file landed per entity in between, its silver tables and
+    ``_active`` views hold the same rows as the same pipeline run one
+    node at a time (``dag().run(workers=1)``) in its own databases and
+    checkpoints."""
+    src = tmp_path / "raw"
+    for name in ("users", "clicks", "orders"):
+        (src / name).mkdir(parents=True)
+
+    def land(users, clicks, orders):
+        _write_batch(spark, str(src / "users"), users)
+        spark.createDataFrame(clicks, SCHEMA).coalesce(1).write.mode("append").json(
+            str(src / "clicks"))
+        spark.createDataFrame(orders, ORDERS_SCHEMA).coalesce(1).write.mode("append").parquet(
+            str(src / "orders"))
+
+    entities = [
+        EntityConfig(
+            name="users",
+            unique_primary_key=["id"],
+            renamed_columns={"platform": "client_platform"},
+            expect_all_or_drop={"has_timestamp": "created_at IS NOT NULL"},
+        ),
+        EntityConfig(name="clicks", raw_file_format="json", unique_primary_key=["id"]),
+        EntityConfig(name="orders", unique_primary_key=["store", "id"]),
+    ]
+    pipes = {}
+    for catalog in ("cc", "cs"):
+        for layer in ("bronze", "silver", "silver_active"):
+            spark.sql(f"DROP DATABASE IF EXISTS {catalog}_{layer} CASCADE")
+        params = PipelineParams(source_location=str(src), catalog=catalog, soft_deletes="Y")
+        pipes[catalog] = Pipeline(
+            spark, params, entities, checkpoint_root=str(tmp_path / f"ckpt_{catalog}"))
+    for db in ("cs_bronze", "cs_silver"):
+        spark.sql(f"CREATE DATABASE {db}")
+
+    def run_both():
+        pipes["cc"].run()
+        pipes["cs"].dag().run(workers=1)
+
+    land(
+        _fixture_rows_v1(),
+        _fixture_rows_v1(),
+        [Row(store="s1", id=1, op="I", amount=10), Row(store="s2", id=1, op="I", amount=20),
+         Row(store="s1", id=2, op="I", amount=30)],
+    )
+    run_both()
+    land(
+        _fixture_rows_v2(),
+        _fixture_rows_v2(),
+        [Row(store="s1", id=1, op="U", amount=11), Row(store="s2", id=1, op="D", amount=20),
+         Row(store="s2", id=2, op="I", amount=40)],
+    )
+    run_both()
+
+    def rows(table):
+        df = spark.read.table(table).drop("_ingested_at")
+        return sorted(df.collect(), key=repr)
+
+    for e in ("users", "clicks", "orders"):
+        silver = rows(f"cc_silver.silver_{e}")
+        assert silver and silver == rows(f"cs_silver.silver_{e}"), e
+        active = rows(f"cc_silver_active.silver_{e}_active")
+        assert active and active == rows(f"cs_silver_active.silver_{e}_active"), e
+    orders = {(r["store"], r["id"]): r["amount"] for r in rows("cc_silver.silver_orders")}
+    assert orders == {("s1", 1): 11, ("s2", 1): 20, ("s1", 2): 30, ("s2", 2): 40}
+    assert len(rows("cc_silver_active.silver_orders_active")) == 3
 
 
 @pytest.mark.slow
