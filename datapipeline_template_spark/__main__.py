@@ -10,8 +10,8 @@ Usage (mirrors the reference's `databricks bundle run` + parameters,
         [--soft-deletes N] [--external-location ...] \\
         [--batch] [--full-refresh]
 
-Every flag is also readable from spark.conf (the reference's parameter
-transport) — CLI flags win.
+The run flags fill a ``config.PipelineParams``; ``spark.conf`` (the
+reference's parameter transport) is not read for them.
 """
 
 from __future__ import annotations

@@ -15,7 +15,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["TABLES", "table", "register_views", "default_sf_dir"]
+__all__ = ["TABLES", "table", "register_views"]
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -29,10 +29,6 @@ TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -12,11 +12,14 @@ recognizes (`/root/reference/README.md:92-101`):
   (`README.md:100`); implemented here as {old: new}
 - ``expect_all_or_drop``— {rule_name: SQL bool expr} (`02:94-95`)
 
-Pipeline-level parameters flow through ``spark.conf`` exactly like the
-reference (`00_config_loader.py:25-31`,
-`sdp_pipeline.pipeline.yml:22-29`): source_location, catalog,
-bronze_database, silver_database, soft_deletes,
-deleted_file_retention_duration, external_location.
+Pipeline-level parameters (source_location, catalog, bronze_database,
+silver_database, soft_deletes, deleted_file_retention_duration,
+external_location) are the fields of ``PipelineParams``. The reference
+reads the same keys from ``spark.conf`` (`00_config_loader.py:25-31`,
+`sdp_pipeline.pipeline.yml:22-29`); here the CLI fills them from its
+``run`` flags (``__main__``; a field without a flag keeps its default)
+or a caller builds a ``PipelineParams`` in Python — the "params
+dataclass" mapping of SURVEY.md's pipeline parameters.
 
 The config file itself is read THROUGH Spark (``spark.read.text`` →
 driver-side json.loads, `00_config_loader.py:36-40`) so the same code
@@ -30,19 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
-__all__ = ["EntityConfig", "PipelineParams", "load_config", "load_params"]
-
-_PARAM_DEFAULTS = {
-    "source_location": "",
-    "catalog": "engine",
-    "bronze_database": "bronze",
-    "silver_database": "silver",
-    "soft_deletes": "N",
-    "deleted_file_retention_duration": "interval 14 days",
-    "external_location": "",
-    "config_file_name": "dp_config_template.json",
-    "dedup_order_columns": "_ingested_at",
-}
+__all__ = ["EntityConfig", "PipelineParams", "load_config"]
 
 
 @dataclass
@@ -108,21 +99,6 @@ class PipelineParams:
     @property
     def silver_db(self) -> str:
         return f"{self.catalog}_{self.silver_database}"
-
-
-def load_params(spark: SparkSession, overrides: dict[str, str] | None = None) -> PipelineParams:
-    """Read pipeline parameters from spark.conf (the reference's
-    transport, `00_config_loader.py:25-31`), with overrides winning."""
-    vals = {}
-    for key, default in _PARAM_DEFAULTS.items():
-        try:
-            vals[key] = spark.conf.get(key, default)
-        except Exception:
-            vals[key] = default
-    if overrides:
-        vals.update(overrides)
-    vals.pop("dedup_order_columns", None)
-    return PipelineParams(**vals)
 
 
 def load_config(spark: SparkSession, config_path: str) -> list[EntityConfig]:

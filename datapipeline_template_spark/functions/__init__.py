@@ -7,9 +7,10 @@ driver hash-compares our results against a DuckDB oracle):
 
 1. **Integer-cents arithmetic** for money aggregates: doubles carry
    float noise and their sums depend on reduction order, so we round
-   each value to an exact int64 at a fixed scale (`cents`, `bp`) and
-   sum integers — associative, order-independent, identical in any
-   engine. Divide back to a double only once at the end.
+   each value to an exact int64 at a fixed scale (`cents`; scale 10000
+   for basis-point columns) and sum integers — associative,
+   order-independent, identical in any engine. Divide back to a double
+   only once at the end.
 2. **Polynomial rolling hash** for text hashing: expressible in plain
    SQL in both Spark and DuckDB, unlike engine-specific hash functions
    (xxhash64 etc. don't line up across engines).
@@ -22,8 +23,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "cents",
-    "scaled_long",
-    "unscale",
     "poly_hash",
     "token_poly_hash",
     "quantized_dot",
@@ -48,16 +47,6 @@ def cents(col: Column | str, scale: int = 100) -> Column:
     """Exact integer representation of a ~2-decimal double: round(x*scale)::long."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * F.lit(scale)).cast("long")
-
-
-# Alias with explicit scale for basis-point columns (discount/tax).
-def scaled_long(col: Column | str, scale: int) -> Column:
-    return cents(col, scale)
-
-
-def unscale(col: Column, scale: int) -> Column:
-    """Back to double after exact integer aggregation."""
-    return (col.cast("double") / F.lit(float(scale)))
 
 
 def poly_hash(str_col: Column | str, p: int = POLY_P, base: int = POLY_BASE) -> Column:

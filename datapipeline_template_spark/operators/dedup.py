@@ -1374,8 +1374,8 @@ def prefix_rows(
     """Each set's PREFIX under the rarity order, as ``(_id, _s)``
     rows: elements ranked by (document frequency asc, value asc), the
     first |x| − ceil(t·|x|) + 1 kept. This is the per-set half of the
-    prefix filter — a pure function of the set and the ORDER, which
-    is what makes it streamable (streaming/prefix_join.py).
+    prefix filter — a pure function of the set and the ORDER, so under
+    a frozen order a set's prefix never changes as more sets arrive.
 
     ``order`` (columns ``_s``, ``_df``) pins a FROZEN frequency
     frame; elements absent from it default to df 0 (rarest). The

@@ -53,7 +53,6 @@ __all__ = [
     "rademacher_signs",
     "signed_permutation",
     "rademacher_project",
-    "rademacher_project_kernel",
     "sq_dim_stats",
     "sq_encode",
     "tables_for_recall",
@@ -1039,37 +1038,3 @@ def rademacher_project(
         for row in signs
     ]
     return qv_df.withColumn("pv", F.array(*coords)).drop(vec_col)
-
-
-def rademacher_project_kernel(
-    qv_df: DataFrame, out_dim: int, in_dim: int, vec_col: str = "_qv"
-) -> DataFrame:
-    """Arrow twin of rademacher_project: one int64 matmul per batch
-    (numpy never leaves exact integer arithmetic at these magnitudes,
-    so the outputs are BIT-EQUAL to the Catalyst form — test-pinned,
-    the dd05/lsh_buckets_kernel precedent). The fast path when the
-    encode pass itself dominates (out_dim·in_dim multiply-adds per row
-    beat interpreted HOF lambdas by the usual Arrow margin)."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    sgn = np.array(rademacher_signs(in_dim, out_dim), dtype=np.int64).T
-
-    keep = [f for f in qv_df.schema.fields if f.name != vec_col]
-    out_schema = T.StructType(
-        keep + [T.StructField("pv", T.ArrayType(T.LongType()))]
-    )
-    keep_names = [f.name for f in keep]
-
-    def project(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.int64)
-            out = pdf[keep_names].copy()
-            out["pv"] = list(m @ sgn)
-            yield out
-
-    return qv_df.mapInPandas(project, schema=out_schema)

@@ -11,10 +11,7 @@ rational arithmetic) so the DuckDB oracle can replay them bit-for-bit.
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — module scope so pandas_udf type
-# hints ('pd.Series') resolve at decoration time (the queries/text.py
-# and operators/similarity.py pattern; a function-local import makes
-# pandas_udf raise UNSUPPORTED_SIGNATURE).
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -23,7 +20,6 @@ from ..functions import poly_hash
 __all__ = [
     "tokenize",
     "token_count",
-    "poly_hash_kernel",
     "bigram_hash_rows_kernel",
     "quality_score",
     "language_id",
@@ -1254,73 +1250,24 @@ def grouped_median_mad(
     )
 
 
-def poly_hash_kernel(col: Column | str) -> Column:
-    """Arrow-batched numpy twin of ``functions.poly_hash`` — bit-equal
-    (parity test-pinned, incl. non-ASCII and NULL/empty rows), for the
-    per-OCCURRENCE volume sites (q47 hashes every bigram occurrence in
-    the corpus; the Catalyst form folds an interpreted HOF over every
-    character of every row — the dominant cost of that pass, measured).
-
-    Vectorization shape (the minhash_signatures_kernel precedent): the
-    batch decodes to UTF-32-LE so the buffer is exactly one uint32 code
-    point per character (the JVM form hashes code points — F.ascii =
-    codePointAt), then the polynomial fold runs as a masked column
-    sweep over (rows × max_len): acc = (acc·131 + cp) mod p per column.
-    Every intermediate ≤ p·131 + 2^21 < 2^38, exact in int64. NULL in →
-    NULL out (the Catalyst form's split(NULL) propagation); empty
-    string → 0 (the fold's init).
-    """
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-    import numpy as np
-
-    from ..functions import POLY_BASE, POLY_P
-
-    @pandas_udf(T.LongType())
-    def _ph(s: pd.Series) -> pd.Series:
-        out = np.zeros(len(s), dtype=np.float64)  # via object at the end
-        res = pd.Series([None] * len(s), dtype="object")
-        mask = s.notna().to_numpy()
-        vals = s[mask]
-        if len(vals):
-            encs = [x.encode("utf-32-le") for x in vals]
-            lens = np.fromiter((len(e) >> 2 for e in encs), dtype=np.int64)
-            if lens.sum():
-                buf = np.frombuffer(b"".join(encs), dtype=np.uint32).astype(
-                    np.int64
-                )
-            else:
-                buf = np.zeros(0, dtype=np.int64)
-            off = np.zeros(len(encs), dtype=np.int64)
-            np.cumsum(lens[:-1], out=off[1:])
-            acc = np.zeros(len(encs), dtype=np.int64)
-            mlen = int(lens.max()) if len(lens) else 0
-            for j in range(mlen):
-                live = lens > j
-                acc[live] = (acc[live] * POLY_BASE + buf[off[live] + j]) % POLY_P
-            res[mask] = acc
-        return res.astype("object")
-
-    c = F.col(col) if isinstance(col, str) else col
-    return _ph(c)
-
-
 def bigram_hash_rows_kernel(
     df: DataFrame, text_col: str, out_cols: tuple[str, str] = ("bigram", "h")
-) -> Column:
+) -> DataFrame:
     """EXPLODED (bigram, poly_hash(bigram)) rows from raw text as one
     Arrow kernel pass — bit-equal to the Catalyst
     ``_bigram_stream + poly_hash`` chain (parity test-pinned): Spark's
     ``split(text, ' ')`` keeps empty tokens exactly like Python's
-    ``str.split(' ')``, the bigram strings are the same
-    space-joined adjacent-token pairs, and the hash is the UTF-32
-    masked column sweep of ``poly_hash_kernel``. Replaces the
-    per-occurrence interpreted transform/concat_ws/HOF-fold chain that
-    dominated q47's checkpoint pass (measured: the stream build alone
-    was 2.3 s of the 2.7 s pass at sf0.1). NULL/single-token docs emit
-    no rows (explode-of-empty semantics)."""
-    from pyspark.sql import types as T
-
+    ``str.split(' ')``, and the bigram strings are the same
+    space-joined adjacent-token pairs. The hash decodes each batch's
+    bigrams to UTF-32-LE, so the buffer holds one uint32 code point per
+    character (the JVM form hashes code points), then folds
+    acc = (acc·131 + cp) mod p as a masked sweep over the columns of
+    (bigrams × max_len); every intermediate stays below 2^38, exact in
+    int64. Replaces the per-occurrence interpreted
+    transform/concat_ws/HOF-fold chain that dominated q47's checkpoint
+    pass (measured: the stream build alone was 2.3 s of the 2.7 s pass
+    at sf0.1). NULL/single-token docs emit no rows (explode-of-empty
+    semantics)."""
     from ..functions import POLY_BASE, POLY_P
 
     import numpy as np

@@ -48,7 +48,6 @@ rewrite units) or run a full refresh.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +58,7 @@ from ..operators.cdc import drop_soft_deleted
 from ..operators.dedup import keep_latest
 from ..operators.expectations import expect_all_or_drop
 from ..operators.projection import apply_renames
+from ..streaming.store import read_json, write_json
 
 __all__ = ["IncrementalSilver", "BUCKET_COL"]
 
@@ -90,15 +90,13 @@ class IncrementalSilver:
 
     def _load_hwm(self) -> str | None:
         try:
-            with open(self._hwm_path()) as f:
-                return json.load(f)["high_water_mark"]
+            return read_json(self._hwm_path())["high_water_mark"]
         except (OSError, KeyError, ValueError):
             return None
 
     def _store_hwm(self, value: str) -> None:
         os.makedirs(self.state_dir, exist_ok=True)
-        with open(self._hwm_path(), "w") as f:
-            json.dump({"high_water_mark": value}, f)
+        write_json(self._hwm_path(), {"high_water_mark": value})
 
     # -- key plumbing ------------------------------------------------------
     def _renamed(self, names: list[str]) -> list[str]:

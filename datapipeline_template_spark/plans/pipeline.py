@@ -36,7 +36,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import EntityConfig, PipelineParams
 from ..operators.cdc import create_active_view, drop_soft_deleted
@@ -357,12 +356,3 @@ class Pipeline:
                 ext = self._external_path(layer, e.name)
                 if ext and os.path.isdir(ext):
                     shutil.rmtree(ext)
-
-
-def derive_op_column(df: DataFrame, op_col: str = "op") -> DataFrame:
-    """Helper for non-CDC sources: stamp a constant upsert op so the
-    CDC path is uniform (the reference assumes the column exists in
-    the feed — README.md example data)."""
-    if op_col in df.columns:
-        return df
-    return df.withColumn(op_col, F.lit("U"))

@@ -22,15 +22,17 @@ minus removes. Readers NEVER list the data directory — the log names
 the exact files, which at cluster scale is the whole point: no
 eventually-consistent S3 LIST, no partial-write visibility (files land
 under a per-commit UUID dir and only become visible when the manifest
-commits via atomic rename), and file-level skipping metadata has a
+commits atomically), and file-level skipping metadata has a
 natural home. A consolidated checkpoint is written every
 ``checkpoint_interval`` commits so replay cost is O(interval), not
 O(versions) — the Delta `_last_checkpoint` pattern.
 
 Concurrency: single-writer (the reference runs `max_concurrent_runs:
-1` for exactly this reason — `sdp_job.job.yml:21`). The commit is an
-O_EXCL create of the next version file, so a concurrent second writer
-fails loudly with SnapshotConflict instead of corrupting the log —
+1` for exactly this reason — `sdp_job.job.yml:21`). The commit writes
+the whole manifest to a temp file, then hard-links it to the next
+version's name, which fails if that name exists: a concurrent second
+writer fails loudly with SnapshotConflict instead of corrupting the
+log, and a crash mid-write never leaves a torn version file —
 optimistic concurrency, retry by re-reading state.
 
 At 100 TB: manifests stay tiny (file names + counts, not data);
@@ -49,6 +51,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..streaming.store import write_json
 
 __all__ = ["SnapshotTable", "SnapshotConflict", "parse_retention_interval"]
 
@@ -143,25 +147,32 @@ class SnapshotTable:
         """Commit ``manifest`` as exactly ``version`` — the version the
         caller derived from the state it READ. Re-listing here instead
         would let a racer's commit silently shift us to the next slot
-        (lost update); with the version pinned, the O_EXCL create turns
+        (lost update); with the version pinned, the exclusive link turns
         any intervening commit into a loud SnapshotConflict."""
         os.makedirs(self.log_dir, exist_ok=True)
         manifest = {"version": version, "timestamp_ms": int(time.time() * 1000), **manifest}
-        target = self._version_path(version)
+        # The complete manifest goes to a private temp file first (its
+        # name does not end in .json, so versions() never lists it); a
+        # crash mid-dump leaves at most that stray file, never a torn
+        # version file.
+        tmp = os.path.join(self.log_dir, f".{version}.{uuid.uuid4().hex}.tmp")
         try:
-            # O_EXCL: exactly one writer wins a version — the loser gets
-            # a clean conflict instead of a clobbered log.
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            # link() never replaces an existing name: exactly one writer
+            # wins a version — the loser gets a clean conflict instead
+            # of a clobbered log.
+            os.link(tmp, self._version_path(version))
         except FileExistsError:
             raise SnapshotConflict(
                 f"version {version} of {self.path} was committed concurrently"
             ) from None
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
         if version % self.checkpoint_interval == 0 and version > 0:
             state = self._state_at(version)
-            with open(self._checkpoint_path(version), "w") as f:
-                json.dump({"version": version, **state}, f)
+            write_json(self._checkpoint_path(version), {"version": version, **state})
         return version
 
     # -- writes ------------------------------------------------------------

@@ -1876,15 +1876,15 @@ ORDER BY order_kind
 @register("dd22_prefix_order_drift", oracle=_dd22_oracle())
 def dd22_prefix_order_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The frozen-order prefix index's EFFICIENCY BILL, measured —
-    the number the 20th incremental family (streaming/prefix_join.py)
-    tells you to watch: dd21's join run under the corpus's own
-    frequency order vs an order frozen from only the even-doc half.
+    the number a maintained prefix index must watch: dd21's join run
+    under the corpus's own frequency order vs an order frozen from
+    only the even-doc half.
     MEASURED at sf0.01: self 965 candidates, frozen-half 1454 (+51%)
     — and IDENTICAL verified pairs (25), because the prefix lemma's
     recall needs only a common total order, not the true frequencies.
     Drift costs candidates, never pairs; re-freeze and rebuild when
     this ratio drifts past the verification budget (the dd18
-    operating-point discipline applied to the maintained index).
+    operating-point discipline applied to a maintained index).
 
     Both runs share ONE shingle/explode pass; each is dd21's plan
     shape (rank window → rare-key equi-join → verify on candidate

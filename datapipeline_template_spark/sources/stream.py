@@ -21,13 +21,13 @@ OSS mapping:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..streaming.store import read_json, write_json
 from .batch import SUPPORTED_FORMATS, format_available, infer_schema
 
 __all__ = ["read_stream", "evolve_schema", "run_available_now", "load_or_infer_schema"]
@@ -48,13 +48,11 @@ def load_or_infer_schema(
     store = _schema_store_path(checkpoint_dir)
     current = infer_schema(spark, fmt, path)
     if os.path.exists(store):
-        with open(store) as f:
-            stored = T.StructType.fromJson(json.load(f))
+        stored = T.StructType.fromJson(read_json(store))
         evolved = evolve_schema(stored, current)
     else:
         evolved = current
-    with open(store, "w") as f:
-        json.dump(evolved.jsonValue(), f)
+    write_json(store, evolved.jsonValue())
     return evolved
 
 

@@ -1,7 +1,7 @@
 """Streaming BPE-vocabulary maintenance — the tokenizer-side member
 of the incremental-index family (MinHash signatures, sign-LSH vectors,
-rollups, chunk registries, cluster assignments, D4 marks, and now the
-word-frequency vocabulary BPE learning runs on).
+cluster assignments, D4 marks, and now the word-frequency vocabulary
+BPE learning runs on).
 
 The split that makes tokenizer training incremental: learning merges
 (``operators/text.bpe_train``) needs only the DISTINCT-WORD frequency

@@ -18,9 +18,9 @@ families write — ``_batch``-partitioned parquet whose read side treats
 partitions as a BAG (drops ``_batch`` and merges). Folding committed
 partitions into one ``_batch=-1`` base partition is then
 read-invariant by construction (equivalence-tested per family).
-Datasets partitioned by anything else (rollup's date grid, D4's
-per-cluster prototype marks) are intentionally invisible to discovery
-— they maintain bounded layouts already.
+Datasets partitioned by anything else (D4's per-cluster prototype
+marks) or not partitioned at all are intentionally invisible to
+discovery — they maintain bounded layouts already.
 
 Replay safety: the commit markers (``streaming/store.py``) are NEVER
 removed, so a ``foreachBatch`` replay of a folded batch still

@@ -1,6 +1,6 @@
 """Streaming k-means assignment maintenance — the clustering-side
 member of the incremental-index family (MinHash signatures, sign-LSH
-vectors, rollups, chunk registries, and now cluster assignments).
+vectors, and now cluster assignments).
 
 The production SemDeDup shape: the k-means FIT runs once over a
 bootstrap sample (``operators/clustering.kmeans_fit`` — centroids are

@@ -14,8 +14,8 @@ oracle-checkable.
 
 This is the SIMPLEST member of the incremental-family contract: a
 batch's partial sketch is a pure function of the batch alone (like
-streaming/decon.py, unlike the stored-set deltas of
-streaming/overlap.py), so a crash-after-write replay rewrites the
+streaming/decon.py, unlike the prior-state deltas of
+streaming/lsh.py), so a crash-after-write replay rewrites the
 identical partition — idempotent even before the marker lands.
 
 Parameter guard: a maintainer pointed at an existing store must

@@ -8,7 +8,7 @@ are additive — a batch contributes its own (src, dst) rows and its own
 are NOT additive — every round's send is rank div deg, and a single
 new edge changes its source's degree and therefore every send that
 source makes, so rank mass re-routes globally. The honest streamable
-split (the IncrementalKmv/Bm25/retention pattern): maintain the
+split (the IncrementalKmv/Bm25 pattern): maintain the
 additive graph state per batch, RE-RUN the fixed-depth walk on the
 maintained graph at read time. ``ranks()`` therefore equals the batch
 operator over the union of drained batches at ANY drain point —

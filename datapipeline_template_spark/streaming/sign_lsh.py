@@ -1,7 +1,6 @@
 """Streaming sign-LSH maintenance for EMBEDDINGS — the vector-side
-sibling of ``streaming/lsh.py`` (MinHash signatures), completing the
-incremental family: LSH signatures, rollups, chunk registries, and now
-the bucketed-vector index behind multi-table ANN
+sibling of ``streaming/lsh.py`` (MinHash signatures): the
+bucketed-vector index behind multi-table ANN
 (``operators/similarity.lsh_multi_table_pairs``).
 
 A growing embedding corpus never re-pairs itself: each micro-batch of

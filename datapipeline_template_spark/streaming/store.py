@@ -107,8 +107,7 @@ class BatchStore:
         """Record ``params`` in ``name`` on first use of the store; later
         maintainers must present the same values or refuse. A dict pin
         compares only its own keys, so a family may add fields to the
-        file later (the bucketed column list, the prefix-join order
-        fingerprint)."""
+        file later (the bucketed silver's column list)."""
         if not os.path.exists(os.path.join(self.store_path, name)):
             self._dump_json(name, params)
             return

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import json
 import sys
 from pathlib import Path
 
@@ -30,3 +32,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def torn_json_dump(monkeypatch):
+    """Context manager under which ``json.dump`` writes the first few
+    characters of its output and then raises — a crash mid-dump."""
+
+    def dump(obj, fp, *args, **kwargs):
+        fp.write(json.dumps(obj)[:8])
+        raise OSError("simulated crash mid-dump")
+
+    @contextlib.contextmanager
+    def tear():
+        with monkeypatch.context() as m:
+            m.setattr(json, "dump", dump)
+            yield
+
+    return tear

@@ -92,39 +92,63 @@ def test_kmv_compaction_equivalence_and_merge_fold(spark, tmp_path, sf_dir):
     assert _est(inc, spark) == want
 
 
-def test_generic_identity_compaction_retention(spark, tmp_path, sf_dir):
-    """A family with NO custom fold (IncrementalRetention, two
-    datasets) compacts through the generic identity path: reads are
-    bag-merges, so pure re-bagging into the base partition leaves the
-    triangle untouched."""
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.streaming.retention import (
-        IncrementalRetention,
+def test_generic_identity_compaction_pagerank(spark, tmp_path, sf_dir):
+    """A family with NO custom fold (IncrementalPageRank, two
+    datasets: ``edges`` and ``deg``) compacts through the generic
+    identity path: reads are bag-merges, so pure re-bagging into the
+    base partition leaves the ranks untouched."""
+    from datapipeline_template_spark.streaming.pagerank import (
+        IncrementalPageRank,
     )
 
-    ev = (
-        table(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            F.expr("unix_micros(ts) DIV 86400000000").alias("d"),
-        )
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        F.col("l_orderkey").alias("src"), F.col("l_suppkey").alias("dst")
     )
-    store = str(tmp_path / "ret_store")
-    inc = IncrementalRetention(store)
+    store = str(tmp_path / "pr_store")
+    inc = IncrementalPageRank(store, iters=2)
     for i in range(3):
-        inc.process_batch(ev.where(F.col("user_id") % 3 == i), i)
+        inc.process_batch(li.where(F.col("src") % 3 == i), i)
 
-    def tri():
-        return sorted(map(tuple, inc.triangle(spark).collect()))
+    def ranks():
+        return sorted(map(tuple, inc.ranks(spark).collect()))
 
-    before = tri()
+    before = ranks()
     assert before
     report = compact_store(spark, store)
-    assert report and all(report.values())
+    assert {os.path.basename(ds) for ds in report} == {"edges", "deg"}
+    assert all(report.values())
     for ds in report:
         assert _batch_parts(ds) == {BASE_BATCH}
-    assert tri() == before
+    assert ranks() == before
+
+
+def _file_bytes(root: str) -> dict[str, bytes]:
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            with open(path, "rb") as f:
+                out[os.path.relpath(path, root)] = f.read()
+    return out
+
+
+def test_discovery_skips_dataset_without_batch_partitions(
+    spark, tmp_path, sf_dir
+):
+    """A store root holding one maintained dataset plus one plain
+    (not ``_batch``-partitioned) parquet directory: compaction
+    discovery reports and folds only the maintained dataset and leaves
+    every file of the plain one byte-identical."""
+    _, ev, store = _kmv_store(spark, tmp_path, sf_dir, n_batches=2)
+    plain = os.path.join(store, "plain")
+    ev.select("event_id", "event_type").coalesce(1).write.parquet(plain)
+    plain_before = _file_bytes(plain)
+    assert any(name.endswith(".parquet") for name in plain_before)
+
+    report = compact_store(spark, store)
+    assert report == {os.path.join(store, "partials"): True}
+    assert _batch_parts(os.path.join(store, "partials")) == {BASE_BATCH}
+    assert _file_bytes(plain) == plain_before
 
 
 def test_uncommitted_partition_survives_compaction(spark, tmp_path, sf_dir):
@@ -280,60 +304,6 @@ def test_bucketed_silver_compaction_keeps_join_free(spark, tmp_path, sf_dir):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_countmin_and_histogram_merge_folds(spark, tmp_path, sf_dir):
-    """The additive families' compact() folds: CountMin cells and
-    log-histogram bins sum per cell/bin into the base partition —
-    reads (point estimates, quantiles) are bit-identical pre/post,
-    and the folded state is one row per occupied cell/bin."""
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.streaming.countmin import (
-        IncrementalCountMin,
-    )
-    from datapipeline_template_spark.streaming.histogram import (
-        IncrementalHistogram,
-    )
-
-    ev = table(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
-
-    cm = IncrementalCountMin(
-        str(tmp_path / "cm"), key_col="user_id", depth=4, width=256
-    )
-    for i in range(3):
-        cm.process_batch(ev.where(F.col("event_id") % 3 == i), i)
-    items = ev.select("user_id").distinct()
-    before = sorted(map(tuple, cm.estimate(items).collect()))
-    cm.compact(spark)
-    ds = str(tmp_path / "cm" / "cells")
-    assert _batch_parts(ds) == {BASE_BATCH}
-    cells = spark.read.parquet(ds)
-    assert cells.count() == cells.select("r", "b").distinct().count()
-    assert sorted(map(tuple, cm.estimate(items).collect())) == before
-
-    hist = IncrementalHistogram(
-        str(tmp_path / "hist"), group_col="event_type", value_col="value_cents"
-    )
-    evh = ev.select(
-        "event_id",
-        "event_type",
-        (F.col("value") * 100).cast("long").alias("value_cents"),
-    ).where(F.col("value_cents") > 0)
-    for i in range(3):
-        hist.process_batch(evh.where(F.col("event_id") % 3 == i), i)
-    before_q = sorted(
-        map(tuple, hist.quantiles(spark, [(1, 2), (9, 10)]).collect())
-    )
-    hist.compact(spark)
-    dsh = str(tmp_path / "hist" / "bins")
-    assert _batch_parts(dsh) == {BASE_BATCH}
-    bins = spark.read.parquet(dsh)
-    assert bins.count() == bins.select("g", "bin").distinct().count()
-    assert sorted(
-        map(tuple, hist.quantiles(spark, [(1, 2), (9, 10)]).collect())
-    ) == before_q
-
-
 def test_bucketed_silver_insert_crash_window_no_duplication(
     spark, tmp_path, sf_dir
 ):
@@ -388,23 +358,14 @@ def test_bucketed_silver_insert_crash_window_no_duplication(
 
 
 @pytest.mark.slow
-def test_three_more_families_identity_compaction(spark, tmp_path, sf_dir):
-    """Generic identity compaction across three further read
-    semantics: PageRank (re-walk over merged edge/degree partials),
-    weighted sampling (top-k-of-top-k's over winner partials), and
-    the frozen-order prefix join (pairs over DISTINCT'd set reads,
-    plus a write-once `order` dataset that discovery must NOT touch).
-    Reads bit-equal pre/post; every _batch dataset folds to the base."""
+def test_pagerank_and_weighted_sample_identity_compaction(spark, tmp_path, sf_dir):
+    """Generic identity compaction across two further read semantics:
+    PageRank (re-walk over merged edge/degree partials) and weighted
+    sampling (top-k-of-top-k's over winner partials). Reads bit-equal
+    pre/post; every _batch dataset folds to the base."""
     from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.operators.dedup import (
-        shingle_tokens,
-    )
-    from datapipeline_template_spark.operators.text import tokenize
     from datapipeline_template_spark.streaming.pagerank import (
         IncrementalPageRank,
-    )
-    from datapipeline_template_spark.streaming.prefix_join import (
-        IncrementalPrefixJoin,
     )
     from datapipeline_template_spark.streaming.weighted_sample import (
         IncrementalWeightedSample,
@@ -449,35 +410,6 @@ def test_three_more_families_identity_compaction(spark, tmp_path, sf_dir):
     report = compact_store(spark, str(tmp_path / "ws"))
     assert report and all(report.values())
     assert ws_sample() == before
-
-    # -- Prefix join: frozen order + prefix/sets datasets.
-    sh = table(spark, sf_dir, "documents").select(
-        "doc_id", shingle_tokens(tokenize("text"), k=3).alias("shingles")
-    )
-    pj = IncrementalPrefixJoin(str(tmp_path / "pj"), t_milli=500)
-    order = (
-        sh.select(F.explode(F.array_distinct("shingles")).alias("_s"))
-        .groupBy("_s")
-        .agg(F.count(F.lit(1)).cast("long").alias("_df"))
-    )
-    pj.freeze_order(order)
-    for i in range(2):
-        pj.process_batch(sh.where(F.col("doc_id") % 2 == i), i)
-
-    def pj_pairs():
-        return sorted(
-            (r["id_a"], r["id_b"], r["inter_n"], r["union_n"])
-            for r in pj.pairs(spark).collect()
-        )
-
-    before = pj_pairs()
-    report = compact_store(spark, str(tmp_path / "pj"))
-    # prefix + sets fold; the write-once order dataset is invisible to
-    # discovery (not _batch-partitioned).
-    folded = {os.path.basename(ds) for ds in report}
-    assert "order" not in folded
-    assert report and all(report.values())
-    assert pj_pairs() == before
 
 
 @pytest.mark.parametrize("phase", ["journal", "moved", "renamed_old"])

@@ -101,6 +101,25 @@ def test_incremental_equals_full_recompute(spark, tmp_path, env):
     assert got[99] == 990     # new key inserted
 
 
+def test_torn_watermark_write_keeps_previous_value(
+    spark, tmp_path, env, torn_json_dump
+):
+    """A crash while the second run stores its watermark must leave
+    the first run's watermark readable, not a truncated file that
+    forces a full bootstrap rebuild."""
+    params, entity = env
+    _write_bronze(spark, _bronze_v1(), mode="overwrite")
+    inc = IncrementalSilver(spark, params, entity, n_buckets=8, state_dir=str(tmp_path / "st"))
+    inc.run()
+    first = inc._load_hwm()
+    assert first is not None
+
+    _write_bronze(spark, _bronze_v2())
+    with torn_json_dump(), pytest.raises(OSError, match="mid-dump"):
+        inc.run()
+    assert inc._load_hwm() == first
+
+
 def test_incremental_noop_and_idempotent(spark, tmp_path, env):
     params, entity = env
     _write_bronze(spark, _bronze_v1(), mode="overwrite")

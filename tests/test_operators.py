@@ -2282,30 +2282,21 @@ def test_cm_inner_product_join_size(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_rademacher_kernel_matches_catalyst_and_nests(spark, sf_dir):
-    """The Arrow matmul twin is BIT-EQUAL to the Catalyst HOF form
-    (exact int64 either way — the dd05 kernel-twin contract), and the
-    sign matrix is dimension-nested (row j depends only on j), so the
-    narrow code is a prefix of the wide one — one encode pass serves
-    every budget."""
-    from pyspark.sql import functions as F
-
+def test_rademacher_projection_nests(spark, sf_dir):
+    """The sign matrix is dimension-nested (row j depends only on j),
+    so the narrow code is a prefix of the wide one — one encode pass
+    serves every budget."""
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.functions import quantize_vec
     from datapipeline_template_spark.operators.similarity import (
         rademacher_project,
-        rademacher_project_kernel,
         rademacher_signs,
     )
 
     emb = table(spark, sf_dir, "embeddings").limit(50)
     qv = emb.select("vec_id", quantize_vec("embedding").alias("_qv"))
     a = {r["vec_id"]: r["pv"] for r in rademacher_project(qv, 16, 64).collect()}
-    b = {
-        r["vec_id"]: r["pv"]
-        for r in rademacher_project_kernel(qv.repartition(4), 16, 64).collect()
-    }
-    assert a == b and len(a) == 50
+    assert len(a) == 50
 
     assert rademacher_signs(64, 32)[:8] == rademacher_signs(64, 8)
     narrow = {
@@ -3061,32 +3052,6 @@ def test_mutual_knn_edges_kernel_bit_equal_reference(spark, sf_dir):
     assert all(x[0] != 99999 and x[1] != 99999 for x in a)
 
 
-def test_poly_hash_kernel_bit_equal_reference(spark):
-    """The Arrow poly-hash kernel must equal functions.poly_hash
-    value-for-value — ASCII, non-ASCII code points (the JVM form
-    hashes codePointAt; the kernel decodes UTF-32), empty string
-    (fold init 0), and NULL (propagates)."""
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.functions import poly_hash
-    from datapipeline_template_spark.operators.text import poly_hash_kernel
-
-    rows = [
-        ("hello world",),
-        ("",),
-        (None,),
-        ("café naïve 中文 \U0001F600",),
-        ("a",),
-        ("the quick brown fox jumps over the lazy dog " * 5,),
-    ]
-    df = spark.createDataFrame(rows, "s string")
-    got = df.select(
-        poly_hash("s").alias("ref"), poly_hash_kernel("s").alias("ker")
-    ).collect()
-    for r in got:
-        assert r.ref == r.ker, (r.ref, r.ker)
-
-
 def test_shingle_rows_kernel_bit_equal_reference(spark, sf_dir):
     """shingle_rows_kernel must emit exactly the rows of
     explode(shingle_tokens(tokenize(text), k)) — same multiset of
@@ -3180,7 +3145,9 @@ def test_shingle_arrays_kernel_bit_equal_reference(spark, sf_dir):
 def test_bigram_hash_rows_kernel_bit_equal_reference(spark, sf_dir):
     """bigram_hash_rows_kernel must emit exactly the rows of
     _bigram_stream + poly_hash — same multiset of (bigram, h) — on the
-    real documents table plus NULL/empty/single-token edges."""
+    real documents table plus NULL/empty/single-token edges and
+    non-ASCII code points (the JVM form hashes codePointAt; the kernel
+    decodes UTF-32)."""
     from pyspark.sql import functions as F
 
     from datapipeline_template_spark.catalog import table
@@ -3204,7 +3171,14 @@ def test_bigram_hash_rows_kernel_bit_equal_reference(spark, sf_dir):
     assert ref == ker and len(ref) > 0
 
     extra = spark.createDataFrame(
-        [(1, "solo"), (2, "two words"), (3, None), (4, ""), (5, "a  b")],
+        [
+            (1, "solo"),
+            (2, "two words"),
+            (3, None),
+            (4, ""),
+            (5, "a  b"),
+            (6, "café naïve 中文 \U0001F600"),
+        ],
         "doc_id long, text string",
     )
     # reference chain inline (the _bigram_stream shape over `extra`)

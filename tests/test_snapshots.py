@@ -144,6 +144,22 @@ def test_concurrent_commit_conflict(spark, tmp_path):
     assert t.read().count() == 4
 
 
+def test_torn_manifest_write_keeps_previous_version(
+    spark, tmp_path, torn_json_dump
+):
+    """A crash while the manifest is being dumped must leave no version
+    file behind: the table still reads the previous version, and a
+    retried write commits the next one."""
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    t.write(_df(spark, 0, 3))
+    with torn_json_dump(), pytest.raises(OSError, match="mid-dump"):
+        t.write(_df(spark, 3, 6), mode="append")
+    assert t.versions() == [0]
+    assert sorted(r["id"] for r in t.read().collect()) == [0, 1, 2]
+    assert t.write(_df(spark, 3, 6), mode="append") == 1
+    assert sorted(r["id"] for r in t.read().collect()) == list(range(6))
+
+
 def test_checkpoint_bounds_log_replay(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "t"), checkpoint_interval=3)
     for i in range(7):

@@ -108,3 +108,25 @@ def test_json_read_batch(spark, tmp_path):
     df = read_batch(spark, "json", str(path))
     assert df.count() == 3
     assert "amount" in df.columns
+
+
+def test_torn_schema_store_write_recovers(spark, tmp_path, torn_json_dump):
+    """A crash while the schema store is being rewritten must leave the
+    previous schema readable: the next call evolves it as if the torn
+    run never happened, instead of failing on truncated JSON."""
+    from datapipeline_template_spark.sources.stream import load_or_infer_schema
+
+    src, ckpt = str(tmp_path / "raw"), str(tmp_path / "ckpt")
+    spark.createDataFrame([(1, "a")], "id long, name string").write.mode(
+        "append"
+    ).parquet(src)
+    first = load_or_infer_schema(spark, "parquet", src, ckpt)
+    assert first.fieldNames() == ["id", "name"]
+
+    spark.createDataFrame([(2, "b", "US")], "id long, name string, country string").write.mode(
+        "append"
+    ).parquet(src)
+    with torn_json_dump(), pytest.raises(OSError, match="mid-dump"):
+        load_or_infer_schema(spark, "parquet", src, ckpt)
+    evolved = load_or_infer_schema(spark, "parquet", src, ckpt)
+    assert evolved.fieldNames() == ["id", "name", "country"]

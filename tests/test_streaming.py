@@ -215,78 +215,6 @@ def test_interval_join_rejects_streaming_dim(spark, tmp_path):
         raise AssertionError("streaming dim must be rejected")
 
 
-def test_incremental_rollup_matches_batch_cascade(spark, tmp_path):
-    """Continuous-aggregate maintenance: drain a file stream in TWO
-    AvailableNow passes (second pass sees only the new file — the
-    checkpoint guarantees it), then the maintained hourly store and the
-    derived day level must equal the batch cascade over ALL data —
-    including cells both passes touched (merge, not append)."""
-    import pandas as pd
-
-    from datapipeline_template_spark.operators.rollup import cascade_rollup
-    from datapipeline_template_spark.streaming.rollup import IncrementalRollup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = dt.datetime(2024, 3, 1, 0, 0, 0)
-    batch1 = [
-        Row(ts=base + dt.timedelta(minutes=m), key=k, value=float(v))
-        for m, k, v in [(0, "a", 1), (5, "a", 2), (65, "a", 4), (0, "b", 10)]
-    ]
-    # Batch 2 revisits hour 0 for both keys (merge path) and adds a new day.
-    batch2 = [
-        Row(ts=base + dt.timedelta(minutes=m), key=k, value=float(v))
-        for m, k, v in [(7, "a", 100), (1, "b", 3), (1500, "b", 8)]
-    ]
-
-    measures = {
-        "n": ("count", F.lit(1)),
-        "s": ("sum", F.col("value")),
-        "mn": ("min", F.col("value")),
-        "mx": ("max", F.col("value")),
-    }
-    roll = IncrementalRollup(store, "ts", ["key"], measures, level="hour")
-
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.mode("append").parquet(str(src))
-    roll.run_available_now(spark.readStream.schema(SCHEMA).parquet(str(src)), ckpt)
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.mode("append").parquet(str(src))
-    roll.run_available_now(spark.readStream.schema(SCHEMA).parquet(str(src)), ckpt)
-
-    all_rows = spark.createDataFrame(batch1 + batch2, SCHEMA)
-    expected = cascade_rollup(
-        all_rows, "ts", ["key"], measures, levels=("hour", "day")
-    )
-
-    got_hour = sorted(map(tuple, roll.read(spark).collect()))
-    want_hour = sorted(map(tuple, expected["hour"].collect()))
-    assert got_hour == want_hour
-
-    got_day = sorted(
-        map(tuple, roll.read_cascade(spark, ("hour", "day"))["day"].collect())
-    )
-    want_day = sorted(map(tuple, expected["day"].collect()))
-    assert got_day == want_day
-
-    # At-least-once safety: a replayed batch_id is skipped, not
-    # double-merged (the committed-batch marker pattern).
-    replay = spark.createDataFrame(batch2, SCHEMA)
-    roll.process_batch(replay, batch_id=99)  # new id: merges once
-    after_first = sorted(map(tuple, roll.read(spark).collect()))
-    assert after_first != got_hour
-    roll.process_batch(replay, batch_id=99)  # replayed id: no-op
-    assert sorted(map(tuple, roll.read(spark).collect())) == after_first
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="start at 'hour'"):
-        roll.read_cascade(spark, ("day", "month"))
-    with _pytest.raises(ValueError, match="non-decomposable"):
-        IncrementalRollup(store, "ts", ["key"], {"a": ("avg", F.col("value"))})
-
-
 @pytest.mark.slow
 def test_incremental_lsh_stream_matches_full_corpus(spark, tmp_path):
     """End-to-end streaming LSH maintenance: drain a document stream
@@ -461,82 +389,6 @@ def test_pinned_broadcast_skips_sizing_count(spark, monkeypatch):
     assert sorted((r["id_a"], r["id_b"]) for r in pinned.collect()) == sorted(
         (r["id_a"], r["id_b"]) for r in defaulted.collect()
     )
-
-
-@pytest.mark.slow
-def test_incremental_chunk_dedup_matches_batch_operator(spark, tmp_path):
-    """Two AvailableNow drains of ascending-id docs maintain cleaned
-    docs equal to the batch chunk_dedup over everything seen; replays
-    (marker-skip and crash-window) change nothing."""
-    from datapipeline_template_spark.operators.dedup import chunk_dedup
-    from datapipeline_template_spark.streaming.chunks import IncrementalChunkDedup
-
-    doc_schema = "doc_id long, text string"
-    src = tmp_path / "docs"
-    src.mkdir()
-    store = str(tmp_path / "chunk_store")
-    ckpt = str(tmp_path / "ckpt")
-
-    # 3-token chunks; families i%4 make heavy cross-batch duplication,
-    # the +i tail keeps every doc partially unique.
-    def mk(ids):
-        return [
-            (i, f"a{i % 4} b{i % 4} c{i % 4} shared common tail x{i} y{i} z{i}")
-            for i in ids
-        ]
-
-    inc = IncrementalChunkDedup(store, "doc_id", "text", chunk_tokens=3)
-
-    batch1 = mk(range(0, 12))
-    spark.createDataFrame(batch1, doc_schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema(doc_schema).parquet(str(src)), ckpt
-    )
-    batch2 = mk(range(12, 20))
-    spark.createDataFrame(batch2, doc_schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema(doc_schema).parquet(str(src)), ckpt
-    )
-
-    all_docs = spark.createDataFrame(batch1 + batch2, doc_schema)
-    want = {
-        (r["doc_id"], r["clean_text"], r["n_chunks"], r["n_dropped"])
-        for r in chunk_dedup(all_docs, "doc_id", "text", chunk_tokens=3).collect()
-    }
-    got = {
-        (r["doc_id"], r["clean_text"], r["n_chunks"], r["n_dropped"])
-        for r in inc.clean_docs(spark).collect()
-    }
-    assert got == want
-    assert any(r[3] > 0 for r in got), "fixture must actually drop chunks"
-    # Registry holds each distinct chunk value exactly once.
-    seen = inc.seen_chunks(spark)
-    assert seen.count() == seen.distinct().count()
-
-    # Marker-skip replay: no-op.
-    inc.process_batch(spark.createDataFrame(batch1, doc_schema), batch_id=0)
-    assert {
-        (r["doc_id"], r["clean_text"], r["n_chunks"], r["n_dropped"])
-        for r in inc.clean_docs(spark).collect()
-    } == want
-
-    # Crash-window repair: marker lost after data landed.
-    import os
-
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(spark.createDataFrame(batch2, doc_schema), batch_id=1)
-    assert {
-        (r["doc_id"], r["clean_text"], r["n_chunks"], r["n_dropped"])
-        for r in inc.clean_docs(spark).collect()
-    } == want
-    # Fresh read: the overwrite invalidated the earlier frame's file
-    # index, so compare on a re-listed frame.
-    seen2 = inc.seen_chunks(spark)
-    assert seen2.count() == seen2.distinct().count()
 
 
 def test_running_totals_tws_gate_or_parity(spark, tmp_path):
@@ -1299,104 +1151,6 @@ def test_incremental_ivfpq_matches_batch(spark, tmp_path, sf_dir):
     assert empty.index(spark).columns == cols
 
 
-def test_incremental_source_overlap_matches_batch_tx22(spark, tmp_path, sf_dir):
-    """Tenth incremental family: drain the documents corpus in TWO
-    AvailableNow passes, then the maintained overlap matrix must equal
-    the batch tx22 matrix over every document seen — |A|, |B| and
-    |A ∩ B| are additive over never-seen (source, shingle) rows, with
-    each pair contribution emitted in the batch where its LATER member
-    arrives. Replays are marker-skip no-ops; a lost marker with data
-    landed self-repairs via the per-batch overwrite."""
-    import os
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.queries import load_all
-    from datapipeline_template_spark.streaming.overlap import (
-        IncrementalSourceOverlap,
-    )
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    schema_str = "doc_id long, source string, text string"
-    src = tmp_path / "docs"
-    src.mkdir()
-    store = str(tmp_path / "ovl_store")
-    ckpt = str(tmp_path / "ckpt")
-
-    inc = IncrementalSourceOverlap(store)
-
-    b1 = docs.where(F.col("doc_id") % 2 == 0)
-    b2 = docs.where(F.col("doc_id") % 2 == 1)
-    b1.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema(schema_str).parquet(str(src)), ckpt
-    )
-    b2.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema(schema_str).parquet(str(src)), ckpt
-    )
-
-    def key(rows):
-        return {
-            (r["src_a"], r["src_b"]): (
-                r["n_a"], r["n_b"], r["n_shared"], r["jaccard"]
-            )
-            for r in rows
-        }
-
-    want = key(
-        load_all()["tx22_source_overlap"].fn(spark, sf_dir).collect()
-    )
-    assert want, "fixture must produce overlapping source pairs"
-    got = key(inc.overlap(spark).collect())
-    assert got == want
-
-    # Replay safety: same batch_id is a marker-skip no-op.
-    inc.process_batch(b1, batch_id=0)
-    assert key(inc.overlap(spark).collect()) == want
-
-    # Crash window: marker for batch 1 lost after data landed —
-    # reprocessing overwrites identical bytes, deltas unchanged.
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(b2, batch_id=1)
-    assert key(inc.overlap(spark).collect()) == want
-
-
-def test_incremental_source_overlap_empty_states(spark, tmp_path):
-    """overlap() before ANY drain is a typed empty matrix (no store
-    directories yet), and a drained batch whose texts produce no
-    k-shingles leaves the matrix empty rather than erroring on a
-    footerless delta directory."""
-    from datapipeline_template_spark.streaming.overlap import (
-        IncrementalSourceOverlap,
-    )
-
-    inc = IncrementalSourceOverlap(str(tmp_path / "empty_store"))
-    out = inc.overlap(spark)
-    assert out.columns == [
-        "src_a", "src_b", "n_a", "n_b", "n_shared", "jaccard",
-    ]
-    assert out.count() == 0
-
-    # One-word docs tokenize below k=3 -> zero shingles... actually
-    # shingle_tokens pads short docs to ONE shingle, so use empty text
-    # (tokenize('') -> [''] -> one hash) — the real zero-delta case is
-    # a batch whose every (source, shingle) row is already stored:
-    # drain the same batch twice under two batch ids.
-    docs = spark.createDataFrame(
-        [(1, "srcA", "alpha beta gamma delta")],
-        "doc_id long, source string, text string",
-    )
-    inc.process_batch(docs, batch_id=0)
-    first = {
-        (r["src_a"], r["src_b"]) for r in inc.overlap(spark).collect()
-    }
-    assert first == set()  # single source: totals exist, no pairs
-    # Re-delivery under a NEW batch id: all rows already stored ->
-    # empty deltas everywhere; overlap() must still read cleanly.
-    inc.process_batch(docs, batch_id=1)
-    assert inc.overlap(spark).count() == 0
-
-
 def test_incremental_decon_matches_batch_flags(spark, tmp_path, sf_dir):
     """Eleventh incremental family: with the eval set FROZEN (src0
     docs) and the corpus drained in TWO AvailableNow passes, the
@@ -1725,215 +1479,6 @@ def test_incremental_dsir_matches_batch_tx25(spark, tmp_path, sf_dir):
     assert fresh.selection(spark).count() == 0
 
 
-def test_incremental_histogram_matches_batch_q45(spark, tmp_path, sf_dir):
-    """Fifteenth incremental family: drain lineitem prices in TWO
-    AvailableNow passes; the maintained sketch must equal batch
-    log_hist_bins over everything seen (bin counts are additive), and
-    quantiles() must equal hist_quantiles over the union — the
-    guaranteed-overestimate edge included. Replays are marker-skip
-    no-ops; crash-after-write replays rewrite identical partitions;
-    mismatched columns refuse to attach."""
-    import os
-
-    import pytest
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.functions import cents
-    from datapipeline_template_spark.operators.sketch import (
-        hist_quantiles,
-        log_hist_bins,
-    )
-    from datapipeline_template_spark.streaming.histogram import (
-        IncrementalHistogram,
-    )
-
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("g"),
-        F.col("l_orderkey").alias("k"),
-        cents("l_extendedprice").alias("v"),
-    )
-    src = tmp_path / "rows"
-    src.mkdir()
-    store = str(tmp_path / "h_store")
-    ckpt = str(tmp_path / "ckpt")
-    inc = IncrementalHistogram(store, group_col="g", value_col="v")
-
-    b1 = li.where(F.col("k") % 2 == 0).drop("k")
-    b2 = li.where(F.col("k") % 2 == 1).drop("k")
-    schema_str = "g string, v long"
-    b1.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema(schema_str).parquet(str(src)), ckpt
-    )
-    mid = {
-        (r["g"], r["bin"]): r["cnt"] for r in inc.counts(spark).collect()
-    }
-    want_mid = {
-        (r["g"], r["bin"]): r["cnt"]
-        for r in log_hist_bins(b1, "g", "v").collect()
-    }
-    assert mid == want_mid
-
-    b2.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema(schema_str).parquet(str(src)), ckpt
-    )
-    want = {
-        (r["g"], r["bin"]): r["cnt"]
-        for r in log_hist_bins(li.drop("k"), "g", "v").collect()
-    }
-    got = {
-        (r["g"], r["bin"]): r["cnt"] for r in inc.counts(spark).collect()
-    }
-    assert got == want
-
-    qs = ((1, 2), (19, 20))
-    want_q = {
-        (r["g"], r["q"]): r["est"]
-        for r in hist_quantiles(
-            log_hist_bins(li.drop("k"), "g", "v"), "g", qs
-        ).collect()
-    }
-    got_q = {
-        (r["g"], r["q"]): r["est"]
-        for r in inc.quantiles(spark, qs).collect()
-    }
-    assert got_q == want_q
-
-    # Replay safety + crash window.
-    inc.process_batch(b1, batch_id=0)
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(b2, batch_id=1)
-    got2 = {
-        (r["g"], r["bin"]): r["cnt"] for r in inc.counts(spark).collect()
-    }
-    assert got2 == want
-
-    # Param guard + empty state.
-    with pytest.raises(ValueError, match="built with"):
-        IncrementalHistogram(store, group_col="g", value_col="other")
-    IncrementalHistogram(store, group_col="g", value_col="v")
-    fresh = IncrementalHistogram(str(tmp_path / "fresh"))
-    assert fresh.counts(spark).count() == 0
-    assert fresh.quantiles(spark, qs).count() == 0
-
-
-def test_incremental_countmin_matches_batch(spark, tmp_path, sf_dir):
-    """16th incremental family: CM grid deltas are additive per batch,
-    so the maintained grid — and every point estimate over it — equals
-    the batch operator over the union of all drained batches at ANY
-    drain point; replays are no-ops; a crash window (marker lost after
-    write) rewrites an identical partition; geometry/key-column
-    mismatches refuse to merge."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.operators.sketch import cm_estimate, cm_sketch
-    from datapipeline_template_spark.streaming.countmin import IncrementalCountMin
-
-    keys = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-    src = tmp_path / "rows"
-    src.mkdir()
-    store = str(tmp_path / "cm_store")
-    ckpt = str(tmp_path / "ckpt")
-    depth, width = 3, 256
-    inc = IncrementalCountMin(store, key_col="k", depth=depth, width=width)
-
-    b1 = keys.where(F.col("k") % 2 == 0)
-    b2 = keys.where(F.col("k") % 2 == 1)
-    b1.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(spark.readStream.schema("k long").parquet(str(src)), ckpt)
-    mid = {(r["r"], r["b"]): r["cnt"] for r in inc.cells(spark).collect()}
-    want_mid = {
-        (r["r"], r["b"]): r["cnt"]
-        for r in cm_sketch(b1, "k", depth, width).collect()
-    }
-    assert mid == want_mid
-
-    b2.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(spark.readStream.schema("k long").parquet(str(src)), ckpt)
-    want = {
-        (r["r"], r["b"]): r["cnt"]
-        for r in cm_sketch(keys, "k", depth, width).collect()
-    }
-    got = {(r["r"], r["b"]): r["cnt"] for r in inc.cells(spark).collect()}
-    assert got == want
-
-    # Point estimates equal the batch operator (and ≥ exact counts).
-    items = keys.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    want_est = {
-        r["k"]: r["est"]
-        for r in cm_estimate(
-            cm_sketch(keys, "k", depth, width), items, "k", depth, width
-        ).collect()
-    }
-    got_est = {r["k"]: r["est"] for r in inc.estimate(items).collect()}
-    assert got_est == want_est
-    exact = {r["k"]: r["n"] for r in items.collect()}
-    assert all(got_est[k] >= exact[k] for k in exact)
-
-    # Replay safety + crash window.
-    inc.process_batch(b1, batch_id=0)
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(b2, batch_id=1)
-    got2 = {(r["r"], r["b"]): r["cnt"] for r in inc.cells(spark).collect()}
-    assert got2 == want
-
-    # Param guard + empty state.
-    with pytest.raises(ValueError, match="built with"):
-        IncrementalCountMin(store, key_col="k", depth=depth, width=512)
-    IncrementalCountMin(store, key_col="k", depth=depth, width=width)
-    fresh = IncrementalCountMin(str(tmp_path / "fresh"))
-    assert fresh.cells(spark).count() == 0
-
-
-def test_incremental_countmin_join_size_composition(spark, tmp_path, sf_dir):
-    """q49's planner composition over MAINTAINED state: two
-    independently maintained CM stores (one per join side, drained in
-    disjoint batches) price the cross-stream equi-join via
-    cm_inner_product of their cells() — equal to the batch-built
-    grids' estimate (cell additivity) and >= the exact join size (the
-    AMS/CM overestimate guarantee). The two streams never see each
-    other: the join is priced grid-against-grid."""
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.operators.sketch import (
-        cm_inner_product,
-        cm_sketch,
-    )
-    from datapipeline_template_spark.streaming.countmin import IncrementalCountMin
-
-    depth, width = 4, 256
-    ev = (
-        table(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select(F.col("user_id").alias("k"))
-    )
-    od = table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-
-    inc_a = IncrementalCountMin(
-        str(tmp_path / "a"), key_col="k", depth=depth, width=width
-    )
-    inc_b = IncrementalCountMin(
-        str(tmp_path / "b"), key_col="k", depth=depth, width=width
-    )
-    inc_a.process_batch(ev.where(F.col("k") % 2 == 0), batch_id=0)
-    inc_a.process_batch(ev.where(F.col("k") % 2 == 1), batch_id=1)
-    inc_b.process_batch(od.where(F.col("k") % 3 == 0), batch_id=0)
-    inc_b.process_batch(od.where(F.col("k") % 3 != 0), batch_id=1)
-
-    got = cm_inner_product(inc_a.cells(spark), inc_b.cells(spark)).first()["est"]
-    want = cm_inner_product(
-        cm_sketch(ev, "k", depth, width), cm_sketch(od, "k", depth, width)
-    ).first()["est"]
-    assert got == want
-    assert got >= ev.join(od, "k").count()
-
-
 @pytest.mark.slow
 def test_incremental_bm25_matches_batch(spark, tmp_path, sf_dir):
     """17th incremental family: every BM25 index component is an
@@ -2074,87 +1619,6 @@ def test_incremental_kmv_answers_rolling_windows_by_merge(spark, tmp_path, sf_di
         for r in load_all()["q48_kmv_rolling_distinct"].fn(spark, sf_dir).collect()
     }
     assert got == want and len(got) > 0
-
-
-@pytest.mark.slow
-def test_incremental_unigram_lm_equals_batch_train(spark, tmp_path, sf_dir):
-    """18th incremental family (IncrementalUnigramLm): word counts are
-    additive per micro-batch, so the model trained from maintained
-    state equals unigram_train over a batch-built vocab of every text
-    drained — at ANY drain point, including mid-stream where the model
-    genuinely differs from the final one (counts changed ⇒ Viterbi
-    paths changed ⇒ models are re-derived, never patched). Replays
-    no-op; a crash window self-repairs; configuration mismatches
-    refuse to merge."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.operators.text import unigram_train
-    from datapipeline_template_spark.streaming.unigram import (
-        IncrementalUnigramLm,
-    )
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    b1 = docs.where("doc_id < 60")
-    b2 = docs.where("doc_id >= 60 AND doc_id < 120")
-    src = tmp_path / "docs"
-    src.mkdir()
-    store = str(tmp_path / "uni_store")
-    ckpt = str(tmp_path / "ckpt")
-    inc = IncrementalUnigramLm(store)
-
-    def model_rows(df):
-        return {(r["piece"], r["cnt"], r["cost_mb"]) for r in df.collect()}
-
-    def batch_vocab(df):
-        return (
-            df.select(
-                F.explode(
-                    F.expr("regexp_extract_all(text, '[a-zA-Z]+', 0)")
-                ).alias("t")
-            )
-            .select(F.lower(F.col("t")).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        )
-
-    b1.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema("doc_id long, text string").parquet(str(src)),
-        ckpt,
-    )
-    mid = model_rows(inc.train(spark))
-    want_mid = model_rows(unigram_train(batch_vocab(b1)))
-    assert mid == want_mid and len(mid) > 0
-
-    b2.coalesce(1).write.mode("append").parquet(str(src))
-    inc.run_available_now(
-        spark.readStream.schema("doc_id long, text string").parquet(str(src)),
-        ckpt,
-    )
-    want = model_rows(unigram_train(batch_vocab(docs.where("doc_id < 120"))))
-    assert model_rows(inc.train(spark)) == want
-    # The count shift is real: the grown corpus changes the model, so
-    # patching a maintained model would be wrong — full retrain is the
-    # contract (the IncrementalBpeVocab argument).
-    assert want != mid
-
-    # Replay no-op + crash-window repair.
-    inc.process_batch(b1, batch_id=0)
-    assert model_rows(inc.train(spark)) == want
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(b2, batch_id=1)
-    assert model_rows(inc.train(spark)) == want
-
-    # Config guard + empty state.
-    with pytest.raises(ValueError, match="built with"):
-        IncrementalUnigramLm(store, vocab_size=99)
-    IncrementalUnigramLm(store)
-    fresh = IncrementalUnigramLm(str(tmp_path / "fresh"))
-    assert fresh.train(spark).count() == 0
 
 
 @pytest.mark.slow
@@ -2386,250 +1850,6 @@ def test_incremental_weighted_sample_matches_batch(spark, tmp_path, sf_dir):
         IncrementalWeightedSample(
             str(tmp_path / "badtype")
         ).process_batch(bad, batch_id=0)
-
-
-@pytest.mark.slow
-def test_incremental_prefix_join_matches_batch(spark, tmp_path, sf_dir):
-    """20th incremental family: under a FROZEN element order each
-    set's prefix is a pure batch function, so the maintained index's
-    pairs() equals the batch operator (same order) over the union of
-    drained batches at any drain point — AND, the lemma's real
-    content, a STALE order (frozen from half the corpus) still yields
-    exactly the brute-force truth: frequency drift costs candidates,
-    never recall. new_pairs() is the dd09 new×(corpus∪new) shape;
-    replays are no-ops; crash windows rewrite identical partitions;
-    order/threshold mismatches refuse."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.operators.dedup import (
-        prefix_filter_pairs,
-        shingle_tokens,
-    )
-    from datapipeline_template_spark.operators.text import tokenize
-    from datapipeline_template_spark.streaming.prefix_join import (
-        IncrementalPrefixJoin,
-    )
-
-    t = 500
-    docs = table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "doc_id", shingle_tokens(tokenize("text"), k=3).alias("shingles")
-    )
-    b1 = sh.where(F.col("doc_id") % 2 == 0)
-    b2 = sh.where(F.col("doc_id") % 2 == 1)
-
-    # Order frozen from HALF the corpus — deliberately stale wrt the
-    # full stream.
-    half_order = (
-        b1.select(F.explode(F.array_distinct("shingles")).alias("_s"))
-        .groupBy("_s")
-        .agg(F.count(F.lit(1)).cast("long").alias("_df"))
-    )
-
-    store = str(tmp_path / "pj_store")
-    inc = IncrementalPrefixJoin(store, t_milli=t)
-    with pytest.raises(ValueError, match="frozen order"):
-        inc.process_batch(b1, batch_id=0)
-    inc.freeze_order(half_order)
-    inc.freeze_order(half_order)  # identical re-freeze is a no-op
-    with pytest.raises(ValueError, match="fingerprint"):
-        inc.freeze_order(half_order.withColumn("_df", F.col("_df") + 1))
-
-    def keyset(df):
-        return sorted(
-            (r["id_a"], r["id_b"], r["inter_n"], r["union_n"])
-            for r in df.collect()
-        )
-
-    inc.process_batch(b1, batch_id=0)
-    assert keyset(inc.pairs(spark)) == keyset(
-        prefix_filter_pairs(b1, "doc_id", "shingles", t, order=half_order)
-    )
-
-    inc.process_batch(b2, batch_id=1)
-    want = keyset(prefix_filter_pairs(sh, "doc_id", "shingles", t, order=half_order))
-    assert keyset(inc.pairs(spark)) == want
-    # Recall survives the stale order: equals the self-ordered batch
-    # join (== brute force, pinned in test_operators).
-    assert want == keyset(prefix_filter_pairs(sh, "doc_id", "shingles", t))
-
-    # new_pairs(1) = all pairs minus the within-batch-0 pairs.
-    within0 = keyset(
-        prefix_filter_pairs(b1, "doc_id", "shingles", t, order=half_order)
-    )
-    got_new = keyset(inc.new_pairs(spark, 1))
-    assert sorted(set(want) - set(within0)) == got_new
-
-    # Replay no-op + crash window.
-    inc.process_batch(b1, batch_id=0)
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(b2, batch_id=1)
-    assert keyset(inc.pairs(spark)) == want
-
-    # Param guard + empty state.
-    with pytest.raises(ValueError, match="never meet"):
-        IncrementalPrefixJoin(store, t_milli=600)
-    IncrementalPrefixJoin(store, t_milli=t)
-    fresh = IncrementalPrefixJoin(str(tmp_path / "fresh"))
-    assert fresh.pairs(spark).count() == 0
-
-
-def test_incremental_prefix_join_rejects_duplicate_order_keys(spark, tmp_path):
-    """A duplicate _s key in the frozen order would multiply every
-    prefix row through the frequency join — refused at freeze time."""
-    import pytest
-
-    from datapipeline_template_spark.streaming.prefix_join import (
-        IncrementalPrefixJoin,
-    )
-
-    inc = IncrementalPrefixJoin(str(tmp_path / "dup_store"))
-    dup = spark.createDataFrame([(1, 2), (1, 3), (2, 1)], "_s long, _df long")
-    with pytest.raises(ValueError, match="duplicate _s"):
-        inc.freeze_order(dup)
-
-
-def test_incremental_prefix_join_resend_dedupe(spark, tmp_path):
-    """At-least-once re-sends: a doc id re-sent under a NEW batch_id
-    (which the marker discipline cannot collapse) lands duplicate rows
-    in both stores — the distinct'd sets read keeps pairs() emitting
-    each verified pair exactly ONCE, preserving the ==batch
-    equivalence."""
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.operators.dedup import prefix_filter_pairs
-    from datapipeline_template_spark.streaming.prefix_join import (
-        IncrementalPrefixJoin,
-    )
-
-    rows = [
-        (1, [10, 11, 12, 13]),
-        (2, [10, 11, 12, 14]),
-        (3, [20, 21, 22, 23]),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, shingles array<long>")
-    order = (
-        df.select(F.explode("shingles").alias("_s"))
-        .groupBy("_s")
-        .agg(F.count(F.lit(1)).cast("long").alias("_df"))
-    )
-    inc = IncrementalPrefixJoin(str(tmp_path / "resend_store"), t_milli=500)
-    inc.freeze_order(order)
-    inc.process_batch(df, batch_id=0)
-    # Re-send docs 1 and 2 verbatim under a fresh batch id.
-    inc.process_batch(df.where(F.col("doc_id") <= 2), batch_id=1)
-
-    def keyset(out):
-        return sorted(
-            (r["id_a"], r["id_b"], r["inter_n"], r["union_n"])
-            for r in out.collect()
-        )
-
-    got = inc.pairs(spark).collect()
-    assert len(got) == len({(r["id_a"], r["id_b"]) for r in got})
-    assert keyset(inc.pairs(spark)) == keyset(
-        prefix_filter_pairs(df, "doc_id", "shingles", 500, order=order)
-    )
-    assert keyset(inc.new_pairs(spark, 1)) == [(1, 2, 3, 5)]
-
-
-def test_incremental_retention_matches_batch(spark, tmp_path, sf_dir):
-    """21st incremental family: first-seen days are MIN-mergeable and
-    the activity matrix is a distinct union, so the maintained
-    triangle equals the w11 registry query over the union of drained
-    batches at any drain point — INCLUDING an out-of-order drain
-    whose late batch moves users' cohort days EARLIER and re-ages
-    their rows (cohorts are read-time decisions, never stored).
-    Replays no-op; a crash window rewrites identical partitions;
-    column mismatches refuse to merge."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.queries import load_all
-    from datapipeline_template_spark.streaming.retention import (
-        IncrementalRetention,
-    )
-
-    registry = load_all()
-    ev = (
-        table(spark, sf_dir, "events")
-        .where(F.col("user_id").isNotNull())
-        .select(
-            "user_id",
-            F.expr("unix_micros(ts) DIV 86400000000").alias("d"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    def batch_triangle(events_subset):
-        first = events_subset.groupBy("user_id").agg(
-            F.min("d").alias("cohort_day")
-        )
-        act = (
-            events_subset.join(first, "user_id")
-            .select(
-                "user_id",
-                "cohort_day",
-                (F.col("d") - F.col("cohort_day")).alias("age_days"),
-            )
-            .distinct()
-        )
-        size = first.groupBy("cohort_day").agg(
-            F.count(F.lit(1)).cast("long").alias("n_cohort")
-        )
-        return (
-            act.groupBy("cohort_day", "age_days")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_active"))
-            .join(size, "cohort_day")
-            .selectExpr(
-                "cohort_day", "age_days", "n_active", "n_cohort",
-                "CAST((n_active * 1000) DIV n_cohort AS BIGINT) AS retention_milli",
-            )
-        )
-
-    # OUT-OF-ORDER drains: the LATER half of the timeline arrives
-    # first, so batch 2 moves many users' cohort days earlier.
-    med = ev.agg(F.expr("percentile(d, 0.5)").cast("long").alias("m")).first()["m"]
-    late, early = ev.where(F.col("d") > med), ev.where(F.col("d") <= med)
-
-    store = str(tmp_path / "ret_store")
-    inc = IncrementalRetention(store)
-    inc.process_batch(late, batch_id=0)
-    assert rows(inc.triangle(spark)) == rows(batch_triangle(late))
-
-    inc.process_batch(early, batch_id=1)
-    want = rows(batch_triangle(ev))
-    assert rows(inc.triangle(spark)) == want
-    # And the full-drain triangle equals the registry w11 row set.
-    assert want == rows(
-        registry["w11_cohort_retention"].fn(spark, sf_dir).select(
-            "cohort_day", "age_days", "n_active", "n_cohort",
-            "retention_milli",
-        )
-    )
-
-    # Replay no-op + crash window.
-    inc.process_batch(late, batch_id=0)
-    os.remove(os.path.join(store, "_commits", "1"))
-    inc.process_batch(early, batch_id=1)
-    assert rows(inc.triangle(spark)) == want
-
-    # Param guard + empty state.
-    with pytest.raises(ValueError, match="built with"):
-        IncrementalRetention(store, day_col="other")
-    IncrementalRetention(store)
-    fresh = IncrementalRetention(str(tmp_path / "fresh"))
-    assert fresh.triangle(spark).count() == 0
 
 
 @pytest.mark.slow
