@@ -23,11 +23,7 @@ results are stable under any partitioning. Ties between engines agree
 when the right side is unique per (key, ts) — pre-aggregate if not.
 
 Skew: a hot key's full history sorts in one partition in
-``asof_join``. ``asof_join_bucketed`` is the hot-key path: partition
-by (key, time bucket) so a key's history spreads across buckets, then
-carry ACROSS buckets via a per-bucket summary table (|buckets| rows
-per key, not |rows|) — two shuffles, neither of which concentrates a
-hot key. Property-tested equal to the single-window form.
+``asof_join``.
 """
 
 from __future__ import annotations
@@ -35,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["asof_join", "asof_join_bucketed", "asof_join_nearest"]
+__all__ = ["asof_join", "asof_join_nearest"]
 
 _SIDE = "_asof_side"
 _TS = "_asof_ts"
@@ -108,121 +104,6 @@ def asof_join(
         *lcols,
         F.col(_PAYLOAD).getField(right_ts).alias(f"{prefix}{right_ts}"),
         *[F.col(_PAYLOAD).getField(c).alias(f"{prefix}{c}") for c in value_cols],
-    )
-    if how == "inner":
-        out = out.where(F.col(f"{prefix}{right_ts}").isNotNull())
-    return out
-
-
-_BUCKET = "_asof_bucket"
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    bucket_width_seconds: int = 86_400,
-    how: str = "left",
-    strict: bool = False,
-    prefix: str = "r_",
-) -> DataFrame:
-    """Skew-proof as-of join for HOT keys — identical semantics (and
-    property-tested output) to ``asof_join``, but a key's history never
-    concentrates in one sort partition.
-
-    Two-pass carry:
-
-    1. **In-bucket pass** — the union window partitions by
-       (keys, floor(ts / width)) instead of keys alone, so a hot key's
-       10^9-row history spreads across its time buckets.
-    2. **Cross-bucket seed** — per (keys, bucket) the last right
-       payload is a 1-row summary; a window over the bucket SPINE
-       (every (keys, bucket) present on either side — |buckets| rows
-       per key) carries the previous buckets' last payload forward,
-       and left rows that found no in-bucket match coalesce to it.
-       Earlier-bucket rows are strictly earlier in time, so the seed
-       is correct for both boundary modes.
-
-    Pick ``bucket_width_seconds`` so one bucket of the hottest key
-    fits a partition (width ≈ partition_budget / peak_rows_per_second).
-    Timestamps are compared via their exact epoch values; numeric ts
-    columns work too (width in the column's own units).
-    """
-    if how not in ("left", "inner"):
-        raise ValueError(f"asof_join_bucketed supports how='left'|'inner', got {how!r}")
-    if bucket_width_seconds <= 0:
-        raise ValueError("bucket_width_seconds must be positive")
-
-    def bucket_of(col, frame):
-        c = F.col(col)
-        is_ts = dict(frame.dtypes)[col] in ("timestamp", "timestamp_ntz")
-        num = F.unix_timestamp(c) if is_ts else c
-        return F.floor(num / F.lit(bucket_width_seconds)).cast("long")
-
-    payload = F.struct(F.col(right_ts).alias(right_ts), *[F.col(c) for c in value_cols])
-    payload_type = right.select(payload.alias(_PAYLOAD)).schema[0].dataType
-    l_side, r_side = (0, 1) if strict else (1, 0)
-
-    lcols = left.columns
-    l_part = left.select(
-        *lcols,
-        F.col(left_ts).alias(_TS),
-        bucket_of(left_ts, left).alias(_BUCKET),
-        F.lit(l_side).alias(_SIDE),
-        F.lit(None).cast(payload_type).alias(_PAYLOAD),
-    )
-    null_left = [
-        F.lit(None).cast(left.schema[c].dataType).alias(c) if c not in keys else F.col(c)
-        for c in lcols
-    ]
-    r_part = right.select(
-        *null_left,
-        F.col(right_ts).alias(_TS),
-        bucket_of(right_ts, right).alias(_BUCKET),
-        F.lit(r_side).alias(_SIDE),
-        payload.alias(_PAYLOAD),
-    )
-    unioned = l_part.unionByName(r_part)
-
-    # Pass 1: carry within (keys, bucket) — hot keys spread over buckets.
-    w_in = (
-        Window.partitionBy(*keys, _BUCKET)
-        .orderBy(_TS, _SIDE, _PAYLOAD)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn(_PAYLOAD, F.last(_PAYLOAD, ignorenulls=True).over(w_in))
-
-    # Pass 2: per-bucket last right payload, carried across the bucket
-    # spine (tiny: one row per (keys, bucket) on either side).
-    bucket_last = (
-        r_part.groupBy(*keys, _BUCKET)
-        .agg(F.max(F.struct(F.col(_TS).alias("t"), F.col(_PAYLOAD).alias("p"))).alias("_bl"))
-        .select(*keys, _BUCKET, F.col("_bl").getField("p").alias("_bl"))
-    )
-    spine = unioned.select(*keys, _BUCKET).distinct()
-    w_seed = (
-        Window.partitionBy(*keys)
-        .orderBy(_BUCKET)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seeds = (
-        spine.join(bucket_last, [*keys, _BUCKET], "left")
-        .withColumn("_seed", F.last("_bl", ignorenulls=True).over(w_seed))
-        .select(*keys, _BUCKET, "_seed")
-    )
-
-    out = (
-        carried.where(F.col(_SIDE) == l_side)
-        .join(seeds, [*keys, _BUCKET], "left")
-        .withColumn(_PAYLOAD, F.coalesce(F.col(_PAYLOAD), F.col("_seed")))
-        .select(
-            *lcols,
-            F.col(_PAYLOAD).getField(right_ts).alias(f"{prefix}{right_ts}"),
-            *[F.col(_PAYLOAD).getField(c).alias(f"{prefix}{c}") for c in value_cols],
-        )
     )
     if how == "inner":
         out = out.where(F.col(f"{prefix}{right_ts}").isNotNull())

@@ -54,12 +54,9 @@ from pyspark.sql import types as T
 from ..functions import lit_long_array, lit_long_matrix, quantize_vec
 
 __all__ = [
-    "centroids_to_df",
     "coarse_probe_expr",
     "d4_prune",
     "ivf_assign_corpus",
-    "kmeans_assign_broadcast",
-    "kmeans_assign_join",
     "ivf_pq_adc_topk",
     "ivf_topk_kmeans",
     "k_for_corpus",
@@ -128,76 +125,6 @@ def _assign_struct(qv: Column, centroids: list[list[int]]) -> Column:
     return F.array_min(F.array(*structs))
 
 
-def centroids_to_df(spark, centroids: list[list[int]]) -> DataFrame:
-    """Stage driver-side centroids as a (cid, cv) table — the input
-    shape ``kmeans_assign_join`` broadcasts when k·dim exceeds the
-    UDF-closure cap (``MAX_CENTROID_CELLS``)."""
-    schema = T.StructType(
-        [
-            T.StructField("cid", T.LongType()),
-            T.StructField("cv", T.ArrayType(T.LongType())),
-        ]
-    )
-    return spark.createDataFrame(
-        [(int(i), [int(v) for v in cv]) for i, cv in enumerate(centroids)],
-        schema,
-    )
-
-
-def kmeans_assign_join(
-    df: DataFrame, id_col: str, qv_col: str, centroids_df: DataFrame
-) -> DataFrame:
-    """Huge-k assignment as a PURE-DataFrame plan — the SQL-expressible
-    twin of ``kmeans_assign_broadcast`` (which is the hot path: same
-    Arrow kernel, centroids on a broadcast variable). Use this form
-    when the assignment must stay inside Catalyst — an oracle replay,
-    a SQL-only consumer, an engine without Python UDFs. Centroids stay
-    a TABLE: a broadcast-nested-loop join fans each row to its k (row,
-    centroid) pairs IN-TASK, the exact-int distance folds per pair,
-    and ``min(struct(dist, cid))`` argmins with the family tie-break
-    (smallest dist, then smallest cid — lexicographic struct order,
-    bit-equal to the kernel/Catalyst/DuckDB forms, parity-tested).
-
-    Cost shape vs the kernel: the N·k pairs DO materialize in-task
-    (per pair: one interpreted zip_with fold — dim lambda evals),
-    but never shuffle: the partial ``min`` collapses each group's k
-    pairs map-side, so the one exchange carries ~N rows. The kernel
-    forms do one numpy matmul per Arrow batch with no exchange —
-    prefer them whenever Python UDFs are available.
-
-    Grouping key is (id, vector), NOT id alone: with duplicate ids
-    carrying different vectors a bare id groupBy would min over
-    distances of DIFFERENT vectors and emit an assignment belonging
-    to neither. One row per DISTINCT (id, vector) comes back (exact
-    duplicate rows collapse); callers joining extra columns back on
-    ``id_col`` should keep ids unique per vector, the corpus
-    convention."""
-    d = F.aggregate(
-        F.zip_with(
-            F.col(qv_col), F.col("cv"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    pairs = (
-        df.select(id_col, qv_col)
-        .crossJoin(F.broadcast(centroids_df))
-        .select(
-            id_col,
-            qv_col,
-            F.struct(d.alias("dist"), F.col("cid").alias("cluster")).alias(
-                "_dc"
-            ),
-        )
-    )
-    best = pairs.groupBy(id_col, qv_col).agg(F.min("_dc").alias("_best"))
-    return best.select(
-        id_col,
-        F.col("_best.cluster").alias("cluster"),
-        F.col("_best.dist").alias("dist"),
-    )
-
-
 def kmeans_assign_catalyst(
     df: DataFrame, qv_col: str, centroids: list[list[int]]
 ) -> DataFrame:
@@ -264,34 +191,10 @@ def kmeans_assign(
     if C.size > MAX_CENTROID_CELLS:
         raise ValueError(
             f"centroid matrix has {C.size} cells > {MAX_CENTROID_CELLS}; "
-            "a closure this large would be re-shipped per task — use "
-            "kmeans_assign_broadcast (broadcast-variable kernel, the "
-            "hot path) or kmeans_assign_join (SQL-expressible twin)."
+            "a closure this large would be re-shipped per task."
         )
 
     out = df.withColumn("_best", _assign_kernel_udf(lambda: C)(F.col(qv_col)))
-    return out.select(
-        *df.columns, F.col("_best.cluster").alias("cluster"),
-        F.col("_best.dist").alias("dist"),
-    )
-
-
-def kmeans_assign_broadcast(df: DataFrame, qv_col: str, centroids_bc) -> DataFrame:
-    """The huge-k HOT PATH past ``MAX_CENTROID_CELLS``: the identical
-    Arrow kernel, but the centroid matrix rides a Spark BROADCAST
-    VARIABLE — torrent-shipped ONCE per executor and fetched inside
-    the UDF, never re-serialized into each task's closure. Map-only
-    like ``kmeans_assign`` and bit-equal to it (parity-tested); this,
-    not the join form, is what a 50k×768-centroid SemDeDup assignment
-    should run.
-
-    ``centroids_bc`` = ``spark.sparkContext.broadcast(
-    np.asarray(centroids, dtype=np.int64))`` — the caller owns the
-    handle (create once, ``unpersist()`` when done)."""
-    out = df.withColumn(
-        "_best",
-        _assign_kernel_udf(lambda: centroids_bc.value)(F.col(qv_col)),
-    )
     return out.select(
         *df.columns, F.col("_best.cluster").alias("cluster"),
         F.col("_best.dist").alias("dist"),

@@ -41,7 +41,6 @@ __all__ = [
     "keep_latest",
     "keep_latest_salted",
     "keep_latest_window",
-    "exact_dedup",
     "shingle_arrays_kernel",
     "shingle_rows_kernel",
     "shingle_tokens",
@@ -159,12 +158,6 @@ def keep_latest_salted(
         .agg(F.max_by("_latest", final_order).alias("_latest"))
         .select("_latest.*")
     )
-
-
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — hash-aggregate distinct on the subset
-    (or all columns). Map-side combine makes this shuffle-light."""
-    return df.dropDuplicates(subset) if subset else df.dropDuplicates()
 
 
 # ---------------------------------------------------------------------------
@@ -421,7 +414,6 @@ def shingle_arrays_kernel(
     once through this instead of twice through the per-char HOF).
     NULL text rows get a NULL array (matching tokenize(NULL) → NULL
     shingles)."""
-    import pandas as pd  # local: keep module import light
 
     def fmod_p(v):
         q = np.floor(v * (1.0 / p))

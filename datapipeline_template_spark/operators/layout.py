@@ -43,10 +43,9 @@ def clear_stale_managed_location(
     directory on the local filesystem while this process's (fresh,
     Derby) catalog has never heard of it; ``DROP TABLE IF EXISTS``
     then no-ops and the subsequent write dies LOCATION_ALREADY_EXISTS.
-    This is the ONE implementation of that cleanup (write_bucketed,
-    pipe21's fixture databases, and compact_bucketed_silver's stage
-    table all route here) so the path derivation — default-database
-    tables at ``<warehouse>/<tbl>``, qualified ones at
+    This is the ONE implementation of that cleanup (write_bucketed and
+    pipe21's fixture databases route here) so the path derivation —
+    default-database tables at ``<warehouse>/<tbl>``, qualified ones at
     ``<warehouse>/<db>.db/<tbl>``, databases at ``<warehouse>/<db>.db``
     — lives in exactly one place.
 

@@ -3,20 +3,17 @@
 ``mapInPandas`` stages.
 
 Design for 100 TB: media bytes ride in the DataFrame as ``binary``
-columns next to their metadata struct. Decode / feature-extraction are
-per-row CPU work with no cross-row dependency → ``mapInPandas``
+columns next to their metadata struct. Feature extraction is per-row
+CPU work with no cross-row dependency → ``mapInPandas``
 (Arrow-batched; zero shuffle; batch size bounded via
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch of large
-blobs can't OOM an executor). Heavy decode libraries (PIL, ffmpeg,
-torchcodec) are NOT in this container, so the actual decode is stubbed
-behind ``MediaDecodeNotAvailable`` or the deterministic fake decoder;
-everything Spark-side — schemas, batch iteration, partitioning, UDF
-signatures — is real and tested.
+blobs can't OOM an executor). No media decoder (PIL, ffmpeg,
+torchcodec) is a dependency, so every operator here works on the raw
+bytes: metadata, byte statistics, byte-window frames, chunk features
+and byte-level perceptual hashes.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd  # noqa: F401 — module scope so pandas_udf type
 # hints ('pd.Series') resolve at decoration time (same pattern as
@@ -27,10 +24,7 @@ from pyspark.sql import types as T
 
 __all__ = [
     "MEDIA_META_SCHEMA",
-    "MediaDecodeNotAvailable",
     "attach_media_meta",
-    "decode_media",
-    "resize_media",
     "sample_frames",
     "media_byte_stats",
     "byte_chunk_features",
@@ -52,14 +46,6 @@ MEDIA_META_SCHEMA = T.StructType(
 )
 
 
-class MediaDecodeNotAvailable(NotImplementedError):
-    """Raised when a real decoder backend is required but absent.
-
-    This container ships no image/audio libs; production deployments
-    plug a decoder into ``decode_media(backend=...)``.
-    """
-
-
 def attach_media_meta(
     df: DataFrame, binary_col: str, media_type: str, fmt: str
 ) -> DataFrame:
@@ -76,111 +62,6 @@ def attach_media_meta(
             F.octet_length(F.col(binary_col)).cast("long").alias("n_bytes"),
         ),
     )
-
-
-def _fake_decode(blob: bytes) -> list[float]:
-    """Deterministic fake feature vector (8 dims) from raw bytes —
-    stands in for a real decode+embed so the distributed plumbing is
-    testable without media libraries."""
-    acc = [0] * 8
-    for i, byte in enumerate(blob[:4096]):
-        acc[i % 8] = (acc[i % 8] * 31 + byte) % 1_000_003
-    return [a / 1_000_003.0 for a in acc]
-
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.DoubleType())),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
-
-def decode_media(
-    df: DataFrame, id_col: str, binary_col: str, backend: str = "fake"
-) -> DataFrame:
-    """Decode + feature-extract media blobs via Arrow-batched
-    ``mapInPandas``. ``backend='fake'`` uses the deterministic stub;
-    any other backend raises ``MediaDecodeNotAvailable`` here (the
-    deployment injects a real decoder with the same signature)."""
-    if backend != "fake":
-        raise MediaDecodeNotAvailable(
-            f"decoder backend {backend!r} not available in this environment"
-        )
-    src = df.select(F.col(id_col).alias("media_id"), F.col(binary_col).alias("_blob"))
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "features": [_fake_decode(b) for b in pdf["_blob"]],
-                    "n_bytes": [len(b) for b in pdf["_blob"]],
-                }
-            )
-
-    return src.mapInPandas(batches, DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    width: int,
-    height: int,
-    backend: str = "fake",
-) -> DataFrame:
-    """Resize media blobs to (width, height) via Arrow-batched
-    ``mapInPandas`` — binary in, binary out, so resize stages compose
-    with decode/sample in one pipeline without leaving Arrow.
-
-    The fake backend emits a deterministic ``width*height``-byte
-    strided resample of the input bytes (shape-correct, content fake);
-    real backends raise ``MediaDecodeNotAvailable`` here and are
-    injected by deployments with the same (blob, w, h) -> bytes
-    signature.
-    """
-    if backend != "fake":
-        raise MediaDecodeNotAvailable(
-            f"resize backend {backend!r} not available in this environment"
-        )
-    src = df.select(F.col(id_col).alias("media_id"), F.col(binary_col).alias("_blob"))
-    n_out = width * height
-
-    def _fake_resize(blob: bytes) -> bytes:
-        if not blob:
-            return bytes(n_out)
-        step = max(len(blob) // n_out, 1)
-        out = (blob[::step] * ((n_out // max(len(blob[::step]), 1)) + 1))[:n_out]
-        return out
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "resized": [_fake_resize(b) for b in pdf["_blob"]],
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return src.mapInPandas(batches, RESIZED_SCHEMA)
 
 
 def sample_frames(

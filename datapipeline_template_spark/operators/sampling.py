@@ -22,7 +22,6 @@ from ..functions import POLY_P
 __all__ = [
     "sample_hash_bucket",
     "deterministic_sample",
-    "stratified_sample",
     "quota_sample",
     "weighted_race_key",
     "weighted_sample_topk",
@@ -42,22 +41,6 @@ def deterministic_sample(df: DataFrame, key: str, rate: float) -> DataFrame:
     ~rate sample, stable under repartitioning/compaction and pure
     filter pushdown (no shuffle, no RNG state)."""
     return df.where(sample_hash_bucket(key) < F.lit(int(rate * POLY_P)))
-
-
-def stratified_sample(df: DataFrame, key: str, stratum_col: str, rates: dict[str, float]) -> DataFrame:
-    """Per-stratum hash sampling: each stratum gets its own rate
-    (missing strata default to 0 — dropped). The membership test stays
-    a scalar predicate, so Catalyst can still push it down; no
-    per-group shuffle, unlike `sampleBy` which is also seed-unstable."""
-    bucket = sample_hash_bucket(key)
-    thresh = F.lit(0).cast("long")
-    expr = None
-    for stratum, rate in rates.items():
-        cond = F.col(stratum_col) == F.lit(stratum)
-        t = F.lit(int(rate * POLY_P))
-        expr = F.when(cond, t) if expr is None else expr.when(cond, t)
-    thresh = expr.otherwise(F.lit(0)) if expr is not None else thresh
-    return df.where(bucket < thresh)
 
 
 def _stratum_case(stratum_col: str, values: dict[str, int], default: int) -> Column:

@@ -254,7 +254,7 @@ def ivf_topk(
     are the value-checked reference.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     qid = query_id_col or id_col
     corpus_v = corpus.select(

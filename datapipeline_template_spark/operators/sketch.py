@@ -388,8 +388,6 @@ def kmv_hash(col):
     Mirrors the oracle SQL exactly (same stepwise reductions); string
     keys should go through functions.poly_hash first.
     """
-    from pyspark.sql import Column
-
     c = F.col(col) if isinstance(col, str) else col
     c = c.cast("long")
     p = F.lit(KMV_P).cast("long")

@@ -6,16 +6,7 @@ runtime (`/root/reference/resources/sdp_pipeline.pipeline.yml:34`
 first line of defense is the same delegation — AQE skew-join splitting
 is on by default (session.DEFAULT_CONFS) and covers sort-merge joins.
 
-What AQE does NOT cover, these operators do:
-
-* ``salted_join`` — broadcast-infeasible joins where one side's key
-  distribution is pathological (a handful of keys hold most rows) and
-  the join is NOT sort-merge (e.g. a shuffled hash join Spark picked,
-  or a non-equi residual preventing AQE's split). Salting spreads each
-  hot key across ``salt`` reducer partitions by appending a salt
-  column derived from a high-cardinality column of the big side, and
-  replicating the small side ``salt`` times. Correctness is unchanged
-  for inner/left joins keyed on the original keys.
+What AQE does NOT cover, this operator does:
 
 * ``two_phase_distinct`` — exact COUNT(DISTINCT v) per key when a few
   keys own most of the distinct values. The single-key shuffle routes
@@ -27,51 +18,16 @@ What AQE does NOT cover, these operators do:
   operator exists for pipelines that need the intermediate (e.g. to
   cache the deduplicated pair set across several downstream aggs).
 
-Both are pure DataFrame rewrites — the optimizer still sees
-everything, and results are bit-identical to the unsalted forms.
+It is a pure DataFrame rewrite — the optimizer still sees everything,
+and results are bit-identical to the single-phase form.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_join", "two_phase_distinct"]
-
-_SALT = "_skew_salt"
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    keys: list[str],
-    how: str = "inner",
-    salt: int = 16,
-    spread_col: str | None = None,
-) -> DataFrame:
-    """Equi-join ``big ⋈ small`` on ``keys`` with hot-key salting.
-
-    The big side gets a deterministic salt in [0, salt) hashed from
-    ``spread_col`` (any reasonably distinct column — a line number, an
-    id; defaults to the whole row struct), so rows of one hot key fan
-    out over ``salt`` partitions. The small side is replicated ×salt
-    via a 1-level explode, so every (key, salt) bucket finds its match.
-
-    Cost model: small side shuffle volume ×salt — only worth it when
-    the hot key's single-reducer time exceeds that. Supports
-    inner/left joins (the replicated side must be the lookup side;
-    right/full would duplicate unmatched small rows across salts).
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    if salt < 2:
-        return big.join(small, keys, how)
-    spread: Column = F.struct(*big.columns) if spread_col is None else F.col(spread_col)
-    big_s = big.withColumn(_SALT, F.pmod(F.hash(spread), F.lit(salt)))
-    small_s = small.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    return big_s.join(small_s, [*keys, _SALT], how).drop(_SALT)
+__all__ = ["two_phase_distinct"]
 
 
 def two_phase_distinct(

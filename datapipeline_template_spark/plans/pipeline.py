@@ -247,11 +247,7 @@ class Pipeline:
             )
         else:
             df = cluster_for_layout(df, entity.clustering_cols)
-            writer = (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .option("overwriteSchema", "true")
-            )
+            writer = df.write.mode("overwrite").format("parquet")
             if ext:
                 writer = writer.option("path", ext)
             writer.saveAsTable(fqn)

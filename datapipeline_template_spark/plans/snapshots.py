@@ -50,7 +50,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..streaming.store import write_json
 
@@ -378,38 +377,3 @@ class SnapshotTable:
             except FileNotFoundError:
                 continue
         return out
-
-
-def changes_between(
-    tbl: SnapshotTable, from_version: int, to_version: int
-) -> DataFrame:
-    """CDF-lite (Change Data Feed analog): rows ADDED between two
-    versions, computed from the log's file-level delta — reads ONLY the
-    files added in (from, to], never the whole table. Append-only
-    streams (the bronze pattern) get exact incremental reads this way;
-    for overwrite commits it surfaces the rewritten rows, matching the
-    file-level granularity Delta CDF falls back to without row tracking."""
-    if to_version <= from_version:
-        raise ValueError("to_version must be > from_version")
-    state = tbl._state_at(to_version)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(json.loads(state["schema"]))
-    parts: list[DataFrame] = []
-    for v in range(from_version + 1, to_version + 1):
-        m = tbl._read_manifest(v)
-        if m.get("operation") == "optimize":
-            continue  # compaction moves bytes, not logical rows
-        added = m.get("add", [])
-        if added:
-            parts.append(
-                tbl.spark.read.schema(schema)
-                .parquet(*[os.path.join(tbl.path, f) for f in added])
-                .withColumn("_commit_version", F.lit(v).cast("long"))
-            )
-    if not parts:
-        return tbl.spark.createDataFrame([], schema.add("_commit_version", "long"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

@@ -1440,8 +1440,6 @@ _DD20_METHODS = ("exact", "minhash", "chunk", "substr", "semdedup", "d4")
 
 
 def _dd20_oracle() -> str:
-    from ._kmeans_sql import cos_sql  # noqa: F401 — via _semdedup_ctes
-
     # The dd14b span chain over the SHARED tk token hashes, CTE names
     # prefixed w- to coexist with MINHASH_CC_CTES' sh/sig in one WITH.
     substr_ctes = f""", wn AS (

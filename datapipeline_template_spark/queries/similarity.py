@@ -1556,9 +1556,6 @@ def ss20_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scale ADC composes with IVF routing (ss15) — IVF bounds
     candidates, PQ bounds bytes; the eval here scores the full slice
     to measure pure PQ error."""
-    from functools import reduce as _reduce
-
-    from ..functions import norm_sq_prequantized, quantize_vec
     from ..operators.clustering import pq_adc_topk, pq_codebooks, pq_encode
 
     emb = table(spark, sf_dir, "embeddings").where(
@@ -2821,13 +2818,7 @@ def ss25_ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     EQUI-JOIN, never a theta join (the plan-guarded ss21 shape)."""
     from pyspark.sql import Window
 
-    from ..functions import norm_sq_prequantized, quantize_vec
-    from ..operators.clustering import (
-        coarse_probe_expr,
-        kmeans_assign,
-        kmeans_fit,
-    )
-    from ..operators.similarity import sq_dim_stats, sq_encode
+    from ..operators.clustering import coarse_probe_expr
 
     emb, qv, truth, cent, stats, codes = _ivfsq_truth_and_index(spark, sf_dir)
     qp = qv.where(F.col("vec_id") < _SS21_NQ).select(
@@ -3293,13 +3284,8 @@ def ss28_ivfsq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors — per-query-constant exact work at any corpus size."""
     from pyspark.sql import Window
 
-    from ..functions import dot_expanded, norm_sq_prequantized, quantize_vec
-    from ..operators.clustering import (
-        coarse_probe_expr,
-        kmeans_assign,
-        kmeans_fit,
-    )
-    from ..operators.similarity import sq_dim_stats, sq_encode
+    from ..functions import dot_expanded
+    from ..operators.clustering import coarse_probe_expr
 
     emb, qv, truth, cent, stats, codes = _ivfsq_truth_and_index(spark, sf_dir)
     qp = qv.where(F.col("vec_id") < _SS21_NQ).select(
@@ -3782,8 +3768,6 @@ def _ss31_oracle() -> str:
     """ss30's sq8+trunc32 composition with the strong view's RRF
     contribution scaled by w_a — same view specs, same truth, one new
     knob. Fused top-5 per weight ratio."""
-    from ..operators.similarity import rademacher_signs  # noqa: F401 — spec parity with ss30
-
     weight_blocks, selects = [], []
     for wa, wb in _SS31_WEIGHTS:
         tag = f"w{wa}_{wb}"
@@ -4054,13 +4038,7 @@ def ss32_tail_recall_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction is a per-query count + a 0..k histogram grid."""
     from pyspark.sql import Window
 
-    from ..functions import norm_sq_prequantized, quantize_vec
-    from ..operators.clustering import (
-        coarse_probe_expr,
-        kmeans_assign,
-        kmeans_fit,
-    )
-    from ..operators.similarity import sq_dim_stats, sq_encode
+    from ..operators.clustering import coarse_probe_expr
 
     emb, qv, truth, cent, stats, codes = _ivfsq_truth_and_index(spark, sf_dir)
     qcodes = codes.where(F.col("vec_id") < _SS21_NQ).select(
@@ -4446,13 +4424,7 @@ def ss34_tail_slo_nprobe_chooser(spark: SparkSession, sf_dir: str) -> DataFrame:
     that bounded frame — no re-rout, no re-score, no rescan."""
     from pyspark.sql import Window
 
-    from ..functions import norm_sq_prequantized, quantize_vec
-    from ..operators.clustering import (
-        coarse_probe_expr,
-        kmeans_assign,
-        kmeans_fit,
-    )
-    from ..operators.similarity import sq_dim_stats, sq_encode
+    from ..operators.clustering import coarse_probe_expr
 
     emb, qv, truth, cent, stats, codes = _ivfsq_truth_and_index(spark, sf_dir)
     qp = qv.where(F.col("vec_id") < _SS21_NQ).select(

@@ -4,8 +4,8 @@
 streaming DataFrames, so each query here runs the exact expression the
 streaming module ships, on the static `events` table, where the DuckDB
 oracle can replay it (tumbling = time_bucket; session = gap logic).
-The genuinely-streaming execution paths (watermarks, AvailableNow,
-stateful applyInPandasWithState) are exercised in tests/test_streaming.py.
+The genuinely-streaming execution paths (watermarks, AvailableNow)
+are exercised in tests/test_streaming.py.
 """
 
 from __future__ import annotations

@@ -2975,7 +2975,7 @@ def tx33_heaps_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     decays across the vocabulary, tx33 asks how the vocabulary GROWS
     with the corpus. The number gates tokenizer sizing and streaming-
     vocab maintenance: a saturating corpus (β → 0) means a fixed
-    vocab is safe and IncrementalBpeVocab re-learns rarely; a β ≈ 0.5
+    vocab is safe and a maintained vocab re-learns rarely; a β ≈ 0.5
     corpus means vocab tables grow with √N and every fixed-vocab
     tokenizer sheds coverage at scale. MEASURED at sf0.01: every
     source saturates its 30–31-token vocabulary within the first few

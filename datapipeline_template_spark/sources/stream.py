@@ -91,12 +91,12 @@ def run_available_now(
 ) -> StreamingQuery:
     """Materialize the stream with Trigger.AvailableNow: process every
     file not yet recorded in the checkpoint, then stop (the
-    reference's triggered, non-continuous pipeline update). Appends
-    with mergeSchema so evolved columns land in the sink."""
+    reference's triggered, non-continuous pipeline update). New source
+    columns reach a table sink because the caller adds them to the
+    table before the run (``Pipeline._evolve_table_schema``)."""
     writer = (
         df.writeStream.format(output_format)
         .option("checkpointLocation", checkpoint_dir)
-        .option("mergeSchema", "true")
         .outputMode("append")
         .trigger(availableNow=True)
     )

@@ -1,5 +1,6 @@
-"""Streaming: event-time windows, watermark dedup, stateful operators,
-stream joins, and the exactly-once incremental maintainers.
+"""Streaming: event-time windows and the exactly-once incremental
+maintainers (MinHash-LSH pairs, k-means assignment, SemDeDup marks,
+the curation funnel, the IVF-PQ index and KMV sketches).
 
 Every maintainer keeps its state under one ``store_path`` and builds
 on ``store.BatchStore``, which fixes the store contract in one place:

@@ -18,9 +18,9 @@ families write — ``_batch``-partitioned parquet whose read side treats
 partitions as a BAG (drops ``_batch`` and merges). Folding committed
 partitions into one ``_batch=-1`` base partition is then
 read-invariant by construction (equivalence-tested per family).
-Datasets partitioned by anything else (D4's per-cluster prototype
-marks) or not partitioned at all are intentionally invisible to
-discovery — they maintain bounded layouts already.
+Datasets partitioned by anything else or not partitioned at all are
+intentionally invisible to discovery — they maintain bounded layouts
+already.
 
 Replay safety: the commit markers (``streaming/store.py``) are NEVER
 removed, so a ``foreachBatch`` replay of a folded batch still
@@ -47,12 +47,6 @@ fault-injection hook ``crash_after=`` exists for the crash-window
 tests only. Single-writer discipline: like ``process_batch`` itself,
 compaction assumes no concurrent drain of the same store (the
 maintenance step runs between triggers).
-
-``IncrementalBucketedSilver`` stores are catalog tables, not raw
-parquet dirs — ``compact_bucketed_silver`` handles them with the same
-journal pattern expressed as INSERT OVERWRITE + partition drops so the
-table-level bucket spec (the shuffle-free-join property) survives
-compaction, plan-pinned in tests.
 """
 
 from __future__ import annotations
@@ -60,7 +54,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .store import COMMITS_DIR, read_json, write_json
@@ -74,8 +68,6 @@ __all__ = [
     "discover_stores",
     "discover_datasets",
     "dataset_present",
-    "compact_bucketed_silver",
-    "resume_bucketed_compaction",
     "set_auto_compact_policy",
     "get_auto_compact_policy",
     "auto_compact_due",
@@ -112,8 +104,8 @@ def _committed_ids(store_root: str) -> set[int]:
 def discover_stores(path: str) -> list[str]:
     """Every directory under ``path`` (inclusive) holding a commit
     marker dir — one entry per (possibly nested)
-    maintainer, so composite stores (StreamingCuration,
-    StreamingManifest) compact their members in one call."""
+    maintainer, so a composite store (StreamingCuration) compacts its
+    members in one call."""
     roots = []
     for dirpath, dirnames, _ in os.walk(path):
         if COMMITS_DIR in dirnames:
@@ -478,145 +470,3 @@ def _bump_compaction_counter(store_path: str) -> None:
     if pol is not None:
         pol["n_compactions"] = int(pol.get("n_compactions", 0)) + 1
         write_json(_policy_path(store_path), pol)
-
-
-# -- bucketed silver (catalog table) -----------------------------------------
-
-
-def compact_bucketed_silver(
-    spark: SparkSession, silver, crash_after: str | None = None
-) -> bool:
-    """Fold a maintained bucketed silver's ``_batch`` partitions into
-    the ``_batch=-1`` base WITHOUT losing the table-level bucket spec —
-    the shuffle-free-join property is exactly why this store can't go
-    through the raw-parquet path (a plain rewrite would drop the
-    catalog's bucketing metadata).
-
-    Journal phases, each independently re-runnable so a crash at ANY
-    point resumes without loss or duplication:
-
-      staged:      journal written with the fold set (commit point),
-                   then the folded rows land in a SEPARATE stage table
-                   ``<tbl>__compact_stage`` (mode=overwrite from the
-                   still-intact fold partitions — re-runnable; the
-                   base partition is NOT yet touched, so a re-read
-                   cannot double anything);
-      staged_done: journal advanced only after the stage table is
-                   complete; INSERT OVERWRITE PARTITION (_batch=-1)
-                   FROM THE STAGE TABLE — the stage is immutable, so
-                   re-running the insert after a crash (even one that
-                   landed mid- or post-insert) rewrites the identical
-                   base;
-      inserted:    journal advanced, then ALTER TABLE DROP each folded
-                   partition (IF EXISTS — each drop idempotent);
-      done:        stage table dropped, journal removed.
-
-    The earlier single-phase form read the table's own base partition
-    while overwriting it; a crash between the insert's commit and the
-    journal advance then re-read the ALREADY-FOLDED base plus the
-    still-present batch partitions and duplicated every folded row —
-    the separate stage table is what makes the insert phase
-    idempotent when ``BASE_BATCH`` is in the fold set
-    (crash-window-tested).
-
-    ``silver`` is an IncrementalBucketedSilver; its markers are kept so
-    replays of folded batches stay no-ops, and drains after compaction
-    land new ``_batch`` partitions beside the base exactly as before.
-    """
-    tbl = silver.table_name
-    stage_tbl = f"{tbl}__compact_stage"
-    journal = os.path.join(silver.store_path, "table_compact_journal.json")
-
-    def _advance(state: dict, phase: str) -> None:
-        state["phase"] = phase
-        write_json(journal, state)
-
-    state = read_json(journal) if os.path.exists(journal) else None
-
-    if state is None:
-        if not spark.catalog.tableExists(tbl):
-            return False
-        parts = [
-            int(r[0].split("=", 1)[1])
-            for r in spark.sql(f"SHOW PARTITIONS {tbl}").collect()
-        ]
-        fold = sorted(p for p in parts if p in _committed_ids(silver.store_path) or p == BASE_BATCH)
-        if len(fold) <= 1:
-            # Clear any stage orphan from an aborted pre-journal run.
-            spark.sql(f"DROP TABLE IF EXISTS {stage_tbl}")
-            return False
-        state = {"fold": fold, "phase": "staged"}
-        _advance(state, "staged")
-
-    cols = [c for c in spark.table(tbl).columns if c != "_batch"]
-    col_list = ", ".join(f"`{c}`" for c in cols)
-
-    if state["phase"] == "staged":
-        # No drop has happened yet: every fold partition (including any
-        # existing base) is intact, so rebuilding the stage is
-        # idempotent. Clear a cross-process orphaned stage location
-        # too (the write_bucketed LOCATION_ALREADY_EXISTS rule; the
-        # silver's table name is guard-validated alnum/underscore).
-        from ..operators.layout import clear_stale_managed_location
-
-        clear_stale_managed_location(spark, stage_tbl)
-        (
-            spark.table(tbl)
-            .where(F.col("_batch").isin(state["fold"]))
-            .select(*cols)
-            .repartition(silver.n_buckets, F.col(silver.key_col))
-            .write.mode("overwrite")
-            .format("parquet")
-            .saveAsTable(stage_tbl)
-        )
-        _advance(state, "staged_done")
-        if crash_after == "staged":
-            return True
-
-    if state["phase"] == "staged_done":
-        # The stage table is complete and immutable — the overwrite of
-        # the base partition is re-runnable no matter where a prior
-        # attempt died.
-        spark.sql(
-            f"INSERT OVERWRITE TABLE {tbl} PARTITION (_batch={BASE_BATCH}) "
-            f"SELECT {col_list} FROM {stage_tbl}"
-        )
-        # crash_after='insert' is THE regression window the stage
-        # table exists for: insert committed, journal not advanced —
-        # the resume must re-insert from the immutable stage, never
-        # re-read the (already folded) base.
-        if crash_after == "insert":
-            return True
-        _advance(state, "inserted")
-
-    if state["phase"] == "inserted":
-        for p in state["fold"]:
-            if p != BASE_BATCH:
-                spark.sql(
-                    f"ALTER TABLE {tbl} DROP IF EXISTS PARTITION (_batch={int(p)})"
-                )
-        spark.sql(f"DROP TABLE IF EXISTS {stage_tbl}")
-        os.remove(journal)
-    return True
-
-
-def resume_bucketed_compaction(spark: SparkSession, silver) -> bool:
-    """Read-side guard for bucketed silver stores — the catalog-table
-    analog of ``dataset_present``.
-
-    A crash in the ``inserted`` window leaves the table readable with
-    every folded row present TWICE (folded into the base AND still in
-    its original ``_batch`` partitions, not yet dropped); earlier
-    windows leave it consistent but mid-protocol. The journal file
-    marks every such window, so ``IncrementalBucketedSilver.table()``
-    /``join()`` call this before serving reads: if a journal is
-    pending, finish the compaction (each phase is independently
-    re-runnable) instead of silently serving duplicated silver until
-    the next explicit ``compact()``. On a clean store this costs one
-    ``os.path.exists``. Returns True when a pending run was resumed.
-    """
-    journal = os.path.join(silver.store_path, "table_compact_journal.json")
-    if not os.path.exists(journal):
-        return False
-    compact_bucketed_silver(spark, silver)
-    return True

@@ -72,9 +72,7 @@ from .store import BatchStore
 
 __all__ = [
     "StreamingCuration",
-    "StreamingManifest",
     "batch_survivors",
-    "batch_manifest_keep",
 ]
 
 _PREFIX_LEN = 10
@@ -316,242 +314,3 @@ def batch_survivors(
         .join(sem_drop, on="doc_id", how="left_anti")
         .select("doc_id", "source")
     )
-
-
-class StreamingManifest(BatchStore):
-    """The COMPOSED-manifest maintainer: StreamingCuration's
-    seven-stage survivors + ``IncrementalDecon``'s frozen-benchmark
-    overlap gate + ``IncrementalDsir``'s target-ratio gate, maintained
-    together so the training manifests pipe15 (decontaminated) and
-    pipe17 (DSIR-targeted) stay current one micro-batch at a time —
-    the r9-verdict composition of three existing families, not a new
-    one.
-
-    The same cost split as StreamingCuration: every corpus-touching
-    artifact (gate flags, LSH pairs, SemDeDup marks, eval-shingle
-    probes, DSIR token profiles) is paid once per batch by the
-    sub-maintainers; the cheap corpus-level decisions (CC + survivor
-    windows, the contamination anti-join, the adaptive DSIR cut —
-    which is an order statistic of the CURRENT corpus and so must be
-    re-derived, exactly like survivor election) happen at read time
-    over maintained state only. ``manifest()`` then runs the SHARED
-    consumer stage (queries/packing.manifest_from_flags: tokenizer
-    fit + encode + pack) over the maintained keep set, reading doc
-    text from the lake BY ID — at 100 TB the manifest stage reads the
-    kept few percent, never the stream's full history.
-
-    Frozen artifacts: centroids + classifier weights (the
-    StreamingCuration contract), the eval shingle set (the
-    IncrementalDecon contract — fingerprint-guarded), and the eval
-    SOURCE label + DSIR target (pinned in manifest_meta.json,
-    refuse-to-merge). Equivalence (pinned in tests/test_streaming.py):
-    after any drains, ``decon_keep()`` / ``dsir_keep()`` equal the
-    batch compositions under the same frozen artifacts
-    (``batch_manifest_keep``), and at the drain where the seen corpus
-    IS the artifact-deriving corpus, ``manifest()`` equals the
-    registry pipe15 / pipe17 rows verbatim. Exactly-once at every
-    level: each sub-maintainer keeps its own markers; the composer's
-    marker gates the whole batch."""
-
-    def __init__(
-        self,
-        store_path: str,
-        centroids: list[list[int]],
-        weights: DataFrame,
-        eval_docs: DataFrame | None = None,
-        eval_source: str = "src0",
-        target_source: str = "src1",
-        decon_k: int = 5,
-        **curation_kwargs,
-    ) -> None:
-        from .decon import IncrementalDecon
-        from .dsir import IncrementalDsir
-
-        self.store_path = store_path
-        self._pin(
-            "manifest_meta.json",
-            {
-                "eval_source": eval_source,
-                "target_source": target_source,
-                "decon_k": decon_k,
-            },
-            "manifests gated against different eval sources or targets "
-            "must never merge (rebuild a fresh store)",
-        )
-        self.eval_source = eval_source
-        self.cur = StreamingCuration(
-            os.path.join(store_path, "cur"), centroids, weights,
-            **curation_kwargs,
-        )
-        self.decon = IncrementalDecon(
-            os.path.join(store_path, "decon"), eval_docs, k=decon_k
-        )
-        self.dsir = IncrementalDsir(
-            os.path.join(store_path, "dsir"), target_source
-        )
-
-    def _land(self, batch: DataFrame, batch_id: int) -> None:
-        """Delegate to the three sub-maintainers (each replay-safe
-        behind its own marker — a crash mid-composition re-runs only
-        the uncommitted members)."""
-        batch = batch.localCheckpoint(eager=True)
-        self.cur.process_batch(batch, batch_id)
-        self.decon.process_batch(
-            batch.where(F.col("source") != self.eval_source).select(
-                "doc_id", "text"
-            ),
-            batch_id,
-        )
-        self.dsir.process_batch(
-            batch.select("doc_id", "text", "source"), batch_id
-        )
-
-    # -- reads -------------------------------------------------------------
-
-    def decon_keep(self, spark: SparkSession) -> DataFrame:
-        """pipe15's keep set from maintained state: seven-stage
-        survivors ∧ non-eval-source ∧ no shared eval shingle."""
-        surv = self.cur.survivors(spark)
-        contam = self.decon.flags(spark).select("doc_id")
-        return (
-            surv.where(F.col("source") != self.eval_source)
-            .join(contam, "doc_id", "left_anti")
-            .select("doc_id")
-        )
-
-    def dsir_keep(self, spark: SparkSession) -> DataFrame:
-        """pipe17's keep set: decon_keep ∧ the maintained DSIR
-        selection (tx25's adaptive cut over the CURRENT corpus — an
-        order statistic, re-derived per read like survivor election)."""
-        kept = (
-            self.dsir.selection(spark)
-            .where(F.col("kept") == 1)
-            .select("doc_id")
-        )
-        return self.decon_keep(spark).join(kept, "doc_id", "left_semi")
-
-    def budget_keep(
-        self, spark: SparkSession, sf_dir: str, k: int | None = None
-    ) -> DataFrame:
-        """pipe18's keep set: decon_keep raced per source by token
-        mass, ≤ k winners each. The race is a PURE FUNCTION of
-        (doc_id, n_tok), so the budget needs NO new maintained state
-        — like survivor election and the DSIR cut it is a read-time
-        decision over the maintained keep set, with token counts read
-        from the lake BY ID (the same bounded access manifest()'s
-        consumer stage already performs)."""
-        from ..catalog import table
-        from ..operators.packing import whitespace_token_count
-        from ..operators.sampling import weighted_sample_topk
-        from ..queries.packing import _PIPE18_K
-
-        pool = (
-            self.decon_keep(spark)
-            .join(
-                table(spark, sf_dir, "documents").select(
-                    "doc_id",
-                    "source",
-                    whitespace_token_count(F.col("text")).alias("n_tok"),
-                ),
-                "doc_id",
-            )
-            .where(F.col("n_tok") > 0)
-        )
-        return weighted_sample_topk(
-            pool,
-            key="doc_id",
-            weight_col="n_tok",
-            k=k if k is not None else _PIPE18_K,
-            stratum_cols="source",
-        ).select("doc_id")
-
-    def manifest(
-        self, spark: SparkSession, sf_dir: str, gate: str = "decon"
-    ) -> DataFrame:
-        """The maintained training manifest — the shared consumer
-        stage (tokenizer fit + encode + packing) over the maintained
-        keep set, reading kept documents' text from the lake by id.
-        ``gate='decon'`` is pipe15's composition, ``gate='dsir'``
-        pipe17's, ``gate='budget'`` pipe18's."""
-        from ..queries.packing import manifest_from_flags
-
-        if gate not in ("decon", "dsir", "budget"):
-            raise ValueError(f"unknown gate {gate!r} (decon|dsir|budget)")
-        keep = {
-            "decon": self.decon_keep,
-            "dsir": self.dsir_keep,
-        }.get(gate)
-        keep = (
-            keep(spark)
-            if keep is not None
-            else self.budget_keep(spark, sf_dir)
-        )
-        return manifest_from_flags(
-            spark, sf_dir, keep.withColumn("f_sem", F.lit(True))
-        )
-
-
-def batch_manifest_keep(
-    docs: DataFrame,
-    emb: DataFrame,
-    centroids: list[list[int]],
-    weights: DataFrame,
-    eval_docs: DataFrame,
-    eval_source: str = "src0",
-    target_source: str = "src1",
-    decon_k: int = 5,
-    gate: str = "decon",
-    **survivor_kwargs,
-) -> DataFrame:
-    """The BATCH composed keep set under FROZEN artifacts — the
-    equivalence oracle for ``StreamingManifest`` (what pipe15/pipe17's
-    `_decon_keep_ids` compute, with the curation artifacts and the
-    eval shingle set replaced by the given frozen ones; on the
-    artifact-deriving corpus the two are identical, which the
-    streaming test asserts against the registry rows). ``eval_docs``
-    is the frozen benchmark (doc_id, text); DSIR scores over the SEEN
-    corpus (the maintainer's corpus-relative semantics)."""
-    from ..operators.dedup import decontaminate_flags, shingle_tokens
-    from ..operators.text import dsir_logratio, dsir_select, tokenize
-
-    surv = batch_survivors(docs, emb, centroids, weights, **survivor_kwargs)
-    cand = docs.where(F.col("source") != eval_source).select(
-        "doc_id", shingle_tokens(tokenize("text"), k=decon_k).alias("sh")
-    )
-    ev = eval_docs.select(
-        shingle_tokens(tokenize("text"), k=decon_k).alias("sh")
-    )
-    contam = decontaminate_flags(cand, ev, "doc_id", "sh").select("doc_id")
-    keep = (
-        surv.where(F.col("source") != eval_source)
-        .join(contam, "doc_id", "left_anti")
-        .select("doc_id")
-    )
-    if gate == "dsir":
-        kept = (
-            dsir_select(dsir_logratio(docs, target_source))
-            .where(F.col("kept") == 1)
-            .select("doc_id")
-        )
-        keep = keep.join(kept, "doc_id", "left_semi")
-    elif gate == "budget":
-        from ..operators.packing import whitespace_token_count
-        from ..operators.sampling import weighted_sample_topk
-        from ..queries.packing import _PIPE18_K
-
-        pool = (
-            keep.join(
-                docs.select(
-                    "doc_id",
-                    "source",
-                    whitespace_token_count(F.col("text")).alias("n_tok"),
-                ),
-                "doc_id",
-            )
-            .where(F.col("n_tok") > 0)
-        )
-        keep = weighted_sample_topk(
-            pool, key="doc_id", weight_col="n_tok", k=_PIPE18_K,
-            stratum_cols="source",
-        ).select("doc_id")
-    return keep

@@ -1,6 +1,6 @@
 """Streaming k-means assignment maintenance — the clustering-side
-member of the incremental-index family (MinHash signatures, sign-LSH
-vectors, and now cluster assignments).
+member of the incremental-index family (MinHash signatures and cluster
+assignments).
 
 The production SemDeDup shape: the k-means FIT runs once over a
 bootstrap sample (``operators/clustering.kmeans_fit`` — centroids are
@@ -31,7 +31,7 @@ from ..functions import quantize_vec
 from ..operators.clustering import kmeans_assign
 from .store import BatchStore
 
-__all__ = ["IncrementalD4", "IncrementalKmeansAssign", "IncrementalSemDeDup"]
+__all__ = ["IncrementalKmeansAssign", "IncrementalSemDeDup"]
 
 
 class IncrementalKmeansAssign(BatchStore):
@@ -120,7 +120,7 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
     any number of drains the marked set equals batch
     ``operators/clustering.semdedup`` over every vector seen with the
     same frozen centroids — a pair is examined exactly once, in the
-    batch where its LATER member arrives (the IncrementalSignLsh
+    batch where its LATER member arrives (the IncrementalLsh
     contract, applied to semantic dedup).
 
     The removal rule is per-pair local (mark the higher
@@ -199,10 +199,10 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
         existing = self._read_prior(spark, self._vec_path, batch_id, new_v.schema)
         all_v = existing.unionByName(new_v)
 
-        # Probe-side broadcast gated on the batch count already in hand
-        # (the IncrementalSignLsh discipline): a normal micro-batch
-        # broadcasts against the big stored corpus, a backfill degrades
-        # to a shuffle join instead of OOMing executors.
+        # Probe-side broadcast gated on the batch count already in hand:
+        # a normal micro-batch broadcasts against the big stored corpus,
+        # a backfill degrades to a shuffle join instead of OOMing
+        # executors.
         probe = (
             F.broadcast(new_v) if n_new <= self.broadcast_max_rows else new_v
         )
@@ -239,16 +239,6 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
         self._write(
             new_v.select("_id", "cluster", "dist"), self._assign_path, batch_id
         )
-        # Subclass hook (IncrementalD4): derived per-cluster state is
-        # recomputed from the store AFTER this batch's writes but
-        # BEFORE the commit marker, so a crash anywhere in the window
-        # replays the whole batch idempotently.
-        self._post_batch(spark, batch_id, new_v)
-
-    def _post_batch(
-        self, spark: SparkSession, batch_id: int, new_v: DataFrame
-    ) -> None:
-        """Default: no derived state beyond marks/vectors/assignments."""
 
     def marks(self, spark: SparkSession) -> DataFrame:
         """All maintained (cluster, vec_id) removal marks, distinct
@@ -272,134 +262,4 @@ class IncrementalSemDeDup(IncrementalKmeansAssign):
                     T.StructField("vec_id", T.LongType()),
                 ]
             ),
-        )
-
-
-class IncrementalD4(IncrementalSemDeDup):
-    """Streaming D4 maintenance — the sixth incremental-index family:
-    SemDeDup marks stream exactly-once-per-pair (inherited), and the
-    SSL-prototype marks — which are per-cluster GLOBAL ranks, not
-    pair-local decisions — are re-derived per batch for the TOUCHED
-    clusters only and stored partitioned BY CLUSTER, so a corpus
-    append rewrites exactly the cluster partitions it changed (the
-    incremental-silver bucket-rewrite shape applied to curation
-    marks). After any number of drains ``d4_marks`` equals batch
-    ``operators/clustering.d4_prune`` over every vector seen with the
-    same frozen centroids.
-
-    Why re-derive instead of emit-once: a cluster's prototype set is
-    a function of its CURRENT survivor ranking — later arrivals can
-    sem-mark existing members (shrinking the survivors) or grow the
-    quota floor((n·pct)/100), so previously-emitted prototype marks
-    can become wrong. A cluster's survivors change only when the
-    cluster receives vectors, so re-ranking touched clusters is
-    sufficient for exact equality.
-
-    Stale-partition discipline: a touched cluster can legitimately
-    re-rank to ZERO prototype marks (quota 0, or survivors shrank);
-    dynamic partition overwrite skips partitions absent from the
-    written frame, which would leave the old marks standing. Every
-    touched cluster therefore writes a NULL-id sentinel row, filtered
-    on read — the partition is always rewritten.
-
-    ``proto_pct`` is store state like the threshold: prototype marks
-    for untouched clusters were derived under the recorded value, so
-    a maintainer re-created with a different pct would silently mix
-    regimes — refused loudly (pinned in d4_params.json).
-    """
-
-    def __init__(
-        self,
-        store_path: str,
-        centroids: list[list[int]],
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        threshold: float = 0.3,
-        proto_pct: int = 20,
-        broadcast_max_rows: int = 2_000_000,
-    ) -> None:
-        super().__init__(
-            store_path, centroids, id_col, vec_col, threshold,
-            broadcast_max_rows,
-        )
-        self.proto_pct = int(proto_pct)
-        self._proto_path = self._path("proto_marks")
-        self._pin(
-            "d4_params.json",
-            {"proto_pct": self.proto_pct},
-            "untouched clusters keep marks derived under the recorded "
-            "value — rebuild into a fresh store_path",
-        )
-
-    def _post_batch(
-        self, spark: SparkSession, batch_id: int, new_v: DataFrame
-    ) -> None:
-        from pyspark.sql import Window
-
-        # Coordination-only collect: ≤ k cluster ids.
-        touched = [
-            int(r["cluster"])
-            for r in new_v.select("cluster").distinct().collect()
-        ]
-        if not touched:
-            return
-        vecs = self._read_batches(spark, self._vec_path).where(
-            F.col("cluster").isin(touched)
-        )
-        sem = self.marks(spark).where(F.col("cluster").isin(touched))
-        surv = (
-            vecs.where(F.col("_n") > 0)
-            .select("cluster", F.col("_id").alias("vec_id"), "_cs")
-            .join(sem, on=["cluster", "vec_id"], how="left_anti")
-        )
-        w = Window.partitionBy("cluster").orderBy(
-            F.col("_cs").desc(), F.col("vec_id").asc()
-        )
-        wc = Window.partitionBy("cluster")
-        proto = (
-            surv.select(
-                "cluster",
-                "vec_id",
-                F.row_number().over(w).alias("_r"),
-                F.count(F.lit(1)).over(wc).alias("_nc"),
-            )
-            .where(F.col("_r") <= F.expr(f"(_nc * {self.proto_pct}) div 100"))
-            .select("cluster", "vec_id")
-        )
-        sentinels = spark.createDataFrame(
-            [(c, None) for c in touched], "cluster long, vec_id long"
-        )
-        proto.unionByName(sentinels).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cluster").parquet(self._proto_path)
-
-    def proto_marks(self, spark: SparkSession) -> DataFrame:
-        """Current (cluster, vec_id) prototype marks — sentinel rows
-        filtered, the partition-column type pinned back to long (Spark
-        infers small numeric partition values as int)."""
-        from pyspark.sql import types as T
-
-        if self._has_files(self._proto_path):
-            return (
-                spark.read.parquet(self._proto_path)
-                .where(F.col("vec_id").isNotNull())
-                .select(F.col("cluster").cast("long").alias("cluster"), "vec_id")
-            )
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("cluster", T.LongType()),
-                    T.StructField("vec_id", T.LongType()),
-                ]
-            ),
-        )
-
-    def d4_marks(self, spark: SparkSession) -> DataFrame:
-        """(cluster, vec_id, reason) — the batch ``d4_prune`` output
-        shape, kept current incrementally."""
-        return self.marks(spark).withColumn(
-            "reason", F.lit("semdedup")
-        ).unionByName(
-            self.proto_marks(spark).withColumn("reason", F.lit("prototype"))
         )

@@ -1,4 +1,4 @@
-"""Event-time windowing and stateful streaming operators (X8).
+"""Event-time window operators for streams and batches (X8).
 
 These builders return transformed (streaming or batch) DataFrames —
 `F.window` / `F.session_window` work identically on both, which is how
@@ -6,29 +6,18 @@ the batch oracle queries validate the same expressions the streams run.
 
 Watermark guidance at scale: the watermark bounds state size — without
 it a streaming agg's state grows forever. `delay` should cover the
-P99.9 event lateness of the feed; `dropDuplicatesWithinWatermark`
-similarly bounds the dedup state (the unbounded `dropDuplicates` on a
-stream is an OOM at 100 TB).
+P99.9 event lateness of the feed.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING, Any
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 __all__ = [
     "tumbling_counts",
     "sliding_counts",
     "session_stats",
-    "dedup_within_watermark",
-    "running_totals_stateful",
 ]
 
 
@@ -89,142 +78,5 @@ def session_stats(
             F.col("win.start").alias("session_start"),
             key_col,
             "n_events",
-        )
-    )
-
-
-def dedup_within_watermark(df: DataFrame, keys: list[str], ts_col: str, delay: str) -> DataFrame:
-    """Streaming exact dedup with bounded state: duplicates arriving
-    within the watermark horizon are dropped; state older than the
-    horizon is evicted (R19's streaming sibling)."""
-    if df.isStreaming:
-        return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
-    return df.dropDuplicates(keys)
-
-
-_STATE_SCHEMA = T.StructType([T.StructField("total", T.DoubleType())])
-
-
-def running_totals_stateful(
-    df: DataFrame, key_col: str, value_col: str, ts_col: str, watermark: str = "1 hour"
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: emits
-    the updated running total per key each micro-batch. Demonstrates
-    arbitrary keyed state (the escape hatch when built-in windows
-    can't express the semantics)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("batch_rows", T.LongType()),
-        ]
-    )
-
-    def update(
-        key: tuple[Any, ...], pdfs: Iterator["pd.DataFrame"], state: GroupState
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        total = state.get[0] if state.exists else 0.0
-        rows = 0
-        for pdf in pdfs:
-            total += float(pdf[value_col].sum())
-            rows += len(pdf)
-        state.update((total,))
-        yield pd.DataFrame({"key": [str(key[0])], "total": [total], "batch_rows": [rows]})
-
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def tws_available() -> bool:
-    """Spark 4's ``transformWithStateInPandas`` drives its keyed state
-    through a protobuf-based state server; without ``google.protobuf``
-    in the Python environment the driver worker crashes AT RUNTIME
-    (analysis succeeds — the failure is a streaming-query crash, the
-    worst place to discover a missing dep). Probe the capability up
-    front so callers fail loudly at build time instead."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_totals_tws(
-    df: DataFrame, key_col: str, value_col: str, ts_col: str, watermark: str = "1 hour"
-) -> DataFrame:
-    """``running_totals_stateful``'s twin on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (object-oriented StatefulProcessor,
-    composable typed state variables, timers, TTL). Same semantics:
-    emits the updated running total per key each micro-batch.
-
-    Raises ``RuntimeError`` with the remedy when the environment lacks
-    ``protobuf`` (this container does — the avro-style loud gate;
-    the applyInPandasWithState form is the always-available path, and
-    tests exercise whichever side the environment supports).
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs the `protobuf` package for "
-            "its state-server protocol and `google.protobuf` is not "
-            "importable here. `pip install protobuf`, or use "
-            "running_totals_stateful (applyInPandasWithState) which has "
-            "no such dependency."
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("total", T.DoubleType()),
-            T.StructField("batch_rows", T.LongType()),
-        ]
-    )
-
-    class RunningTotal(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._total = handle.getValueState("total", "total double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            total = self._total.get()[0] if self._total.exists() else 0.0
-            n = 0
-            for pdf in rows:
-                total += float(pdf[value_col].sum())
-                n += len(pdf)
-            self._total.update((total,))
-            yield pd.DataFrame(
-                {"key": [str(key[0])], "total": [total], "batch_rows": [n]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .transformWithStateInPandas(
-            RunningTotal(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
         )
     )

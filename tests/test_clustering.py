@@ -328,102 +328,6 @@ def test_ivfpq_full_probe_equals_full_adc(spark):
     assert got == want and len(got) == 25
 
 
-def test_kmeans_assign_join_matches_kernel(spark):
-    """Huge-k assignment parity: the broadcast-centroid-table form
-    (the path past MAX_CENTROID_CELLS) must be BIT-EQUAL to the Arrow
-    kernel on every (id, cluster, dist) — including argmin ties,
-    which both break toward the smallest cid."""
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.functions import quantize_vec
-    from datapipeline_template_spark.operators.clustering import (
-        centroids_to_df,
-        kmeans_assign,
-        kmeans_assign_join,
-        kmeans_fit,
-    )
-
-    emb = (
-        table(spark, "/root/testdata/sf0.001", "embeddings")
-        .select("vec_id", "embedding")
-        .where("vec_id < 300")
-    )
-    cent = kmeans_fit(emb, "vec_id", "embedding", k=8, n_iter=2)
-    q = emb.select("vec_id", quantize_vec("embedding").alias("_qv"))
-    want = {
-        (r["vec_id"], r["cluster"], r["dist"])
-        for r in kmeans_assign(q, "_qv", cent)
-        .select("vec_id", "cluster", "dist")
-        .collect()
-    }
-    got = {
-        (r["vec_id"], r["cluster"], r["dist"])
-        for r in kmeans_assign_join(
-            q, "vec_id", "_qv", centroids_to_df(spark, cent)
-        ).collect()
-    }
-    assert got == want and len(got) == 300
-
-    # Tie-break parity on a constructed tie: a point equidistant from
-    # two centroids must go to the smaller cid in BOTH forms.
-    tie = spark.createDataFrame(
-        [(0, [0])], "vec_id long, _qv array<long>"
-    )
-    cents = [[-2], [2]]
-    k = kmeans_assign(tie, "_qv", cents).collect()[0]
-    j = kmeans_assign_join(
-        tie, "vec_id", "_qv", centroids_to_df(spark, cents)
-    ).collect()[0]
-    assert (k["cluster"], k["dist"]) == (j["cluster"], j["dist"]) == (0, 4)
-
-
-def test_kmeans_assign_broadcast_matches_closure_kernel(spark):
-    """The broadcast-VARIABLE kernel (the huge-k hot path) is the same
-    Arrow kernel as the closure form — every (id, cluster, dist)
-    bit-equal, including the argmin-tie row (np.argmin first-minimum
-    == smallest cid in both, since both run the identical code)."""
-    import numpy as np
-
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.functions import quantize_vec
-    from datapipeline_template_spark.operators.clustering import (
-        kmeans_assign,
-        kmeans_assign_broadcast,
-        kmeans_fit,
-    )
-
-    emb = (
-        table(spark, "/root/testdata/sf0.001", "embeddings")
-        .select("vec_id", "embedding")
-        .where("vec_id < 300")
-    )
-    cent = kmeans_fit(emb, "vec_id", "embedding", k=8, n_iter=2)
-    q = emb.select("vec_id", quantize_vec("embedding").alias("_qv"))
-    want = {
-        (r["vec_id"], r["cluster"], r["dist"])
-        for r in kmeans_assign(q, "_qv", cent).collect()
-    }
-    bc = spark.sparkContext.broadcast(np.asarray(cent, dtype=np.int64))
-    try:
-        got = {
-            (r["vec_id"], r["cluster"], r["dist"])
-            for r in kmeans_assign_broadcast(q, "_qv", bc).collect()
-        }
-    finally:
-        bc.unpersist()
-    assert got == want and len(got) == 300
-
-    # The tie row: equidistant point lands on the smaller cid.
-    tie = spark.createDataFrame([(0, [0])], "vec_id long, _qv array<long>")
-    bc2 = spark.sparkContext.broadcast(
-        np.asarray([[-2], [2]], dtype=np.int64)
-    )
-    try:
-        b = kmeans_assign_broadcast(tie, "_qv", bc2).collect()[0]
-    finally:
-        bc2.unpersist()
-    assert (b["cluster"], b["dist"]) == (0, 4)
-
-
 def test_semdedup_kernel_marks_bit_equal_reference(spark, sf_dir):
     """The per-cluster Arrow mark kernel must produce EXACTLY the
     Catalyst pair join's marks — same (cluster, vec_id) set — on the

@@ -12,7 +12,6 @@ from pyspark.sql import types as T
 
 from datapipeline_template_spark.operators.cdc import drop_soft_deleted
 from datapipeline_template_spark.operators.dedup import (
-    exact_dedup,
     keep_latest,
     keep_latest_window,
     minhash_signature,
@@ -21,9 +20,7 @@ from datapipeline_template_spark.operators.dedup import (
 )
 from datapipeline_template_spark.operators.expectations import expect_all_or_drop
 from datapipeline_template_spark.operators.multimodal import (
-    MediaDecodeNotAvailable,
     attach_media_meta,
-    decode_media,
     sample_frames,
 )
 from datapipeline_template_spark.operators.projection import (
@@ -138,12 +135,6 @@ def test_expectations_metrics(spark):
     assert obs.get == {"has_x": 2, "has_y": 2}
 
 
-def test_exact_dedup_subset(spark):
-    df = spark.createDataFrame([Row(a=1, b="x"), Row(a=1, b="y"), Row(a=2, b="x")])
-    assert exact_dedup(df, ["a"]).count() == 2
-    assert exact_dedup(df).count() == 3
-
-
 def test_shingles_and_minhash_similarity_ordering(spark):
     # Near-identical docs share most shingles → identical/close minhash;
     # a different doc does not.
@@ -181,47 +172,12 @@ def test_simhash_near_for_near_texts(spark):
     assert ham(by_id[1], by_id[2]) < ham(by_id[1], by_id[3])
 
 
-def test_multimodal_decode_plumbing(spark):
-    df = spark.createDataFrame(
-        [Row(media_id=1, payload=b"aaaabbbbcccc"), Row(media_id=2, payload=b"\x00\x01\x02")]
-    )
-    decoded = decode_media(df, "media_id", "payload").collect()
-    by_id = {r["media_id"]: r for r in decoded}
-    assert len(by_id[1]["features"]) == 8
-    assert by_id[2]["n_bytes"] == 3
-    # Deterministic: same bytes → same features.
-    again = {r["media_id"]: r for r in decode_media(df, "media_id", "payload").collect()}
-    assert again[1]["features"] == by_id[1]["features"]
-
-
-def test_multimodal_real_backend_raises(spark):
-    df = spark.createDataFrame([Row(media_id=1, payload=b"x")])
-    with pytest.raises(MediaDecodeNotAvailable):
-        decode_media(df, "media_id", "payload", backend="pillow")
-
-
 def test_multimodal_meta_and_frames(spark):
     df = spark.createDataFrame([Row(media_id=1, payload=b"x" * 5000)])
     meta = attach_media_meta(df, "payload", "video", "mp4").select("media_meta.*").collect()[0]
     assert meta["n_bytes"] == 5000 and meta["media_type"] == "video"
     frames = sample_frames(df, "media_id", "payload", every_n_bytes=1024)
     assert frames.count() == 5  # offsets 0,1024,...,4096
-
-
-def test_multimodal_resize_plumbing(spark):
-    from datapipeline_template_spark.operators.multimodal import resize_media
-
-    df = spark.createDataFrame(
-        [Row(media_id=1, payload=b"abcdefgh" * 100), Row(media_id=2, payload=b"")]
-    )
-    out = {r["media_id"]: r for r in resize_media(df, "media_id", "payload", 8, 4).collect()}
-    assert len(out[1]["resized"]) == 32 and out[1]["width"] == 8 and out[1]["height"] == 4
-    assert len(out[2]["resized"]) == 32  # empty blob still shape-correct
-    # Deterministic: same blob, same output.
-    again = {r["media_id"]: r for r in resize_media(df, "media_id", "payload", 8, 4).collect()}
-    assert again[1]["resized"] == out[1]["resized"]
-    with pytest.raises(MediaDecodeNotAvailable):
-        resize_media(df, "media_id", "payload", 8, 4, backend="pillow")
 
 
 def test_ivf_recall_vs_exact(spark, sf_dir):
@@ -486,63 +442,6 @@ def test_asof_join_boundaries_ties_and_inner(spark):
     assert sorted(r["lab"] for r in inner) == ["l1", "l2"]
     with pytest.raises(ValueError, match="key column"):
         asof_join(left, right.withColumnRenamed("k", "kk"), ["k"], "t", "t", ["rid"])
-
-
-@pytest.mark.slow
-def test_asof_bucketed_equals_single_window(spark):
-    """The skew-proof two-pass bucketed as-of must be row-identical to
-    the single-window form — across bucket widths that force many
-    cross-bucket seeds (width=1s → ~every row its own bucket), on a
-    hot key holding 80% of the rows, in both boundary modes, for both
-    timestamp and numeric ts columns."""
-    import random
-
-    from datapipeline_template_spark.operators.asof import asof_join, asof_join_bucketed
-
-    rng = random.Random(7)
-    rows = []
-    for i in range(400):
-        key = "hot" if rng.random() < 0.8 else rng.choice(["a", "b", "c"])
-        # epoch seconds in a narrow band → frequent equal-ts collisions
-        rows.append((i, key, 1_700_000_000 + rng.randrange(120), rng.randrange(50)))
-    df = spark.createDataFrame(rows, "rid long, k string, sec long, v long")
-    tsdf = df.withColumn("ts", F.timestamp_seconds("sec"))
-    left = tsdf.select("rid", "k", "ts")
-    right = (
-        tsdf.where(F.col("v") % 3 == 0)
-        .groupBy("k", "ts")
-        .agg(F.max("rid").alias("pay"))
-    )
-    for strict in (False, True):
-        want = sorted(
-            map(tuple, asof_join(left, right, ["k"], "ts", "ts", ["pay"], strict=strict).collect())
-        )
-        for width in (1, 7, 3600):
-            got = sorted(
-                map(
-                    tuple,
-                    asof_join_bucketed(
-                        left, right, ["k"], "ts", "ts", ["pay"],
-                        bucket_width_seconds=width, strict=strict,
-                    ).collect(),
-                )
-            )
-            assert got == want, f"strict={strict} width={width}"
-    # numeric ts path
-    nleft = df.select("rid", "k", F.col("sec").alias("t"))
-    nright = df.where(F.col("v") % 3 == 0).groupBy("k", F.col("sec").alias("t")).agg(
-        F.max("rid").alias("pay")
-    )
-    want = sorted(map(tuple, asof_join(nleft, nright, ["k"], "t", "t", ["pay"]).collect()))
-    got = sorted(
-        map(
-            tuple,
-            asof_join_bucketed(
-                nleft, nright, ["k"], "t", "t", ["pay"], bucket_width_seconds=10
-            ).collect(),
-        )
-    )
-    assert got == want
 
 
 def test_cascade_rollup_levels_equal_direct_aggregation(spark):

@@ -544,29 +544,6 @@ def test_ss21_ivfpq_candidates_on_cluster_equijoin(spark):
         "BroadcastHashJoin [cluster" in plan
     )
 
-def test_kmeans_assign_join_partial_min_and_broadcast(spark):
-    """Huge-k assignment plan shape: the centroid table broadcasts
-    (nested-loop fan-out stays in-task), and the per-id argmin runs
-    PARTIAL before the single id exchange — the shuffle carries N
-    rows, never N·k pairs."""
-    from datapipeline_template_spark.catalog import table
-    from datapipeline_template_spark.functions import quantize_vec
-    from datapipeline_template_spark.operators.clustering import (
-        centroids_to_df,
-        kmeans_assign_join,
-    )
-
-    emb = table(spark, SF, "embeddings")
-    q = emb.select("vec_id", quantize_vec("embedding").alias("_qv"))
-    cents = centroids_to_df(spark, [[0] * 64, [1] * 64, [2] * 64])
-    plan = (
-        kmeans_assign_join(q, "vec_id", "_qv", cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "partial_min" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-
 
 def test_ss22_rerank_stage_no_cartesian(spark):
     """Two-stage retrieval plan shape: the exact re-rank joins the

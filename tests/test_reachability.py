@@ -1,9 +1,14 @@
-"""Reachability ratchet for the streaming maintainers: every
-module-level class under ``streaming/`` must be named by code that
-ships (the package, ``bench.py``, ``tools/``, ``perfbench/``) or be
-listed in ``PENDING_D4``. Adding a maintainer that nothing reaches, or
-wiring up a pending one, forces an edit to the list. Spark-free: pure
-AST."""
+"""Reachability ratchet for the whole package: every module-level
+``def`` and ``class`` under ``datapipeline_template_spark/`` must be
+reached from code that ships, or be a reference that only tests compare
+against. Spark-free: pure AST.
+
+The roots are the ``@register``-decorated queries, the module-level
+statements of the package, every name that ``__spark_entry__.py``,
+``bench.py``, ``tools/`` and ``perfbench/`` use, and ``REFERENCES``. A
+def is reached when a reached def names it through a ``Name``, an
+``Attribute`` or an import alias; the walk runs to a fixpoint. A def's
+own name and the ``__all__`` lists (strings) do not count as uses."""
 
 from __future__ import annotations
 
@@ -13,30 +18,16 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 PACKAGE = REPO / "datapipeline_template_spark"
 
-# Streaming classes that only tests reach today: each is to be wired
-# to a registered surface or deleted (ROADMAP D4).
-PENDING_D4 = {
-    "IncrementalBm25",
-    "IncrementalBpeVocab",
-    "IncrementalBucketedSilver",
-    "IncrementalD4",
-    "IncrementalPageRank",
-    "IncrementalSignLsh",
-    "IncrementalSurprisal",
-    "IncrementalWeightedSample",
-    "StreamingManifest",
-}
+# Test-only references: the simple forms that tests compare the
+# shipped operators against (``keep_latest``, ``kmeans_assign``). An
+# entry that shipped code starts to use must leave this set.
+REFERENCES = {"keep_latest_window", "kmeans_assign_catalyst"}
 
-
-def _shipped_files() -> list[Path]:
-    files = sorted(PACKAGE.rglob("*.py")) + [REPO / "bench.py"]
-    for sub in ("tools", "perfbench"):
-        files += sorted((REPO / sub).rglob("*.py"))
-    return files
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _names(tree: ast.AST) -> set[str]:
-    """Identifiers a module names in code: ``Name`` ids, ``Attribute``
+    """Identifiers a node names in code: ``Name`` ids, ``Attribute``
     attrs and imported names. Strings, comments and docstrings are not
     code and do not count."""
     out: set[str] = set()
@@ -50,28 +41,58 @@ def _names(tree: ast.AST) -> set[str]:
     return out
 
 
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+def _is_registered(node: ast.AST) -> bool:
+    for dec in node.decorator_list:
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        if getattr(target, "id", getattr(target, "attr", None)) == "register":
+            return True
+    return False
+
+
+def _surface_files() -> list[Path]:
+    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
+    for sub in ("tools", "perfbench"):
+        files += sorted((REPO / sub).rglob("*.py"))
+    return files
+
+
 def _unreached() -> set[str]:
-    trees = {p: ast.parse(p.read_text(), filename=str(p)) for p in _shipped_files()}
-    classes: dict[str, tuple[Path, list[str]]] = {}
-    for path in sorted((PACKAGE / "streaming").glob("*.py")):
-        for node in trees[path].body:
-            if isinstance(node, ast.ClassDef):
-                bases = [ast.unparse(b).rsplit(".", 1)[-1] for b in node.bases]
-                classes[node.name] = (path, bases)
-    names = {p: _names(t) for p, t in trees.items()}
-    reached = {
-        cls
-        for cls, (home, _) in classes.items()
-        if any(cls in ids for p, ids in names.items() if p != home)
-    }
+    uses: dict[str, set[str]] = {}
+    roots = set(REFERENCES)
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in _parse(path).body:
+            if isinstance(node, _DEFS):
+                uses.setdefault(node.name, set()).update(_names(node) - {node.name})
+                if _is_registered(node):
+                    roots.add(node.name)
+            else:
+                roots |= _names(node)
+    for path in _surface_files():
+        roots |= _names(_parse(path))
+    reached = roots & uses.keys()
     frontier = list(reached)
     while frontier:
-        for base in classes[frontier.pop()][1]:
-            if base in classes and base not in reached:
-                reached.add(base)
-                frontier.append(base)
-    return set(classes) - reached
+        for name in uses[frontier.pop()] & uses.keys():
+            if name not in reached:
+                reached.add(name)
+                frontier.append(name)
+    return set(uses) - reached
 
 
-def test_unreached_streaming_classes_are_exactly_pending_d4():
-    assert _unreached() == PENDING_D4
+def test_every_package_def_is_reached():
+    assert sorted(_unreached()) == []
+
+
+def test_references_are_test_only():
+    tests = set()
+    for path in sorted((REPO / "tests").glob("*.py")):
+        tests |= _names(_parse(path))
+    shipped = set()
+    for path in sorted(PACKAGE.rglob("*.py")) + _surface_files():
+        shipped |= _names(_parse(path))
+    assert REFERENCES <= tests
+    assert REFERENCES & shipped == set()

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from datapipeline_template_spark.plans.snapshots import (
     SnapshotConflict,
     SnapshotTable,
-    changes_between,
     parse_retention_interval,
 )
 
@@ -169,24 +168,6 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
     # State replayed through the checkpoint equals the full-log result.
     assert t.read().count() == 7
     assert t.read(version=4).count() == 5
-
-
-def test_changes_between_versions(spark, tmp_path):
-    t = SnapshotTable(spark, str(tmp_path / "t"))
-    t.write(_df(spark, 0, 5))
-    t.write(_df(spark, 5, 8), mode="append")
-    t.write(_df(spark, 8, 9), mode="append")
-    cdf = changes_between(t, 0, 2)
-    rows = {(r["id"], r["_commit_version"]) for r in cdf.collect()}
-    assert rows == {(5, 1), (6, 1), (7, 1), (8, 2)}
-    # Compaction is not a logical change.
-    for i in range(3):
-        t.write(_df(spark, 20 + i, 21 + i).repartition(2), mode="append")
-    v_before = t.latest_version()
-    if t.optimize(target_file_bytes=512 * 1024 * 1024) is not None:
-        assert changes_between(t, v_before, t.latest_version()).count() == 0
-    with pytest.raises(ValueError):
-        changes_between(t, 2, 2)
 
 
 def test_parse_retention_interval():

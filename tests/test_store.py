@@ -28,9 +28,8 @@ def _garble_parts(ds: str) -> int:
 
 
 def test_corrupt_pair_and_flag_stores_raise(spark, tmp_path):
-    """A drained store whose parquet files are garbage must raise on
-    read, never serve an empty result as if nothing had drained."""
-    from datapipeline_template_spark.streaming.decon import IncrementalDecon
+    """A drained pair store whose parquet files are garbage must raise
+    on read, never serve an empty result as if nothing had drained."""
     from datapipeline_template_spark.streaming.lsh import IncrementalLsh
 
     text = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -44,18 +43,8 @@ def test_corrupt_pair_and_flag_stores_raise(spark, tmp_path):
     assert lsh.pairs(spark).count() >= 1
     assert _garble_parts(str(tmp_path / "lsh" / "pairs")) >= 1
 
-    decon = IncrementalDecon(
-        str(tmp_path / "decon"),
-        eval_docs=spark.createDataFrame([(9, text)], "doc_id long, text string"),
-    )
-    decon.process_batch(docs, batch_id=0)
-    assert decon.flags(spark).count() >= 1
-    assert _garble_parts(str(tmp_path / "decon" / "flags")) >= 1
-
     with pytest.raises(Exception):
         lsh.pairs(spark).count()
-    with pytest.raises(Exception):
-        decon.flags(spark).count()
 
 
 def test_torn_parameter_pin_reopens(spark, tmp_path, monkeypatch):
