@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-__all__ = ["SUPPORTED_FORMATS", "format_available", "read_batch", "infer_schema"]
+__all__ = ["SUPPORTED_FORMATS", "check_format", "format_available", "read_batch", "infer_schema"]
 
 SUPPORTED_FORMATS = ("parquet", "json", "csv", "avro", "orc", "text")
 
@@ -42,18 +42,24 @@ def format_available(spark: SparkSession, fmt: str) -> bool:
     return _format_ok_cache[fmt]
 
 
-def _reader(spark: SparkSession, fmt: str, infer: bool = True):
+def check_format(spark: SparkSession, fmt: str) -> None:
+    """Raise unless ``fmt`` is a supported raw format that this session
+    can load. Called at reader construction (batch and stream), so a
+    missing package fails loudly with an actionable message instead of
+    an opaque ClassNotFoundException mid-load."""
     if fmt not in SUPPORTED_FORMATS:
         raise ValueError(f"unsupported raw_file_format {fmt!r}; one of {SUPPORTED_FORMATS}")
     if not format_available(spark, fmt):
-        # Fail loudly at reader construction with an actionable message
-        # instead of an opaque ClassNotFoundException mid-load.
         raise RuntimeError(
             f"raw_file_format {fmt!r} requires the external package "
             f"{_PACKAGED_FORMATS[fmt]!r}, which is not on this session's "
             "classpath (add it via spark.jars.packages). Formats available "
             f"here: {[f for f in SUPPORTED_FORMATS if format_available(spark, f)]}"
         )
+
+
+def _reader(spark: SparkSession, fmt: str, infer: bool = True):
+    check_format(spark, fmt)
     reader = spark.read.format(fmt)
     if fmt == "csv":
         reader = reader.option("header", "true").option("inferSchema", str(infer).lower())

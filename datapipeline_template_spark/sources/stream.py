@@ -28,7 +28,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..streaming.store import read_json, write_json
-from .batch import SUPPORTED_FORMATS, format_available, infer_schema
+from .batch import check_format, infer_schema
 
 __all__ = ["read_stream", "evolve_schema", "run_available_now", "load_or_infer_schema"]
 
@@ -69,13 +69,7 @@ def read_stream(
     spark: SparkSession, fmt: str, path: str, schema: T.StructType
 ) -> DataFrame:
     """Open the incremental file stream (schema mandatory on OSS)."""
-    if fmt not in SUPPORTED_FORMATS:
-        raise ValueError(f"unsupported raw_file_format {fmt!r}; one of {SUPPORTED_FORMATS}")
-    if not format_available(spark, fmt):
-        raise RuntimeError(
-            f"raw_file_format {fmt!r} needs an external Spark package that is "
-            "not on this session's classpath — see sources.batch.format_available"
-        )
+    check_format(spark, fmt)
     reader = spark.readStream.format(fmt).schema(schema)
     if fmt == "csv":
         reader = reader.option("header", "true")

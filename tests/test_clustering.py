@@ -10,7 +10,6 @@ SemDeDup removal rule on a hand-built fixture.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from datapipeline_template_spark.functions import quantize_vec
 from datapipeline_template_spark.operators.clustering import (

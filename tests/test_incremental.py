@@ -8,7 +8,6 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datapipeline_template_spark.config import EntityConfig, PipelineParams

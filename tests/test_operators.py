@@ -3001,8 +3001,6 @@ def test_shingle_arrays_kernel_bit_equal_reference(spark, sf_dir):
     """shingle_arrays_kernel must equal shingle_tokens(tokenize(text))
     row-for-row (k=5, the dd19 shape) with other columns preserved,
     and give NULL arrays for NULL text."""
-    from pyspark.sql import functions as F
-
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.operators.dedup import (
         shingle_arrays_kernel,

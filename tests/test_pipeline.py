@@ -237,8 +237,6 @@ def test_incremental_silver_leaves_session_conf_alone(spark, pipeline_env, tmp_p
 
 
 def test_full_refresh_cleans_external_location(spark, tmp_path):
-    import datetime as dt
-
     from pyspark.sql import types as T
 
     spark.sql("DROP DATABASE IF EXISTS xr_bronze CASCADE")

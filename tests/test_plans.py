@@ -1,5 +1,8 @@
-"""Physical-plan regression guards: the scale-critical plan shapes
-PLANS.md documents must hold in CI, not just in a generated report.
+"""Physical-plan regression guards: the one spec of the engine's
+plan-shape claims. PLANS.md is generated from this file
+(``python tools/gen_plans.py > PLANS.md``): one section per guard that
+takes the ``spark`` fixture, its docstring the claim, its assertions
+the evidence.
 
 Each assertion pins the property that makes the query survive a 100×
 scale-up — pushdown reaching the scan, dims broadcasting, aggregates
@@ -7,12 +10,18 @@ running partial, no accidental cartesian products."""
 
 from __future__ import annotations
 
+import re
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 
 from datapipeline_template_spark.queries import load_all
 
 REGISTRY = load_all()
 SF = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _plan(spark, name: str) -> str:
@@ -20,6 +29,8 @@ def _plan(spark, name: str) -> str:
 
 
 def test_q01_pushdown_and_partial_agg(spark):
+    """Filter pushdown and column pruning reach the parquet scan, and
+    the aggregate runs partial (map-side) before its exchange."""
     plan = _plan(spark, "q01_pricing_summary")
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan
     assert "partial_sum" in plan
@@ -28,44 +39,56 @@ def test_q01_pushdown_and_partial_agg(spark):
 
 
 def test_q02_broadcasts_dimension(spark):
+    """Dimension joins broadcast: no unnecessary shuffle join and no
+    cartesian product around the fact scan."""
     plan = _plan(spark, "q02_top_revenue_orders")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_q03_all_dims_broadcast(spark):
+    """All dimensions broadcast around the fact scan: at least four
+    broadcast hash joins and no sort-merge join."""
     plan = _plan(spark, "q03_regional_volume")
     assert plan.count("BroadcastHashJoin") >= 4
     assert "SortMergeJoin" not in plan  # every dim fits the broadcast path
 
 
 def test_q29_disjunction_still_pushes(spark):
+    """The OR-of-ANDs predicate still pushes its single-side conjuncts
+    to the lineitem scan."""
     plan = _plan(spark, "q29_disjunctive_predicates")
-    # The OR-of-ANDs must not defeat scan pushdown on lineitem.
     assert "PushedFilters: [IsNotNull(l_partkey), Or(" in plan
 
 
 def test_q35_sample_predicate_is_scan_side(spark):
+    """The deterministic hash sample is a scalar filter evaluated in
+    the scan stage, below the aggregate's exchange — no shuffle before
+    the sample predicate."""
     plan = _plan(spark, "q35_deterministic_sample")
-    # Hash-sample membership is a scalar filter evaluated at the scan
-    # stage (no shuffle before it) — the whole point of the operator.
     assert "Filter" in plan and "Exchange" in plan
     assert plan.index("Filter") > plan.index("Exchange")  # filter below agg exchange
 
 
 def test_pipe01_keep_latest_partial_combine(spark):
+    """Keep-latest dedup is max_by with a map-side partial combine and
+    exactly one hash exchange."""
     plan = _plan(spark, "pipe01_cdc_keep_latest")
     assert "partial_max_by" in plan
     assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_dd03_band_join_is_equi(spark):
+    """The LSH candidate join is an equi-join on (band, bucket): no
+    cartesian product and no broadcast nested-loop join."""
     plan = _plan(spark, "dd03_minhash_lsh_candidates")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_q17b_is_joinless(spark):
+    """The time-band pair count is a RANGE-frame window: no join at
+    all."""
     plan = _plan(spark, "q17b_event_pairs_window")
     assert "Join" not in plan
     assert "Window" in plan
@@ -256,6 +279,8 @@ def test_forced_bloom_probe_prefilters_fact_scan(spark):
 
 
 def test_tj03_interval_join_is_hash_join(spark):
+    """The interval-overlap join is a bin-bucketed hash join, never a
+    broadcast nested-loop join."""
     plan = _plan(spark, "tj03_interval_join")
     assert "BroadcastNestedLoopJoin" not in plan
     assert any(j in plan for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin"))
@@ -413,21 +438,23 @@ def test_tx19_classifier_partial_aggs(spark):
     assert "partial_count" in plan or "partial_sum" in plan
 
 
-def test_ss14b_blocked_form_is_equi_join(spark):
-    """The cluster-blocked mutual-kNN operator (ss14b's scale path)
-    must plan the candidate join as an equi-join on the block key —
-    never cartesian/BNLJ. (The ss14b REGISTRY query also computes the
-    deliberately-unblocked eval-slice truth, whose theta join is a
-    bounded BNLJ by design, so the guard targets the operator form.)"""
-    from pyspark.sql import functions as F
-
+def test_ss14b_blocked_form_is_one_block_shuffle(spark):
+    """The cluster-blocked mutual-kNN kernel (ss14b's scale path, the
+    form the registered query calls) is ONE exchange on the block key
+    into FlatMapGroupsInPandas — no candidate join at all, so no
+    cartesian or nested-loop pair stage. (The ss14b REGISTRY query also
+    computes the deliberately-unblocked eval-slice truth, a bounded
+    single-block pass by design, so the guard targets the operator
+    form.)"""
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.functions import quantize_vec
     from datapipeline_template_spark.operators.clustering import (
         kmeans_assign,
         kmeans_fit,
     )
-    from datapipeline_template_spark.operators.similarity import mutual_knn_edges
+    from datapipeline_template_spark.operators.similarity import (
+        mutual_knn_edges_kernel,
+    )
 
     emb = table(spark, SF, "embeddings")
     cent = kmeans_fit(emb, "vec_id", "embedding", k=4, n_iter=1)
@@ -437,12 +464,13 @@ def test_ss14b_blocked_form_is_equi_join(spark):
         cent,
     ).select("vec_id", "embedding", "cluster")
     plan = (
-        mutual_knn_edges(asg, "vec_id", "embedding", k=3, block_col="cluster")
+        mutual_knn_edges_kernel(asg, "vec_id", "embedding", k=3, block_col="cluster")
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "WindowGroupLimit" in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Exchange hashpartitioning(_blk" in plan
+    assert "FlatMapGroupsInPandas" in plan
+    assert "Join" not in plan
 
 
 def test_dd16_no_allpairs_one_proto_window(spark):
@@ -650,7 +678,6 @@ def test_sq_encode_is_map_only(spark):
         sq_dim_stats,
         sq_encode,
     )
-    from pyspark.sql import functions as F
 
     emb = table(spark, SF, "embeddings")
     qv = emb.select("vec_id", quantize_vec("embedding").alias("_qv"))
@@ -693,8 +720,6 @@ def test_q44_sketch_set_ops_group_keyed_only(spark):
     via broadcast attaches. No cartesian product, no sort-merge join:
     nothing in the plan grows faster than the distinct-key dedup any
     COUNT(DISTINCT) already pays."""
-    import re
-
     plan = _plan(spark, "q44_kmv_set_ops")
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
@@ -730,8 +755,6 @@ def test_tx25_dsir_windows_over_distinct_means_only(spark):
     window pair is the selection cut's cumulative sum over DISTINCT
     integer means (mean_mb-keyed — domain-bounded), so no global sort
     of documents exists anywhere in the plan."""
-    import re
-
     plan = _plan(spark, "tx25_dsir_selection")
     assert "CartesianProduct" not in plan
     assert plan.count("Window") == 2  # cum-over-means + the 1-row total
@@ -756,8 +779,6 @@ def test_tx26_bigrams_map_only_extraction(spark):
     """Bigram-LM plan shape: transitions come from a per-row array
     zip — NO positional self-join, no window over token streams, no
     cartesian; everything else is the w-keyed partial-agg family."""
-    import re
-
     plan = _plan(spark, "tx26_bigram_surprisal")
     assert "CartesianProduct" not in plan
     assert "Window" not in plan
@@ -779,8 +800,6 @@ def test_pk09_windows_shard_local_no_global_sort(spark):
     """Batch-formation plan shape: both layout windows partition by
     shard (the pk01/pk08 rule) — no global sort (rangepartitioning),
     no join; the per-shard rank is the only wide stage."""
-    import re
-
     plan = _plan(spark, "pk09_sorted_batching")
     assert "Exchange rangepartitioning" not in plan
     assert "Join" not in plan
@@ -793,8 +812,6 @@ def test_q45_histogram_window_over_bins_only(spark):
     count; the cumulative window runs over BINS (bounded domain —
     flag-partitioned), never over values; no join wider than the
     3-row-per-flag scalar attaches, no cartesian."""
-    import re
-
     plan = _plan(spark, "q45_histogram_quantiles")
     assert "CartesianProduct" not in plan
     assert "partial_count" in plan or "partial_sum" in plan
@@ -856,8 +873,6 @@ def test_rademacher_encode_is_map_only(spark):
     literals, so the encode is map-only — no exchange, no join, no
     Python node between the scan and the projected vectors (the
     sq_encode contract). At 100 TB the encode pass costs one scan."""
-    from pyspark.sql import functions as F
-
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.functions import quantize_vec
     from datapipeline_template_spark.operators.similarity import rademacher_project
@@ -1084,8 +1099,6 @@ def test_dd24_aqe_skew_join_splits_degenerate_bucket(spark):
     (factor × median partition size), so shuffle partitions must
     exceed the count of degenerate buckets (8, one per band) or the
     giants spread one-per-partition and the median IS the giant."""
-    from pyspark.sql import functions as F
-
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.operators.dedup import (
         lsh_candidate_pairs,
@@ -1297,3 +1310,232 @@ def test_pipe23_salt_chooser_plan_and_decision(spark):
         assert r["n_salts"] >= want and r["n_salts"] & (r["n_salts"] - 1) == 0
         assert r["n_winners"] <= r["n_groups"] * 1  # one winner per group
         assert r["n_winners"] == r["n_groups"]
+
+
+def test_q23_scalar_subquery_is_broadcast_aggregate(spark):
+    """The correlated scalar subquery decorrelates to a per-part
+    average that partial-aggregates and BROADCASTS onto the fact scan;
+    the quantity comparison rides that hash join's condition — no
+    per-row subquery, no nested-loop join."""
+    plan = _plan(spark, "q23_small_qty_revenue")
+    assert "partial_avg" in plan
+    assert "Subquery" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
+    assert any(
+        "avg_qty" in ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln
+    )
+
+
+def test_q27_pivot_is_two_level_partial_aggregate(spark):
+    """The pivot is a two-level hash aggregate over pre-combined rows:
+    a (priority, flag) count, then the pivot on priority — both
+    map-side combined, both exchanges keyed on priority, and no
+    shuffle join."""
+    plan = _plan(spark, "q27_pivot_returns_by_priority")
+    assert plan.count("Exchange hashpartitioning(o_orderpriority") == 2
+    assert "partial_count" in plan and "partial_pivotfirst" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_w08_sessionize_single_user_shuffle(spark):
+    """Sessionization: ONE user_id exchange serves both windows (the
+    gap lag and the running session sum) and the final per-session
+    groupBy — no join, no second shuffle."""
+    plan = _plan(spark, "w08_sessionize_events")
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "Exchange hashpartitioning(user_id" in plan
+    assert plan.count("Window [") == 2
+    assert "Join" not in plan
+
+
+@pytest.mark.slow
+def test_dd05_kernel_signatures_feed_band_equi_join(spark):
+    """The numpy MinHash kernel: signatures come from one Arrow
+    MapInPandas pass, and candidates form on the same (band, bucket)
+    equi-join dd03 uses — never all-pairs."""
+    plan = _plan(spark, "dd05_minhash_lsh_kernel")
+    assert "MapInPandas" in plan
+    assert re.search(r"Join \[_band#\d+, _bucket#\d+\]", plan)
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_dd11_first_occurrence_window_no_corpus_shuffle(spark):
+    """Chunk dedup: the first-occurrence rank window is chunk-
+    partitioned over the contested-chunk join, and the rebuild attaches
+    each doc's small drop list by a broadcast LEFT join — the corpus
+    never shuffles; the only doc_id exchange is the drop-list
+    aggregate."""
+    plan = _plan(spark, "dd11_chunk_dedup")
+    assert "Window [row_number() windowspecdefinition(chunk" in plan
+    assert re.search(r"BroadcastHashJoin \[doc_id#\d+L\], \[doc_id#\d+L\], LeftOuter", plan)
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1
+    assert "SortMergeJoin" not in plan
+
+
+def test_q47_cm_estimate_broadcasts_grid(spark):
+    """Count-Min estimate (q47): every join BROADCASTS a grid-sized
+    frame onto the query keys as a LEFT join — no sort-merge or
+    nested-loop join, so no corpus-sized join anywhere. (The grid's
+    map-side combine is pinned on the operator by
+    test_cm_sketch_partial_agg_and_broadcast_estimate.)"""
+    plan = _plan(spark, "q47_cm_frequency_sketch")
+    assert plan.count("BroadcastHashJoin") >= 1
+    assert plan.count("BroadcastHashJoin") == plan.count("LeftOuter, BuildRight")
+    assert "SortMergeJoin" not in plan and "NestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_ss29_projection_recall_bounded_eval_shape(spark):
+    """Rademacher projection recall keeps ss27's shape: retrieval is
+    the bounded-eval broadcast nested-loop pass plus one per-query rank
+    window per stage — no cartesian product. (The map-only encode is
+    pinned by test_rademacher_encode_is_map_only.)"""
+    plan = _plan(spark, "ss29_random_projection_recall")
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" in plan
+    assert plan.count("Window [row_number() windowspecdefinition(query_id") == 3
+
+
+def test_tx27b_bm25_dense_vocab_inverted_index(spark):
+    """Integer BM25 over the dense vocab keeps tx27's inverted-index
+    shape: tf/df/dl partial-aggregate off the token explode, and the
+    bounded query-term side broadcasts onto the postings on the term
+    key — no doc×doc product, no sort-merge join."""
+    plan = _plan(spark, "tx27b_bm25_dense_vocab")
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan
+    assert "partial_count" in plan
+    assert re.search(r"BroadcastHashJoin \[_t#\d+\], \[_t#\d+\]", plan)
+
+
+def test_ss32_tail_histogram_bounded_reductions(spark):
+    """Per-query tail recall reuses ss24/ss25's retrieval: candidates
+    on a cluster equi-join and two per-query rank windows; the new
+    reductions (per-query hit counts, the 0..k grid) attach by LEFT
+    joins — no cartesian product."""
+    plan = _plan(spark, "ss32_tail_recall_histogram")
+    assert "CartesianProduct" not in plan
+    assert re.search(r"Join \[cluster#\d+L\], \[cluster#\d+L\]", plan)
+    assert plan.count("Window [row_number() windowspecdefinition(query_id") == 2
+    assert "LeftOuter" in plan
+
+
+def test_ss37_one_label_window_over_checkpointed_walk(spark):
+    """Centrality-weighted sampling: the PageRank vector is a
+    checkpoint scan joined to the labels once by broadcast, then ONE
+    label-partitioned rank window races the winners — its exchange is
+    the only one."""
+    plan = _plan(spark, "ss37_centrality_weighted_sample")
+    assert "Scan ExistingRDD[node" in plan
+    assert plan.count("BroadcastHashJoin") == 1
+    assert plan.count("Window [row_number() windowspecdefinition(label") == 1
+    assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_tx31_mad_rank_windows_broadcast_medians(spark):
+    """Median/MAD calibration: group-partitioned rank windows over a
+    narrow projection, with the per-group medians broadcast between
+    the passes — every exchange is group-keyed (the only range
+    exchange orders the per-source output), never a document sort;
+    no sort-merge join, no cartesian."""
+    plan = _plan(spark, "tx31_mad_length_gate")
+    assert plan.count("Window [row_number() windowspecdefinition(_g") == 3
+    keys = set(re.findall(r"Exchange hashpartitioning\((\w+)", plan))
+    assert keys <= {"_g", "source"}, keys
+    assert set(re.findall(r"Exchange rangepartitioning\((\w+)", plan)) <= {"source"}
+    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+
+
+def test_dd22_drift_audit_reads_checkpoints(spark):
+    """Prefix-order drift audit: both order variants read checkpointed
+    shingle sets and candidate pairs; verification joins candidate ids
+    to the sets on equi-keys, and the only nested-loop joins are the
+    1-row count attaches — no cartesian."""
+    plan = _plan(spark, "dd22_prefix_order_drift")
+    assert "Scan ExistingRDD[_vid" in plan and "Scan ExistingRDD[id_a" in plan
+    assert re.search(r"Join \[id_a#\d+L\], \[id_a#\d+L\]", plan)
+    assert plan.count("BroadcastNestedLoopJoin") == plan.count(
+        "BroadcastNestedLoopJoin BuildRight, Cross"
+    )
+    assert "CartesianProduct" not in plan
+
+
+def test_mm07_chunk_sets_prefix_equi_join(spark):
+    """CDC-chunk media near-dup reuses dd21's prefix-filter join: the
+    chunk-hash sets and the prefix frame are checkpointed, candidates
+    ride an equi-join on the rare prefix chunk, and verification
+    touches candidate ids only — no cartesian, no nested-loop join."""
+    plan = _plan(spark, "mm07_media_chunk_dedup")
+    assert "Scan ExistingRDD" in plan
+    assert "Window [row_number" not in plan  # prefix ranks checkpointed
+    assert re.search(r"Join \[_s#\d+L\], \[_s#\d+L\]", plan)
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_w12_retention_sketches_are_bounded_windows(spark):
+    """Sketched retention triangle: the cohort and day KMV sketches are
+    rank windows over distinct (group, hash) rows, pruned map-side by
+    WindowGroupLimit; cells join sketch-sized frames — no sort-merge
+    join, no cartesian."""
+    plan = _plan(spark, "w12_retention_sketched")
+    assert plan.count("Window [row_number") == 2
+    assert "WindowGroupLimit" in plan
+    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+
+
+def test_dd25_survivors_keyed_max_by_no_window(spark):
+    """Classifier-quality survivors: cluster labels and scores meet in
+    keyed max_by aggregations with map-side partials — no window over
+    the corpus, no cartesian."""
+    plan = _plan(spark, "dd25_classifier_survivors")
+    assert "partial_max_by" in plan
+    assert "Window" not in plan
+    assert "CartesianProduct" not in plan
+
+
+@pytest.mark.slow
+def test_ss15_ivf_candidates_on_cell_equijoin(spark):
+    """Deterministic IVF: cell assignment and probe selection are Arrow
+    kernels (map-only), candidates form on a cluster equi-join (each
+    query touches ~n_probe/k of the corpus), and the exact rerank is
+    one query-partitioned window — never all-pairs."""
+    plan = _plan(spark, "ss15_ivf_kmeans_ann")
+    assert "ArrowEvalPython" in plan
+    assert re.search(r"Join \[cluster#\d+L\], \[cluster#\d+L\]", plan)
+    assert plan.count("Window [row_number() windowspecdefinition(query_id") == 1
+    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.slow
+def test_ss33_rrpq_rotation_checkpointed_bounded_eval(spark):
+    """RR-PQ: the rotated vectors are a checkpoint scan (the signed
+    permutation is a literal projection), and downstream is ss20's
+    bounded-eval PQ plan — the nested-loop code pass plus per-query
+    rank windows, no cartesian."""
+    plan = _plan(spark, "ss33_rrpq_recall")
+    assert re.search(r"Scan ExistingRDD\[vec_id#\d+L,rvec", plan)
+    assert plan.count("Window [row_number() windowspecdefinition(query_id") == 2
+    assert "CartesianProduct" not in plan
+
+
+@pytest.mark.slow
+def test_pipe22_packing_reads_checkpointed_kept_set(spark):
+    """End-to-end training pipeline: the tokenizer and packing read the
+    checkpointed silver-joined kept set (an ExistingRDD scan, not the
+    curation lineage), and packing is pk01's per-shard window — one
+    shard exchange, no cartesian."""
+    plan = _plan(spark, "pipe22_e2e_training_pipeline")
+    assert re.search(r"Scan ExistingRDD\[doc_id#\d+L,text", plan)
+    assert plan.count("Window [") == 1
+    assert plan.count("Exchange hashpartitioning(shard") == 1
+    assert "CartesianProduct" not in plan
+
+
+def test_plans_md_is_generated_from_the_guards():
+    """PLANS.md is exactly ``tools/gen_plans.py``'s output, so a guard
+    added, renamed or re-documented without regenerating fails here."""
+    out = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "gen_plans.py")],
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert (REPO / "PLANS.md").read_text() == out

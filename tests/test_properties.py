@@ -4,7 +4,6 @@ CDC event sequences → engine invariants."""
 from __future__ import annotations
 
 import pytest
-import datetime as dt
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -305,7 +304,6 @@ def test_quota_sample_prefilter_bounds_window_input(spark):
     input to ~slack*quota rows, not the whole stratum — the property
     that kills the 100 TB single-task sort."""
     from datapipeline_template_spark.operators.sampling import (
-        _quota_window,
         quota_sample,
         sample_hash_bucket,
     )
@@ -476,8 +474,6 @@ def test_dup_span_stats_matches_python_model(spark, texts):
     occurs >1 times corpus-wide, coverage = union of dup windows."""
     import duckdb  # noqa: F401 - keep import parity with parity tests
 
-    from datapipeline_template_spark.queries import load_all
-
     K = 10
     rows = [(i, t) for i, t in enumerate(texts)]
     # Inline the dd12 pipeline on a temp view-free frame: reuse the
@@ -548,8 +544,6 @@ def test_kmeans_assignment_kernel_catalyst_parity_property(spark, vecs, k):
     which both must break toward the smallest cluster id) and
     negative coordinates. Centroids are drawn from the data itself so
     exact-tie distances actually occur."""
-    from pyspark.sql import functions as F
-
     from datapipeline_template_spark.operators.clustering import (
         kmeans_assign,
         kmeans_assign_catalyst,
@@ -957,7 +951,6 @@ def test_log_hist_upper_edge_bounds_property(spark, vals):
         log_hist_bins,
         log_hist_upper,
     )
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
     rows = (

@@ -19,9 +19,10 @@ REPO = Path(__file__).resolve().parents[1]
 PACKAGE = REPO / "datapipeline_template_spark"
 
 # Test-only references: the simple forms that tests compare the
-# shipped operators against (``keep_latest``, ``kmeans_assign``). An
-# entry that shipped code starts to use must leave this set.
-REFERENCES = {"keep_latest_window", "kmeans_assign_catalyst"}
+# shipped operators against (``keep_latest``, ``kmeans_assign``,
+# ``mutual_knn_edges_kernel``). An entry that shipped code starts to
+# use must leave this set.
+REFERENCES = {"keep_latest_window", "kmeans_assign_catalyst", "mutual_knn_edges"}
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 

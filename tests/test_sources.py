@@ -51,11 +51,13 @@ def _avro_available(spark) -> bool:
 
 
 def test_missing_avro_package_fails_loudly(spark, tmp_path):
-    """When spark-avro is absent, the reader must raise an actionable
-    RuntimeError at construction (naming the package to add) instead
-    of an opaque ClassNotFoundException mid-load — and the probe must
-    agree with reality (format_available)."""
-    from datapipeline_template_spark.sources.batch import format_available, read_batch
+    """When spark-avro is absent, the batch and the stream reader must
+    each raise an actionable RuntimeError at construction (naming the
+    package to add) instead of an opaque ClassNotFoundException
+    mid-load — and the probe must agree with reality
+    (format_available)."""
+    from datapipeline_template_spark.sources.batch import format_available
+    from datapipeline_template_spark.sources.stream import read_stream
 
     if _avro_available(spark):
         assert format_available(spark, "avro")
@@ -63,6 +65,8 @@ def test_missing_avro_package_fails_loudly(spark, tmp_path):
     assert not format_available(spark, "avro")
     with pytest.raises(RuntimeError, match="spark-avro"):
         read_batch(spark, "avro", str(tmp_path))
+    with pytest.raises(RuntimeError, match="spark-avro"):
+        read_stream(spark, "avro", str(tmp_path), T.StructType([]))
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "json", "csv", "orc", "avro"])

@@ -541,7 +541,6 @@ def test_incremental_ivfpq_matches_batch(spark, tmp_path, sf_dir):
     import os
 
     import pytest
-    from pyspark.sql import functions as F
 
     from datapipeline_template_spark.catalog import table
     from datapipeline_template_spark.functions import quantize_vec

@@ -1,14 +1,17 @@
-"""Unused-import ratchet: no module under ``datapipeline_template_spark/``
-imports a name it never uses. ``__init__.py`` re-exports, names listed
-in ``__all__``, ``from __future__`` imports and ``# noqa: F401`` lines
-are exempt. Spark-free: pure AST."""
+"""Unused-import ratchet: no module under ``datapipeline_template_spark/``,
+``tests/``, ``tools/`` or ``perfbench/``, and neither ``bench.py`` nor
+``__spark_entry__.py``, imports a name it never uses. The package's
+``__init__.py`` re-exports, names listed in ``__all__``,
+``from __future__`` imports and ``# noqa: F401`` lines are exempt.
+Spark-free: pure AST."""
 
 from __future__ import annotations
 
 import ast
 from pathlib import Path
 
-PACKAGE = Path(__file__).resolve().parents[1] / "datapipeline_template_spark"
+REPO = Path(__file__).resolve().parents[1]
+PACKAGE = REPO / "datapipeline_template_spark"
 
 
 def _exported(tree: ast.Module) -> set[str]:
@@ -58,15 +61,17 @@ def _unused_imports(path: Path) -> list[str]:
                     continue
                 bound = alias.asname or alias.name.split(".")[0]
                 if bound not in used:
-                    out.append(f"{path.relative_to(PACKAGE.parent)}:{alias.lineno} {bound}")
+                    out.append(f"{path.relative_to(REPO)}:{alias.lineno} {bound}")
     return sorted(out)
 
 
+def _scanned() -> list[Path]:
+    files = [p for p in PACKAGE.rglob("*.py") if p.name != "__init__.py"]
+    for sub in ("tests", "tools", "perfbench"):
+        files += (REPO / sub).rglob("*.py")
+    return sorted(files) + [REPO / "bench.py", REPO / "__spark_entry__.py"]
+
+
 def test_no_module_imports_a_name_it_never_uses():
-    unused = [
-        hit
-        for path in sorted(PACKAGE.rglob("*.py"))
-        if path.name != "__init__.py"
-        for hit in _unused_imports(path)
-    ]
+    unused = [hit for path in _scanned() for hit in _unused_imports(path)]
     assert unused == []

@@ -1,1104 +1,70 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: physical-plan evidence for the engine's scale
-claims, extracted from `.explain` output at sf0.1.
+"""Generate PLANS.md from the plan guards in ``tests/test_plans.py``.
 
 Usage: python tools/gen_plans.py > PLANS.md
+
+Spark-free: an AST pass. One section per top-level ``test_*`` that takes
+the ``spark`` fixture, in file order: the registered queries it plans
+(string arguments of ``_plan(...)`` and ``REGISTRY[...]``), the package
+callables it imports, its suite (default or ``slow``) and its docstring
+as the claim. The guard's assertions are the evidence.
 """
-import os
-import re
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from datapipeline_template_spark.queries import load_all
-from datapipeline_template_spark.session import get_spark
-
-
-def main() -> None:
-    spark = get_spark(app_name="plans", shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    reg = load_all()
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    print("# PLANS — physical-plan evidence (generated from `.explain` at sf0.1)")
-    print()
-    print("Regenerate: `python tools/gen_plans.py > PLANS.md`.")
-    print()
-
-    def section_df(name, title, df, greps):
-        s = df._jdf.queryExecution().toString()
-        print(f"## {name} — {title}\n")
-        for label, pat in greps:
-            hits = []
-            for h in re.findall(pat, s):
-                if h not in hits:
-                    hits.append(h)
-            if hits:
-                print(f"- **{label}:** " + "; ".join(f"`{h[:160]}`" for h in hits[:4]))
-        print()
-
-    def section(name, title, greps):
-        section_df(name, title, reg[name].fn(spark, sf), greps)
-
-    section(
-        "q01_pricing_summary",
-        "filter pushdown + column pruning reach the parquet scan",
-        [
-            ("PushedFilters", r"PushedFilters: \[[^\]]*\]"),
-            ("ReadSchema (pruned)", r"ReadSchema: struct<[^>]{0,120}"),
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]*\], functions=\[partial_[a-z_]+"),
-        ],
-    )
-    section(
-        "q02_top_revenue_orders",
-        "dimension joins broadcast, no unnecessary shuffle",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("PushedFilters", r"PushedFilters: \[[^\]]{5,}\]"),
-        ],
-    )
-    section(
-        "q03_regional_volume",
-        "all five dims broadcast around the fact scan",
-        [("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)")],
-    )
-    section(
-        "pipe01_cdc_keep_latest",
-        "keep-latest dedup as max_by with map-side partial combine",
-        [
-            ("Partial max_by", r"partial_max_by\([^)]{0,80}"),
-            ("Single exchange", r"Exchange hashpartitioning\([^)]{0,60}"),
-        ],
-    )
-    section(
-        "dd03_minhash_lsh_candidates",
-        "LSH candidate join is an equi-join on (band, bucket)",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("Bucket join keys", r"hashpartitioning\(_band[^)]{0,60}"),
-        ],
-    )
-    section(
-        "q29_disjunctive_predicates",
-        "OR-of-ANDs still pushes single-side conjuncts to both scans",
-        [
-            ("PushedFilters", r"PushedFilters: \[[^\]]{5,}\]"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-        ],
-    )
-    section(
-        "q27_pivot_returns_by_priority",
-        "pivot = two-level hash aggregate over pre-combined (5x3) rows",
-        [
-            ("Aggregates", r"HashAggregate\(keys=\[o_orderpriority[^\]]{0,40}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-        ],
-    )
-    section(
-        "q23_small_qty_revenue",
-        "correlated scalar subquery decorrelated to broadcast aggregate",
-        [("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)")],
-    )
-    section(
-        "dd05_minhash_lsh_kernel",
-        "numpy signature kernel: ArrowEvalPython feeds the same band join",
-        [
-            ("Python stage", r"(MapInPandas|ArrowEvalPython)[^\n]{0,40}"),
-            ("Bucket join keys", r"hashpartitioning\(_band[^)]{0,60}"),
-        ],
-    )
-    section(
-        "q17b_event_pairs_window",
-        "time-band pair count as a RANGE-frame window: no join at all",
-        [
-            ("Window frame", r"windowspecdefinition\([^)]{0,90}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-        ],
-    )
-    section(
-        "w08_sessionize_events",
-        "one shuffle serves both windows and the final groupBy",
-        [
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-            ("Window", r"Window \[[^\]]{0,80}"),
-        ],
-    )
-    section(
-        "tj01_asof_prev_click",
-        "as-of join as union + window carry: joinless, fan-out independent",
-        [
-            ("PushedFilters (right scan)", r"PushedFilters: \[[^\]]{5,}\]"),
-            ("Window carry", r"last\(_asof_payload[^)]{0,60}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-        ],
-    )
-    section(
-        "pk01_sequence_packing",
-        "training layout: ONE hash exchange on shard, per-shard window, "
-        "no global sort",
-        [
-            ("Exchanges", r"Exchange (?:hash|range)partitioning\([^)]{0,50}"),
-            ("Window", r"Window \[[^\]]{0,70}"),
-        ],
-    )
-    section(
-        "tj02_cascade_rollup",
-        "continuous-aggregate cascade: raw scanned once, coarse levels "
-        "re-aggregate fine ones (chain of partial hash aggregates)",
-        [
-            ("Raw scans (want exactly one)", r"FileScan parquet[^\n]{0,60}"),
-            ("Aggregate chain", r"HashAggregate\(keys=\[[^\]]{0,70}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-        ],
-    )
-    section(
-        "dd11_chunk_dedup",
-        "chunk dedup: first-occurrence window fed by the contested-value "
-        "join, rebuild is a map-only array filter (no doc shuffle)",
-        [
-            ("Window over contested join", r"Window \[[^\]]{0,80}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-        ],
-    )
-    section(
-        "tj03_interval_join",
-        "interval-overlap join as bin-bucketed HASH join (never "
-        "BroadcastNestedLoopJoin)",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin)"),
-            ("Bin keys", r"hashpartitioning\(_bin[^)]{0,50}"),
-        ],
-    )
-    # q42 auto-bypasses the bitmap when the dim fits the broadcast
-    # threshold (round 6) — document the FORCED bloom plan (the
-    # dim-too-big regime it exists for) alongside the bypassed default.
-    section(
-        "q42_bloom_semi_join",
-        "default at this scale: auto-bypassed to the plain broadcast "
-        "semi join (dim fits the broadcast threshold)",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("No bitmap build", r"(bit_or)"),
-        ],
-    )
-
-    from pyspark.sql import functions as F
-
-    from datapipeline_template_spark.catalog import table as _table
-    from datapipeline_template_spark.operators.bloom import bloom_semi_join
-
-    _li = _table(spark, sf, "lineitem")
-    _urgent = _table(spark, sf, "orders").where(F.col("o_orderpriority") == "1-URGENT")
-    section_df(
-        "q42 (forced bloom path)",
-        "Bloom runtime filter: fact scan filtered by xxhash64 bitmap "
-        "probes BEFORE the semi-join exchange",
-        bloom_semi_join(_li, _urgent, "l_orderkey", "o_orderkey", use_bloom=True),
-        [
-            ("Probe predicate (pre-join filter)", r"Filter [^\n]{0,60}xxhash64[^\n]{0,40}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("Bitmap build agg", r"(bit_or|partial_bit_or)\([^)]{0,40}"),
-        ],
-    )
-
-    section(
-        "tj04_gapfill_locf",
-        "gap-fill + LOCF: in-plan sequence-explode grid, JOINLESS as-of "
-        "carry (union + window last) — no per-(day, event) pair join",
-        [
-            ("Grid explode", r"Generate explode\([^\n]{0,60}"),
-            ("Window carry", r"last\([^\n]{0,40}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    from datapipeline_template_spark.operators.similarity import (
-        lsh_multi_table_pairs,
-    )
-
-    _emb = _table(spark, sf, "embeddings").where(F.col("vec_id") < 500)
-    section_df(
-        "ss09/ss10 retrieval (lsh_multi_table_pairs)",
-        "OR-construction retrieval: L bucket equi-joins + pair-key "
-        "distinct, never all-pairs (the eval harness's exact-truth join "
-        "is a deliberately bounded quadratic and is NOT the scale path)",
-        lsh_multi_table_pairs(
-            _emb, "vec_id", "embedding", threshold=0.3, n_planes=8, n_tables=2
-        ),
-        [
-            ("Bucket join keys", r"hashpartitioning\(_blk[^)]{0,40}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    from datapipeline_template_spark.operators.sketch import _quantile_pass_counts
-
-    _li_cents = _li.selectExpr(
-        "l_returnflag AS g", "CAST(ROUND(l_extendedprice*100) AS BIGINT) AS v"
-    )
-    _tasks = spark.createDataFrame(
-        [(0, "A", 0, 10_000_000, 9766), (1, "N", 0, 10_000_000, 9766)],
-        "_task int, g string, _lo long, _hi long, _w long",
-    )
-    section(
-        "dd14b_exact_substring_spans",
-        "span-grain ExactSubstr: dense_rank gap-and-islands (no "
-        "pre-distinct exchange — duplicate positions share a rank), "
-        "window + island groupBy share ONE doc-id shuffle, removed-set "
-        "broadcast into the map-only array_except rebuild",
-        [
-            ("Island window", r"dense_rank\([^\n]{0,60}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,50}"),
-            ("Rebuild join", r"BroadcastHashJoin[^\n]{0,60}"),
-        ],
-    )
-
-    from datapipeline_template_spark.operators.similarity import (
-        lsh_multi_probe_pairs,
-    )
-
-    section_df(
-        "ss11/ss12 retrieval (lsh_multi_probe_pairs)",
-        "multi-probe retrieval: Arrow bucket kernel once per row, "
-        "literal-mask explode on the probe side only, SHUFFLED hash "
-        "join on the bucket key (the ×|masks| side must never be a "
-        "broadcast build — Catalyst's estimate misses explode "
-        "fan-out), exactly-once emission so no distinct stage",
-        lsh_multi_probe_pairs(
-            _emb, "vec_id", "embedding", threshold=0.3, n_planes=8,
-            probe_bits=2,
-        ),
-        [
-            ("Bucket kernel (Arrow)", r"ArrowEvalPython[^\n]{0,60}"),
-            ("Mask explode", r"Generate explode\(\[0,1,2[^\n]{0,40}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    section_df(
-        "q26b refinement pass (_quantile_pass_counts)",
-        "exact quantiles at scale: each pass broadcasts the tiny task "
-        "frame onto the scan and partial-aggregates (task, bucket) "
-        "counts — O(branch) executor memory where percentile() buffers "
-        "every value",
-        _quantile_pass_counts(_li_cents, "g", "v", _tasks),
-        [
-            ("Task-frame broadcast", r"BroadcastHashJoin[^\n]{0,40}"),
-            ("Partial combine", r"partial_count\([^)]{0,20}"),
-            ("Integer bucket expr", r"div _w[^\n]{0,20}"),
-        ],
-    )
-
-    from datapipeline_template_spark.functions import quantize_vec as _qv
-    from datapipeline_template_spark.operators.clustering import kmeans_assign
-
-    _embq = _table(spark, sf, "embeddings").select(
-        "vec_id", _qv("embedding").alias("_x")
-    )
-    section_df(
-        "ss13/dd15 assignment (kmeans_assign)",
-        "k-means assignment is MAP-ONLY: centroids ride the Arrow "
-        "kernel closure, no exchange anywhere — the property that "
-        "makes both the per-iteration fit pass and streaming "
-        "assignment embarrassingly parallel",
-        kmeans_assign(_embq, "_x", [[0] * 64, [1] * 64]),
-        [
-            ("Kernel (Arrow)", r"ArrowEvalPython[^\n]{0,60}"),
-            ("Exchanges", r"Exchange[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "dd15_semdedup",
-        "SemDeDup within-cluster pairs: per-row centroid cosine before "
-        "the join, pair join is an equi-join on cluster (never "
-        "all-pairs), one distinct on the marked set",
-        [
-            ("Cluster join keys", r"hashpartitioning\(cluster[^)]{0,40}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    section(
-        "ss14_mutual_knn_graph",
-        "mutual kNN: ONE label-blocked candidate join (both edge "
-        "orientations exploded from the same join row), "
-        "WindowGroupLimit prunes to k map-side before the ranking "
-        "exchange, mutuality is a pair-count groupBy (no semi-join "
-        "re-deriving the ranked subtree)",
-        [
-            ("Map-side top-k prune", r"WindowGroupLimit[^\n]{0,60}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-            ("Mutuality agg", r"partial_count\([^)]{0,20}"),
-        ],
-    )
-
-    section(
-        "ss15_ivf_kmeans_ann",
-        "deterministic IVF: map-only cell assignment + per-row probe "
-        "selection, candidates on a cell equi-join (each query touches "
-        "~n_probe/k of the corpus), exact rerank under one query "
-        "window",
-        [
-            ("Cell join keys", r"hashpartitioning\(cluster[^)]{0,40}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    section(
-        "tx19_classifier_filter",
-        "log-odds classifier: one token explode feeds vocab build and "
-        "per-doc counts (both map-side combined), score join is a "
-        "token equi-join — vocab never broadcast-required",
-        [
-            ("Partial combine", r"partial_(?:sum|count)\([^)]{0,30}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-        ],
-    )
-
-    section(
-        "dd16_d4_prune",
-        "D4 pruning: the SemDeDup cluster equi-join plus ONE "
-        "cluster-partitioned ranking window for the prototype quota — "
-        "survivor anti-join against the small mark set, no all-pairs "
-        "anywhere",
-        [
-            ("Cluster join keys", r"hashpartitioning\(cluster[^)]{0,40}"),
-            ("Prototype ranking", r"Window \[row_number\(\)[^\n]{0,70}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    from datapipeline_template_spark.operators.clustering import kmeans_fit
-    from datapipeline_template_spark.operators.similarity import mutual_knn_edges
-
-    _embf = _table(spark, sf, "embeddings").where(F.col("vec_id") < 500)
-    _cent8 = kmeans_fit(_embf, "vec_id", "embedding", k=8, n_iter=1)
-    _asg = kmeans_assign(
-        _embf.select("vec_id", "embedding", _qv("embedding").alias("_xq")),
-        "_xq",
-        _cent8,
-    ).select("vec_id", "embedding", "cluster")
-    section_df(
-        "ss14b blocked form (mutual_knn_edges on the cluster key)",
-        "the corpus-scale kNN-graph build: candidate join blocked by "
-        "the k-means cell (k ∝ N keeps Σ n_block² bounded) — equi-join "
-        "+ map-side WindowGroupLimit, never all-pairs (the ss14b "
-        "REGISTRY query also runs the deliberately-unblocked bounded "
-        "eval-slice truth, which is NOT the scale path)",
-        mutual_knn_edges(_asg, "vec_id", "embedding", k=3, block_col="cluster"),
-        [
-            ("Map-side top-k prune", r"WindowGroupLimit[^\n]{0,60}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    # tx20's registry query returns a driver-assembled merge table;
-    # the scale-critical plan is the per-round pair-count stage inside
-    # bpe_train — reproduce it exactly as the operator builds it.
-    _words = (
-        _table(spark, sf, "documents")
-        .select(
-            F.explode(
-                F.expr("regexp_extract_all(text, '[a-zA-Z]+', 0)")
-            ).alias("t")
-        )
-        .select(F.lower(F.col("t")).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .select(
-            F.concat(
-                F.lit(" "),
-                F.array_join(F.expr("regexp_extract_all(word, '[a-z]', 0)"), " "),
-                F.lit(" "),
-            ).alias("rep"),
-            "freq",
-        )
-    )
-    _syms = F.split(F.trim(F.col("rep")), " ")
-    _idx = F.when(
-        F.size(_syms) > 1, F.sequence(F.lit(1), F.size(_syms) - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    _pairs = (
-        _words.select(
-            F.explode(
-                F.transform(
-                    _idx,
-                    lambda j: F.struct(
-                        F.element_at(_syms, j).alias("x"),
-                        F.element_at(_syms, j + 1).alias("y"),
-                    ),
-                )
-            ).alias("p"),
-            "freq",
-        )
-        .groupBy("p.x", "p.y")
-        .agg(F.sum("freq").alias("cnt"))
-    )
-    section_df(
-        "tx20 merge round (bpe_train pair counting)",
-        "BPE learning round: word vocab is a one-shuffle distinct-word "
-        "aggregate; each round's adjacent-pair count map-side combines "
-        "per partition before ONE (x, y) exchange, and only the argmax "
-        "row reaches the driver — the vocab rewrite is a narrow "
-        "literal-replace map",
-        _pairs,
-        [
-            ("Vocab + pair partial combine", r"partial_(?:sum|count)\([^)]{0,30}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,60}"),
-        ],
-    )
-
-    from datapipeline_template_spark.operators.clustering import (
-        pq_adc_topk,
-        pq_encode,
-    )
-
-    _embp = _table(spark, sf, "embeddings")
-    _books = [[[0] * 8, [1] * 8] for _ in range(8)]
-    _codes = pq_encode(_embp, "vec_id", "embedding", _books, sub_dim=8)
-    section_df(
-        "ss20 encode stage (pq_encode)",
-        "product quantization's memory story: all m code kernels chain "
-        "inside ONE map stage — zero exchanges between the embedding "
-        "scan and the 32×-smaller codes; each pass is the Arrow-batched "
-        "assignment kernel",
-        _codes,
-        [
-            ("Arrow kernel passes", r"ArrowEvalPython[^\n]{0,40}"),
-            ("Exchanges (none expected)", r"Exchange [a-z]+"),
-        ],
-    )
-    section_df(
-        "ss20 ADC scoring (pq_adc_topk)",
-        "asymmetric-distance top-k: the per-query distance TABLES (the "
-        "only HOF work) are projected on the query side BEFORE the "
-        "candidate join, so each candidate costs m array lookups + adds "
-        "— the query×codes join is bounded-eval by contract (at corpus "
-        "scale IVF routing bounds candidates, PQ bounds bytes)",
-        pq_adc_topk(
-            _codes, _embp.limit(5), "vec_id", "embedding", _books,
-            sub_dim=8, k=3,
-        ),
-        [
-            ("Top-k ranking", r"Window \[row_number\(\)[^\n]{0,60}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"),
-        ],
-    )
-
-    section(
-        "ss21_ivfpq_recall",
-        "IVF-PQ composed: routed queries meet cell-tagged PQ codes on "
-        "a CLUSTER equi-join (each query scores ~n_probe/k of the "
-        "corpus as codes, not vectors) — the corpus-scale retrieval "
-        "shape; the only BNLJ-eligible joins are the eval-slice truth "
-        "hits",
-        [
-            ("Cell join keys", r"(?:hashpartitioning\(cluster|BroadcastHashJoin \[cluster)[^)\]]{0,40}"),
-            ("Top-k ranking", r"Window \[row_number\(\)[^\n]{0,60}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct)"),
-        ],
-    )
-
-    from datapipeline_template_spark.queries.text import _tx20b_vocab
-
-    section_df(
-        "tx20b byte vocab (shared tx20b/tx21b base)",
-        "byte-level BPE's word vocab: the byte-symbol rep aggregate "
-        "map-side combines per partition before a single word exchange "
-        "— the per-round merge learning then reuses tx20's pair-count "
-        "shape over this compact vocab",
-        _tx20b_vocab(spark, sf),
-        [
-            ("Partial combine", r"partial_(?:sum|count)\([^)]{0,30}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,60}"),
-        ],
-    )
-
-    section(
-        "pipe12_curation_funnel_full",
-        "the 7-stage funnel: one shared flag pass (prefix window + "
-        "classifier token equi-joins) left-joined with the corpus-level "
-        "MinHash-CC non-keeper set (ranking window over the clustered "
-        "subset only) and the SemDeDup mark set — no cartesian "
-        "products, final 1-row aggregate",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("Windows", r"Window \[row_number\(\)[^\n]{0,60}"),
-            ("Final partial agg", r"partial_count\([^)]{0,20}"),
-        ],
-    )
-
-    section(
-        "ss22_pq_rerank_recall",
-        "two-stage retrieval: the exact re-rank joins the nq·depth ADC "
-        "shortlist to raw vectors on their ids (equi-joins) and ranks "
-        "inside a per-query window — per-query-constant cost at any "
-        "corpus size; no CartesianProduct anywhere",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct)"),
-            ("Re-rank window", r"Window \[row_number\(\)[^\n]{0,60}"),
-        ],
-    )
-
-    section(
-        "dd17_duplicate_discount",
-        "soft dedup: the size window shuffles only pair-participating "
-        "docs on the component key; the singleton mass exits through "
-        "an id LEFT ANTI join with literal (1, 1.0) columns and never "
-        "touches that exchange",
-        [
-            ("Singleton anti-join", r"(?:SortMergeJoin|BroadcastHashJoin) [^\n]{0,60}LeftAnti"),
-            ("Component-window exchange", r"Exchange hashpartitioning\(_comp[^)]{0,40}"),
-        ],
-    )
-
-    section(
-        "tx22_source_overlap",
-        "source-overlap matrix: pairs are built by exploding each "
-        "shingle's sorted source set in-task (a hot shingle costs "
-        "|sources|², never corpus²) — no shingle self-join; the only "
-        "joins are two broadcast total attaches",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct)"),
-            ("Distinct + per-shingle aggs", r"Exchange hashpartitioning\([^)]{0,50}"),
-        ],
-    )
-
-    from datapipeline_template_spark.queries.similarity import _ss23_frames
-
-    _, _ss23_pre, _ = _ss23_frames(spark, sf)
-    section_df(
-        "ss23_filtered_ann (pre-filter strategy frame)",
-        "filtered vector search: the pre-filter predicate is pushed "
-        "into the parquet scan (EqualTo(label,3)) so matching rows "
-        "prune BEFORE the cell equi-join — query-time filtering inside "
-        "the frozen index, no rebuild, no post-hoc recall loss "
-        "(inspected on the lazy strategy frame; the registry query "
-        "checkpoints its result sets)",
-        _ss23_pre,
-        [
-            ("Predicate pushdown", r"PushedFilters: \[[^\]]*EqualTo\(label[^\]]*\]"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct)"),
-        ],
-    )
-
-    section(
-        "pk08_nosplit_packing",
-        "no-split shelf packing: ONE hash exchange on shard into one "
-        "Arrow-batched FlatMapGroupsInPandas — the inherently "
-        "sequential placement stays inside its shard, the parallel "
-        "grain at 100 TB",
-        [
-            ("Arrow group map", r"FlatMapGroupsInPandas[^\n]{0,60}"),
-            ("Single exchange", r"Exchange hashpartitioning\(shard[^)]{0,30}"),
-        ],
-    )
-
-    section(
-        "mm05_media_simhash_pairs",
-        "media near-dup: the Arrow byte-fingerprint pass runs once "
-        "(checkpointed — no Python node in the executed pair plan); "
-        "the quadratic stage is a blocked equi-join with XOR+popcount "
-        "in whole-stage codegen",
-        [
-            ("Pair join", r"(BroadcastHashJoin|SortMergeJoin)[^\n]{0,60}"),
-            ("Codegen popcount filter", r"bit_count[^\n]{0,60}"),
-        ],
-    )
-
-
-    section(
-        "tx23_surprisal_bands",
-        "CCNet-style perplexity banding as pure map-reduce: two "
-        "w-keyed partial aggregates + a broadcast 1-row total attach "
-        "+ one doc-keyed aggregate; banding is a projection against "
-        "PINNED thresholds — no Window/ntile in the plan (the tercile "
-        "measurement lives offline in test_parity)",
-        [
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]{0,40}\], functions=\[partial_[a-z_]+"),
-            ("Broadcast total attach", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,40}"),
-        ],
-    )
-
-    section(
-        "ss25_ivfsq_recall",
-        "IVF-SQ composition: coarse routing (ss21's fragment) + SQ8 "
-        "codes (ss24's) — candidate scoring is a CLUSTER equi-join, "
-        "codes joined by key, never a pair theta join",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct)"),
-            ("Cluster-keyed exchange", r"Exchange hashpartitioning\(cluster[^)]{0,30}"),
-        ],
-    )
-
-    from datapipeline_template_spark.operators.sketch import kmv_sketch_partial
-
-    section_df(
-        "kmv_sketch_partial (q43's scale form)",
-        "KMV distinct-count sketch, map-side combined: each Arrow batch "
-        "reduces locally to k minimum hashes per group (MapInPandas, "
-        "narrow), so the ONLY exchange carries k-long partial arrays — "
-        "never one row per distinct value (the Catalyst twin q43 uses "
-        "pays that dedup shuffle; equality of the two forms is "
-        "test-pinned)",
-        kmv_sketch_partial(
-            __import__(
-                "datapipeline_template_spark.catalog", fromlist=["table"]
-            ).table(spark, sf, "orders"),
-            "o_orderpriority",
-            "o_custkey",
-            k=64,
-        ),
-        [
-            ("Arrow local reduce", r"MapInPandas[^\n]{0,60}"),
-            ("Single merge exchange", r"Exchange hashpartitioning\(o_orderpriority[^)]{0,40}"),
-        ],
-    )
-
-    section(
-        "q44_kmv_set_ops",
-        "KMV theta-style set operations: every exchange is the sketch "
-        "build (yr / distinct-custkey keyed); the merge/θ/intersect "
-        "algebra runs on two 1-row sketch frames via broadcast "
-        "attaches — nothing outgrows the COUNT(DISTINCT) dedup",
-        [
-            ("Sketch-build exchanges", r"Exchange hashpartitioning\((yr|o_custkey)[^)]{0,40}"),
-            ("1-row attaches", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "ss26_sq_rerank_recall",
-        "SQ8 shortlist → exact re-rank (ss22's two-stage shape): one "
-        "code-distance pass ranked at max depth then rank-sliced; the "
-        "exact stage joins shortlist ids to raw vectors — equi-joins "
-        "and rank windows only, no cartesian, no global sort",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct)"),
-            ("Rank windows", r"row_number\(\)[^\n]{0,60}"),
-        ],
-    )
-
-    section(
-        "ss27_dim_truncation_recall",
-        "dimension-truncation recall: the ZERO-training encode (a "
-        "per-row slice — no stats agg, no fit anywhere in the plan); "
-        "retrieval is the bounded-eval broadcast pass + per-query rank "
-        "windows",
-        [
-            ("Truncation is a projection", r"slice\(_qv[^\n]{0,40}"),
-            ("Bounded-eval pass", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "tx25_dsir_selection",
-        "DSIR importance-ratio selection: tx23's map-reduce scoring "
-        "family (w-/doc-keyed partial aggregates, broadcast totals) + "
-        "the adaptive cut as a cumulative window over DISTINCT integer "
-        "means — mean_mb-keyed, domain-bounded, never a document sort",
-        [
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]{0,40}\], functions=\[partial_[a-z_]+"),
-            ("Cut window key", r"Exchange hashpartitioning\(mean_mb[^)]{0,30}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,40}"),
-        ],
-    )
-
-
-    section(
-        "q45_histogram_quantiles",
-        "mergeable log-histogram quantile sketch: one (flag, bin) "
-        "partial-agg count; the cumulative pick windows over BINS "
-        "(≤ ~540 per group, flag-partitioned) — never over values; "
-        "the exact-quantile rider is its own flag-keyed aggregate",
-        [
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]{0,40}\], functions=\[partial_[a-z_]+"),
-            ("Bin window key", r"Exchange hashpartitioning\(flag[^)]{0,30}"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|CartesianProduct)"),
-        ],
-    )
-
-    section(
-        "q47_cm_frequency_sketch",
-        "Count-Min grid: the depth-row explode partial-aggregates to "
-        "≤ depth·width cells before its single exchange; the estimate "
-        "side broadcasts the ≤ 8k-cell grid onto the 20 query keys — "
-        "no corpus-sized join anywhere",
-        [
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]{0,40}\], functions=\[partial_count[^\n]{0,30}"),
-            ("Grid broadcast", r"BroadcastHashJoin[^\n]{0,60}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,40}"),
-        ],
-    )
-
-    section(
-        "ss29_random_projection_recall",
-        "Rademacher projection recall: the encode is map-only literal-"
-        "array HOF per row (no stats pass, no fit, no join before the "
-        "projected vectors); retrieval is the bounded-eval broadcast "
-        "pass + per-query rank windows (the ss27 shape)",
-        [
-            ("Bounded-eval pass", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-            ("Rank windows", r"RunningWindowFunction|Window \[row_number"),
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|CartesianProduct)"),
-        ],
-    )
-
-    section(
-        "tx27b_bm25_dense_vocab",
-        "integer BM25 (dense-vocab volume harness): tf/df/dl partial-"
-        "aggregate off one token explode, the pruned idf joins the "
-        "postings, the bounded query-term side broadcasts — an "
-        "inverted-index equi-join, never a doc×doc product",
-        [
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]{0,40}\], functions=\[partial_count[^\n]{0,30}"),
-            ("Query side broadcast", r"BroadcastHashJoin[^\n]{0,60}"),
-            ("No cartesian corpus join", r"CartesianProduct"),
-        ],
-    )
-
-    section(
-        "w10_funnel_stages",
-        "ordered funnel as cumulative windows: both window passes AND "
-        "the per-user aggregate ride ONE user_id exchange (the join-"
-        "form oracle pays three)",
-        [
-            ("Single exchange", r"Exchange hashpartitioning\(user_id[^)]{0,40}"),
-            ("Running mins", r"min\(_click_cand[^\n]{0,40}|min\(CASE WHEN[^\n]{0,40}"),
-        ],
-    )
-
-
-    section(
-        "q48_kmv_rolling_distinct",
-        "rolling distinct by KMV merge: the 24-target window fanout is "
-        "explode + equi-semi-join on the hour index (never a range "
-        "BNLJ); only sketch rows and (hour,user) pairs refan, and the "
-        "merge is a bounded per-target aggregate of k-long arrays",
-        [
-            ("Equi fanout (no BNLJ)", r"BroadcastHashJoin[^\n]{0,60}"),
-            ("Sketch merge aggregate", r"HashAggregate\(keys=\[t#[^\]]{0,20}\][^\n]{0,60}"),
-            ("Exchanges", r"Exchange hashpartitioning\([^)]{0,40}"),
-        ],
-    )
-
-
-    section(
-        "tj05_nearest_click",
-        "nearest-event join: one union + one user-keyed sort serves "
-        "both directional carries (running last + first-over-"
-        "following) — never a theta join, no second exchange",
-        [
-            ("Single user exchange", r"Exchange hashpartitioning\(user_id[^)]{0,30}"),
-            ("Directional carries", r"(last\(_asof_payload[^\n]{0,40}|first\(_asof_payload[^\n]{0,40})"),
-        ],
-    )
-
-
-    section(
-        "ss32_tail_recall_histogram",
-        "per-query tail recall: ss24/ss25's exact retrieval chains with "
-        "one new reduction (per-query hit count + 0..k grid) - the "
-        "histograms are bounded aggregates over the 50-query set",
-        [
-            ("Rank windows", r"Window \[row_number"),
-            ("Grid left joins", r"BroadcastHashJoin[^\n]{0,50}LeftOuter[^\n]{0,20}"),
-        ],
-    )
-
-    section(
-        "ss34_tail_slo_nprobe_chooser",
-        "tail-SLO n_probe chooser: probe ranks computed once at max "
-        "n_probe, SQ distances once over the widest candidate set "
-        "(checkpointed); each operating point is then a rank filter + "
-        "per-query row_number window over the same bounded frame - "
-        "four windows, zero re-routing, zero re-scoring",
-        [
-            ("Per-point rank windows", r"Window \[row_number[^\n]{0,60}"),
-            ("Shared checkpoint scans", r"Scan ExistingRDD[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "dd20_dedup_overlap_matrix",
-        "dedup-method overlap matrix: six marked-set derivations "
-        "(each its method's documented plan) union into one "
-        "(method, doc) frame; the matrix is a doc_id-keyed self-join "
-        "bounded by 15 method pairs plus literal-grid broadcast "
-        "joins - no cartesian product anywhere",
-        [
-            ("Matrix self-join", r"SortMergeJoin[^\n]{0,60}"),
-            ("Grid broadcasts", r"BroadcastHashJoin[^\n]{0,50}"),
-        ],
-    )
-
-    section(
-        "q49_cm_join_cardinality",
-        "CM inner-product join-size estimation: grids checkpoint once "
-        "per side (the map-side combine is inside the checkpoint; see "
-        "q47's section), narrower widths fold from the widest, and "
-        "the final plan joins grid-sized ExistingRDD scans - the "
-        "exact rider is the only data-sized join and exists only for "
-        "calibration",
-        [
-            ("Grid scans (checkpointed)", r"Scan ExistingRDD\[r#[^\]]*"),
-            ("1-row stat attaches", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "pk10_weighted_sample",
-        "Efraimidis-Spirakis weighted sample: race key is a pure "
-        "row-local projection (hash + millibit log + integer div), "
-        "ONE per-source rank window is the only exchange",
-        [
-            ("Single stratum window", r"Window \[row_number[^\n]{0,80}"),
-            ("Stratum exchange", r"Exchange hashpartitioning\(source[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "dd21_prefix_filter_join",
-        "prefix-filtered similarity join: the prefix frame "
-        "materializes ONCE (both self-join sides read the checkpoint), "
-        "candidates ride an equi-join on the rare prefix element, "
-        "verification joins candidate ids only - no cartesian product",
-        [
-            ("Prefix scan (checkpointed)", r"Scan ExistingRDD\[_id[^\]]*\]"),
-            ("Candidate equi-join", r"(SortMergeJoin|BroadcastHashJoin)[^\n]{0,60}"),
-        ],
-    )
-
-    section(
-        "ss36_pagerank_centrality",
-        "integer PageRank: rounds are localCheckpoint-bounded (the CC "
-        "lesson - the final plan joins two bounded scans and ranks "
-        "once; five rounds of join+agg never stack into one tree)",
-        [
-            ("Checkpointed rank vector", r"Scan ExistingRDD\[node[^\]]*"),
-            ("Top-n window", r"Window \[row_number[^\n]{0,60}"),
-        ],
-    )
-
-    section(
-        "q50_activity_trend",
-        "grouped integer OLS slope: two map-side-combined keyed "
-        "aggregations (hour pre-agg, five-sums agg) plus a 1-row "
-        "rebase broadcast - no window, no data-sized sort",
-        [
-            ("Partial aggregation", r"HashAggregate\(keys=\[[^\]]*\], functions=\[partial_[a-z_]+"),
-            ("1-row rebase attach", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "ss37_centrality_weighted_sample",
-        "centrality-weighted sampling: the checkpointed PageRank "
-        "vector joins labels once, then ONE per-label rank window "
-        "races the winners - nothing new shuffles beyond the window",
-        [
-            ("Checkpointed walk", r"Scan ExistingRDD\[node[^\]]*"),
-            ("Label window", r"Window \[row_number[^\n]{0,80}"),
-        ],
-    )
-
-    section(
-        "tx31_mad_length_gate",
-        "median/MAD calibration: two group-partitioned rank windows "
-        "over a 3-column projection with a broadcast of the per-group "
-        "medians between them - the exact-order-statistic price",
-        [
-            ("Rank windows", r"Window \[row_number[^\n]{0,60}"),
-            ("Median broadcast", r"BroadcastHashJoin[^\n]{0,50}"),
-        ],
-    )
-
-    section(
-        "pipe18_budget_manifest",
-        "token-budget manifest: pipe15's decon chain + ONE bounded "
-        "rank window (the per-source race) + a doc_id semi-join; the "
-        "tokenizer/packing then read the budgeted kept set",
-        [
-            ("Race window", r"Window \[row_number[^\n]{0,80}"),
-            ("Budget semi-join", r"(BroadcastHashJoin|SortMergeJoin)[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "dd22_prefix_order_drift",
-        "prefix-order drift audit: one shared shingle checkpoint "
-        "feeds both order variants; each candidate set is a "
-        "checkpointed equi-join, verification touches candidate ids",
-        [
-            ("Shared shingle scan", r"Scan ExistingRDD\[doc_id[^\]]*"),
-            ("1-row count attaches", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "q51_kmv_agg_size",
-        "KMV-priced aggregation output: one checkpointed distinct-hash "
-        "rank chain serves both k estimators; the exact rider is the "
-        "only data-sized distinct and exists for calibration",
-        [
-            ("Rank chain (checkpointed)", r"Scan ExistingRDD\[h#[^\]]*"),
-            ("1-row stat attaches", r"BroadcastNestedLoopJoin[^\n]{0,40}"),
-        ],
-    )
-
-    section(
-        "tx32_zipf_exponent",
-        "Zipf-exponent fit: token explode + map-side-combined "
-        "(source, token) count, ONE rank window over the vocab-sized "
-        "frequency table (never the occurrence stream), five-sums OLS",
-        [
-            ("Vocab-sized window", r"Window \[row_number[^\n]{0,80}"),
-            ("Partial freq count", r"HashAggregate\(keys=\[source[^\]]*\], functions=\[partial_count"),
-        ],
-    )
-
-    section(
-        "ss33_rrpq_recall",
-        "RR-PQ: the signed permutation is inlined literals (map-only "
-        "array projection, no join/exchange before the rotated "
-        "vectors); downstream is ss20's exact PQ plan on the rotated "
-        "column",
-        [
-            ("Rotation is a projection", r"element_at\(embedding[^\n]{0,40}"),
-            ("ADC lookups", r"(BroadcastHashJoin|SortMergeJoin)"),
-        ],
-    )
-
-    # ---- round 11 ----------------------------------------------------
-
-    section(
-        "q52_bucketed_join",
-        "bucketed-storage fact-fact join: both sides read pre-bucketed "
-        "tables, the sort-merge join runs with ZERO Exchange below it "
-        "(the only exchanges belong to the downstream aggregate/sort)",
-        [
-            ("Bucketed scans", r"Bucketed: true[^\n]{0,40}"),
-            ("Join", r"SortMergeJoin[^\n]{0,60}"),
-            ("Exchanges (agg/sort only)", r"Exchange (?:hash|range)partitioning\([^)]{0,50}"),
-        ],
-    )
-    section(
-        "pipe19_salted_keep_latest",
-        "salted two-phase keep-latest: TWO keyed hash aggregates (salt "
-        "grain then key grain), both with map-side partial max_by, no "
-        "window — largest task bounded at |hot key|/n_salts",
-        [
-            ("Partial max_by", r"partial_max_by\([^)]{0,60}"),
-            ("Two exchanges", r"Exchange hashpartitioning\([^)]{0,60}"),
-        ],
-    )
-    section(
-        "q53_join_strategy_chooser",
-        "sketch-driven join chooser: no candidate join ever executes — "
-        "the only hash joins are grid-sized CM inner products; "
-        "decisions derive from counts + estimates",
-        [
-            ("Joins (grid-sized only)", r"(BroadcastHashJoin|SortMergeJoin)"),
-            ("Grid aggregation", r"HashAggregate\(keys=\[r[^\]]{0,30}\], functions=\[partial_count"),
-        ],
-    )
-    section(
-        "tx33_heaps_exponent",
-        "Heaps-law fit: token explode feeds two map-side-combined "
-        "aggregations; cumulative windows run over DOC-sized frames "
-        "(checkpointed curve), five-sums OLS with 3-step long division",
-        [
-            ("Post-curve joins", r"(BroadcastHashJoin|SortMergeJoin)"),
-            ("Keyed aggregates", r"HashAggregate\(keys=\[source[^\]]{0,30}"),
-        ],
-    )
-    section(
-        "mm06_media_phash_pairs",
-        "perceptual pHash near-dup: Arrow fingerprint pass checkpointed "
-        "(no Python node in the pair plan), banded equi-join on 16-bit "
-        "hash segments, XOR+popcount verify in codegen",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("Popcount verify", r"bit_count\([^\n]{0,50}"),
-        ],
-    )
-    section(
-        "mm07_media_chunk_dedup",
-        "CDC-chunk media near-dup: per-doc chunking fold (map-only), "
-        "then dd21's prefix-filter join over chunk-hash sets — "
-        "rare-chunk equi-join, verify on candidates only",
-        [
-            ("Join strategies", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-            ("Prefix rank window", r"Window \[row_number[^\n]{0,70}"),
-        ],
-    )
-    section(
-        "w12_retention_sketched",
-        "sketched retention triangle: cohort/day KMV sketches are rank "
-        "windows over distinct (group, hash) rows; cells join "
-        "day-count-sized SKETCH frames (broadcast), never user rows",
-        [
-            ("Sketch windows", r"Window \[row_number[^\n]{0,70}"),
-            ("Cell join", r"(BroadcastNestedLoopJoin|BroadcastHashJoin)[^\n]{0,40}"),
-        ],
-    )
-    section(
-        "dd25_classifier_survivors",
-        "classifier-quality survivors: cluster labels and scores meet "
-        "in ONE keyed aggregation (max_by twice, partial map-side) — "
-        "no window over the corpus",
-        [
-            ("Partial max_by", r"partial_max_by\([^)]{0,60}"),
-            ("Joins", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-        ],
-    )
-    section(
-        "q55_width_sized_chooser",
-        "KMV-sized CM width chooser: per side one KMV partial pass + "
-        "one super-width grid (map-side combined), all candidate "
-        "widths folded from it in one bounded aggregation, "
-        "chosen-width row by 1-row join — no candidate join executes",
-        [
-            ("Grid fold aggregates", r"HashAggregate\(keys=\[width[^\]]{0,40}"),
-            ("No raw-stream SMJ", r"SortMergeJoin"),
-            ("KMV partials", r"MapInPandas[^\n]{0,40}"),
-        ],
-    )
-    section(
-        "ss38_graph_ann_beam",
-        "graph-walk ANN: beam rounds are beam-sized edge joins + "
-        "anti-join to score only NEW nodes + per-query rank windows — "
-        "never a corpus scan per round; edges/entries checkpointed",
-        [
-            ("Beam rank windows", r"Window \[row_number[^\n]{0,70}"),
-            ("Round joins", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-        ],
-    )
-    section(
-        "pipe21_config_bucketed_silver",
-        "config-driven silver (salted dedup + bucketed write): silver "
-        "scan is the bucketed table — output reports hash partitioning "
-        "on the bucket key; dedup ran as two keyed aggregations at "
-        "write time",
-        [
-            ("Bucketed scan", r"Scan[^\n]{0,80}silver_clicks[^\n]{0,40}"),
-            ("SelectedBucketsCount", r"SelectedBucketsCount[^\n]{0,40}"),
-        ],
-    )
-    section(
-        "pipe22_e2e_training_pipeline",
-        "end-to-end pipeline: gates + race budget over the raw corpus, "
-        "tokenizer/packing read the checkpointed silver-joined kept "
-        "set; packing is the per-shard window shape",
-        [
-            ("Packing windows", r"Window \[[^\n]{0,70}"),
-            ("Joins", r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)"),
-        ],
-    )
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+GUARDS = Path(__file__).resolve().parents[1] / "tests" / "test_plans.py"
+PACKAGE = "datapipeline_template_spark."
+
+HEADER = """\
+# PLANS — physical-plan claims, one section per plan guard
+
+Generated from `tests/test_plans.py` by `python tools/gen_plans.py > PLANS.md`;
+do not edit by hand. Each claim is asserted by its guard on the sf0.001
+plan: the default suite runs the default guards, `pytest -m slow` the
+slow ones. To read a registered query's plan at any scale:
+`python -m datapipeline_template_spark explain <name> --sf-dir <dir> --mode formatted`.
+"""
+
+
+def _strings(nodes) -> list[tuple[int, int, str]]:
+    return [(n.lineno, n.col_offset, n.value) for n in nodes
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)]
+
+
+def _section(fn: ast.FunctionDef) -> str:
+    found, calls = [], []
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_plan":
+            found += _strings(node.args[1:])
+        elif isinstance(node, ast.Subscript) and getattr(node.value, "id", None) == "REGISTRY":
+            found += _strings([node.slice])
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PACKAGE):
+            module = node.module[len(PACKAGE):]
+            calls += [(node.lineno, f"{module}.{a.name}") for a in node.names
+                      if not a.name.lstrip("_").isupper()]  # skip constants
+    queries = dict.fromkeys(value for *_, value in sorted(found))
+    slow = any(getattr(d, "attr", None) == "slow" for d in fn.decorator_list)
+    lines = [f"## {fn.name}", ""]
+    if queries:
+        lines.append("- **Plans:** " + ", ".join(f"`{q}`" for q in queries))
+    if calls:
+        lines.append("- **Calls:** " + ", ".join(f"`{c}`" for _, c in sorted(calls)))
+    claim = ast.get_docstring(fn)
+    if not claim:
+        raise SystemExit(f"{fn.name}: a plan guard needs a docstring that states its claim")
+    lines += [f"- **Suite:** {'slow' if slow else 'default'}", "", claim, ""]
+    return "\n".join(lines)
+
+
+def render() -> str:
+    tree = ast.parse(GUARDS.read_text(), filename=str(GUARDS))
+    guards = [n for n in tree.body if isinstance(n, ast.FunctionDef)
+              and n.name.startswith("test_") and "spark" in [a.arg for a in n.args.args]]
+    return "\n".join([HEADER] + [_section(fn) for fn in guards])
 
 
 if __name__ == "__main__":
-    main()
+    print(render(), end="")
